@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   * leak across timed queries makes per-query numbers a function of RUN
   * ORDER — knn_classify "regressed" 3.2× round-over-round purely because
   * a different query had warmed its cache first. So every recorded
-  * number here is COLD: all graft caches are dropped before each timed
-  * rep, and each query pays its own shared-state build. The warm number
+  * number here is COLD: `PersistedCache.clearAll()` drops every graft
+  * cache and engine materialization before each timed rep, and each
+  * query pays its own shared-state build. The warm number
   * (caches left standing) is reported alongside in "warm" — the
   * steady-state a real session sees — so both views stay visible and
   * neither depends on ordering.
@@ -32,16 +33,6 @@ object Bench {
     "c01_dedup_exact",    // normalized-text dedup — 0.30 s baseline
     "d01_window_tumbling", // 1-h tumbling window — 0.87 s baseline
   )
-
-  /** Drop every graft session cache — the cold-rep reset. */
-  private def clearAllCaches(): Unit = {
-    ops.Knn.clearCache()
-    ops.Ann.clearCache()
-    ops.Nsw.clearCache()
-    ops.Graph.clearCache()
-    ops.TextOps.clearCache()
-    ops.Quality.clearCache()
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -127,7 +118,7 @@ object Bench {
       // burst now hits neighbors of both kinds alike. The warm rep still
       // sees caches standing: its preceding cold rep just built them.
       val reps = (1 to 5).map { _ =>
-        clearAllCaches()
+        PersistedCache.clearAll()
         val c = timeOnce(name)
         val w = timeOnce(name)
         (c, w)
@@ -154,7 +145,7 @@ object Bench {
     var allIdx = 0
     def measureOnce(): Seq[(String, Double)] = names.flatMap { name =>
       if (all) {
-        clearAllCaches()
+        PersistedCache.clearAll()
         val r = timeOnce(name).map(name -> _)
         allIdx += 1
         if (allIdx % 8 == 0) calSeries ::= calProbe()

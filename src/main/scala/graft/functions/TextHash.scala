@@ -118,6 +118,7 @@ object TextHash extends Serializable {
     * distinct, once for the id mint). The ASCII fast path slides a
     * k-byte FNV window over the UTF-8 bytes with zero per-position
     * allocation; multibyte text falls back to per-position substrings
+    * of k CODE POINTS, as Spark's `length`/`substring` count them
     * (identical ids: FNV over each shingle's UTF-8 bytes — the fixtures
     * are ASCII, spec-asserted). Docs shorter than k emit no shingles
     * (the oracle's `range()` semantics; no fixture doc is that short —
@@ -128,7 +129,16 @@ object TextHash extends Serializable {
     if (text == null || text.length < k) return Array.empty[Long]
     val bytes = text.getBytes("UTF-8")
     val ascii = bytes.length == text.length
-    val m = text.length - k + 1
+    // multibyte text: the UTF-16 offset of every code point, plus the end
+    val at = if (ascii) null else {
+      val n = text.codePointCount(0, text.length)
+      val a = new Array[Int](n + 1)
+      var c = 0
+      while (c < n) { a(c + 1) = text.offsetByCodePoints(a(c), 1); c += 1 }
+      a
+    }
+    val m = (if (ascii) text.length else at.length - 1) - k + 1
+    if (m <= 0) return Array.empty[Long]
     val hs = new Array[Long](m)
     var i = 0
     if (ascii) {
@@ -140,7 +150,7 @@ object TextHash extends Serializable {
         i += 1
       }
     } else {
-      while (i < m) { hs(i) = fnv1a(text.substring(i, i + k), 0); i += 1 }
+      while (i < m) { hs(i) = fnv1a(text.substring(at(i), at(i + k)), 0); i += 1 }
     }
     java.util.Arrays.sort(hs)
     var w = 0

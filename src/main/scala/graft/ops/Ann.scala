@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.PersistedCache.Materialize
 import graft.Tables
 import graft.functions.VectorExpressions
 
@@ -72,7 +73,7 @@ object Ann {
   // index on a cluster. Fixture files are immutable for a session.
   // Keys carry the centroid count so the (C, P) tuning sweep
   // (tools.AnnTune) can hold several candidate indexes side by side.
-  private val assignCache = new graft.PersistedCache
+  private val assignCache = new graft.PersistedCache(this)
 
   def assignments(s: SparkSession, d: String): DataFrame =
     assignmentsAt(s, d, C)
@@ -102,7 +103,7 @@ object Ann {
 
   /** Drop cached per-session index state (tests / long-lived sessions);
     * sessions also self-evict on application end. */
-  def clearCache(): Unit = assignCache.clear()
+  def clearCache(): Unit = graft.PersistedCache.clear(this)
 
   /** (vec_id, cent_id) inverted-list assignment under `cents`; `rows`
     * optionally restricts WHICH vectors are assigned (the incremental-
@@ -250,7 +251,7 @@ object Ann {
       !s.conf.getOption(IterativeCheckpointConf).contains("false")
     (1 to LloydIters).foldLeft(seeds) { (cs, _) =>
       val next = refineOnce(s, e, cs)
-      if (barrier) next.localCheckpoint(true) else next
+      if (barrier) next.checkpointed else next
     }
   }
 

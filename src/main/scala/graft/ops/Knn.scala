@@ -73,13 +73,13 @@ object Knn {
   // sfDirs the harness touches) and assume the dataset files are
   // immutable for the session's lifetime — true for the read-only
   // /root/testdata fixtures.
-  private val topkCache = new graft.PersistedCache
+  private val topkCache = new graft.PersistedCache(this)
   private def topkRankedShared(s: SparkSession, d: String): DataFrame =
     topkCache.getOrBuild(s, d)(topkRanked(s, d))
 
   /** Drop cached per-session state (tests / long-lived sessions);
     * sessions also self-evict on application end. */
-  def clearCache(): Unit = topkCache.clear()
+  def clearCache(): Unit = graft.PersistedCache.clear(this)
 
   def knnTopk(s: SparkSession, d: String): DataFrame =
     topkRankedShared(s, d)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.PersistedCache.Materialize
 import graft.Tables
 import graft.functions.VectorExpressions
 
@@ -384,8 +385,8 @@ object Nsw {
     * Lloyd's-iteration discipline). Each round is O(n·(2M)²). */
   val DescentRounds = 2
 
-  private val cache = new graft.PersistedCache
-  def clearCache(): Unit = cache.clear()
+  private val cache = new graft.PersistedCache(this)
+  def clearCache(): Unit = graft.PersistedCache.clear(this)
 
   /** When "false", [[bestM]]'s embedding lookups join by key-partitioned
     * shuffle-hash instead of broadcast — the at-scale branch for
@@ -485,7 +486,7 @@ object Nsw {
         val hp = Ann.hierProbesOf(s, d, seedC, coarseCFor(seedC), PAdj,
             PAdj, qWhere = qW)
           .select(col("qid"), col("pos"), col("cent_id"))
-          .localCheckpoint(true)
+          .checkpointed
         (hp.select(col("qid").as("u"), col("cent_id")),
           hp.where(col("pos") === 0)
             .select(col("cent_id"), col("qid").as("v")))
@@ -641,9 +642,9 @@ object Nsw {
       s"$d#nswAdj@$seedC#D$rounds" + baseN.map(c => s"#b$c").getOrElse("")) {
       withBuildSqlConfs(s) {
         val g0 = bestM(s, d, seedCandidates(s, d, seedC, baseN))
-          .localCheckpoint(true)
+          .checkpointed
         (1 to rounds).foldLeft(g0)((g, _) =>
-          descend(s, d, g).localCheckpoint(true))
+          descend(s, d, g).checkpointed)
       }
     }
   }
@@ -911,7 +912,7 @@ object Nsw {
       !s.conf.getOption(Ann.IterativeCheckpointConf).contains("false")
     val beamH = (1 to hops).foldLeft(beam0) { (bm, _) =>
       val next = hop(s, d, bm, b, far, adjOverride)
-      if (barrier) next.localCheckpoint(true) else next
+      if (barrier) next.checkpointed else next
     }
     rank(s, d, beamH).where(col("rn") <= K)
       .select(col("qid"), col("rn").as("rnk"), col("cand").as("cid"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.PersistedCache.Materialize
 import graft.Tables
 
 /** One packed document: its token count plus the training sequence
@@ -348,7 +349,7 @@ object Pipeline {
     val mx = cand0.agg(max(col("score")).as("mx"))
     val cand = cand0.crossJoin(broadcast(mx))
       .select(col("doc_id"), expr("(1000 * score) DIV mx").as("rel_pm"))
-      .localCheckpoint()
+      .checkpointed
     val tfd = Tables.documents(s, d)
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("term"))
@@ -362,7 +363,7 @@ object Pipeline {
       .join(sz.select(col("doc_id").as("b_id"), col("n").as("nb")), "b_id")
       .select(col("a_id"), col("b_id"),
         expr("(1000 * inter) DIV (na + nb - inter)").as("sim_pm"))
-      .localCheckpoint()
+      .checkpointed
     var sel = cand.limit(0).select(lit(0L).as("sel_rank"), col("doc_id"),
       col("rel_pm"), lit(0L).as("max_sim_pm"), lit(0L).as("mmr_score"))
     for (k <- 1 to MmrK) {
@@ -379,7 +380,7 @@ object Pipeline {
         .orderBy(col("mmr_score").desc, col("doc_id").asc).limit(1)
         .select(lit(k.toLong).as("sel_rank"), col("doc_id"),
           col("rel_pm"), col("max_sim_pm"), col("mmr_score"))
-      sel = sel.unionAll(pick).localCheckpoint()
+      sel = sel.unionAll(pick).checkpointed
     }
     sel.orderBy(col("sel_rank"))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.PersistedCache.Materialize
+
 /** Range-partitioned two-pass prefix sum (r18, VERDICT r17 item 5).
   *
   * `Window.orderBy(...)` with no partitionBy moves EVERY row to one
@@ -22,6 +24,11 @@ import org.apache.spark.sql.functions._
   * this serves satisfy that by construction — they are groupBy outputs
   * keyed by the sort key), so ties can never straddle a partition
   * boundary and the local order is total.
+  *
+  * The windowed pass is materialized once and both passes read it: the
+  * range boundaries come from sampling, so two executions of the range
+  * exchange (exchange reuse off) could disagree on which partition a
+  * row is in, and the offsets would no longer match the local sums.
   */
 object PrefixSum {
   /** Append `outCol` = running sum of `valCol` over rows strictly before
@@ -37,10 +44,11 @@ object PrefixSum {
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = sorted
       .withColumn("__local", coalesce(sum(col(valCol)).over(w), lit(0L)))
+      .checkpointed
     // per-partition totals → offsets: sum of totals of strictly earlier
     // partitions. #partitions rows, so the triangular self-join is tiny
     // and avoids re-introducing a global (single-partition) window.
-    val tot = sorted.groupBy(col("__pid")).agg(sum(col(valCol)).as("__tot"))
+    val tot = local.groupBy(col("__pid")).agg(sum(col(valCol)).as("__tot"))
     val off = tot.as("a")
       .join(tot.as("b"), col("b.__pid") < col("a.__pid"), "left")
       .groupBy(col("a.__pid").as("__pid"))

@@ -362,10 +362,10 @@ object Quality {
     * build and the join probe side, and Spark does not reuse aliased
     * subtrees (the cdcCache/shingleIndex lesson) — uncached, the events
     * scan + hourly aggregate ran twice per query. */
-  private val hourlyCache = new graft.PersistedCache
+  private val hourlyCache = new graft.PersistedCache(this)
 
-  /** Drop cached Quality state — wired into the bench's cold-rep reset. */
-  def clearCache(): Unit = hourlyCache.clear()
+  /** Drop cached Quality state (tests / long-lived sessions). */
+  def clearCache(): Unit = graft.PersistedCache.clear(this)
 
   def seasonalOutliers(s: SparkSession, d: String): DataFrame = {
     val hourly = hourlyCache.getOrBuild(s, s"hourly:$d") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.PersistedCache.Materialize
 import graft.Tables
 import graft.functions.HashExpressions
 
@@ -414,7 +415,7 @@ object Sampling {
     var sel = emb.join(broadcast(seed), col("vec_id") === col("svid"))
       .select(lit(1L).as("sel_rank"), col("vec_id"), col("embedding"),
         lit(0.0).as("maxmin_dist"))
-      .localCheckpoint()
+      .checkpointed
     for (r <- 2 to KcenterK) {
       val cents = sel.select(col("embedding").as("cvec"))
       val dmin = Tables.repartitioned(emb, s)
@@ -430,7 +431,7 @@ object Sampling {
       val pick = emb.join(broadcast(pickId), Seq("vec_id"))
         .select(lit(r.toLong).as("sel_rank"), col("vec_id"),
           col("embedding"), col("dmin").as("maxmin_dist"))
-      sel = sel.unionAll(pick).localCheckpoint()
+      sel = sel.unionAll(pick).checkpointed
     }
     sel.select(col("sel_rank"), col("vec_id"),
       round(col("maxmin_dist"), 6).as("maxmin_dist"))
@@ -468,7 +469,7 @@ object Sampling {
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n"))
       .withColumn("w", lit(1000000L))
-      .localCheckpoint()
+      .checkpointed
     val tot = cells.agg(sum(col("n")).as("ntot"),
       countDistinct(col("lang")).as("nl"),
       countDistinct(col("source")).as("ns"))
@@ -477,12 +478,12 @@ object Sampling {
       cells = cells.join(broadcast(lm), "lang").crossJoin(broadcast(tot))
         .select(col("lang"), col("source"), col("n"),
           expr("w * ((ntot * 1000000) DIV nl) DIV m").as("w"))
-        .localCheckpoint()
+        .checkpointed
       val sm = cells.groupBy(col("source")).agg(sum(col("n") * col("w")).as("m"))
       cells = cells.join(broadcast(sm), "source").crossJoin(broadcast(tot))
         .select(col("lang"), col("source"), col("n"),
           expr("w * ((ntot * 1000000) DIV ns) DIV m").as("w"))
-        .localCheckpoint()
+        .checkpointed
     }
     cells.select(col("lang"), col("source"), col("n").as("n_docs"),
       col("w").as("weight_ppm"))

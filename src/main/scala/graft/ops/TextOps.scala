@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.PersistedCache.Materialize
 import graft.Tables
 import graft.functions.SketchExpressions
 
@@ -128,15 +129,10 @@ object TextOps {
     * vocabulary outgrows a broadcast (sf1's ~2M distinct shingles).
     * Same rows either way (tools.C17Prof A/Bs the cost). */
   val DfBroadcastConf = "spark.graft.c17.dfBroadcast"
-  private val shingleCache = new graft.PersistedCache
+  private val shingleCache = new graft.PersistedCache(this)
 
-  /** Drop cached shingle-index state (tests / long-lived sessions). */
-  def clearShingleCache(): Unit = shingleCache.clear()
-
-  /** Drop ALL cached TextOps state (shingle index + LSH band table) —
-    * the cache-honest bench clears this before every cold rep. */
-  def clearCache(): Unit =
-    { shingleCache.clear(); lshCache.clear(); lmCache.clear(); cdcCache.clear() }
+  /** Drop every cached TextOps state (tests / long-lived sessions). */
+  def clearCache(): Unit = graft.PersistedCache.clear(this)
 
   /** The shingle INDEX: one posting row per (doc, distinct 8-char
     * shingle), annotated with document frequency, set size and the
@@ -411,7 +407,7 @@ object TextOps {
   /** Weighted near-dup threshold (c35). */
   val CosTau = 0.9
 
-  private val tfidfCache = new graft.PersistedCache
+  private val tfidfCache = new graft.PersistedCache(this)
 
   /** C-near-dup tier 6: TF-IDF-weighted cosine similarity — the weighted
     * companion to c02's set-Jaccard: two docs that share RARE terms are
@@ -491,7 +487,7 @@ object TextOps {
   /** The (doc_id, band, bucket) table is the expensive part of every
     * MinHash query (vocab × 32 hashes); c10, c30 and c31 share it
     * through the session cache, like Knn's ranked-neighbor set. */
-  private val lshCache = new graft.PersistedCache
+  private val lshCache = new graft.PersistedCache(this)
 
   private def lshBandTable(s: SparkSession, d: String): DataFrame =
     lshCache.getOrBuild(s, s"lsh_bands:$d") {
@@ -570,7 +566,7 @@ object TextOps {
       .orderBy(col("doc_id"))
       // materialize: the band table is cache-owned and stays persisted
       // for the sibling queries; `lab` is already checkpointed
-      .localCheckpoint(true)
+      .checkpointed
   }
 
   /** c31: the deduplicated corpus — the operator a user actually runs:
@@ -898,7 +894,7 @@ object TextOps {
       // gh) stream once; everything downstream reuses it. On a cluster
       // this is the "hash once, reuse the postings" shape a real span
       // index build takes anyway.
-      .localCheckpoint(true)
+      .checkpointed
     val rare = grams.groupBy(col("gh"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .where(col("df").between(2, SpanMaxDf))
@@ -1308,7 +1304,7 @@ object TextOps {
     * doc-frequency build and the per-doc join-back, and Spark does not
     * reuse aliased subtrees (the shingleIndex lesson) — uncached, the
     * explode+window+aggregate ran twice per query. */
-  private val cdcCache = new graft.PersistedCache
+  private val cdcCache = new graft.PersistedCache(this)
 
   /** c36: content-defined chunk dedup — the ALIGNMENT-ROBUST sub-document
     * tier (Lee et al.'s "Deduplicating Training Data" finds repeated
@@ -1377,7 +1373,7 @@ object TextOps {
   private val LmTailNano = 32600000L
 
   /** Session cache for c33's exploded bigram stream (see lmScore). */
-  private val lmCache = new graft.PersistedCache
+  private val lmCache = new graft.PersistedCache(this)
 
   /** c33: bigram language-model quality score — the CCNet/RedPajama
     * perplexity-filter shape: score every document by how predictable
@@ -1457,7 +1453,7 @@ object TextOps {
   val DsirTargetLang = "en"
 
   /** Session cache for c46's hashed token stream (three consumers). */
-  private val dsirCache = new graft.PersistedCache
+  private val dsirCache = new graft.PersistedCache(this)
 
   /** c46: hashed-n-gram importance weights (the DSIR shape — Xie et al.
     * 2023): score every out-of-target document by how much its token
@@ -1554,7 +1550,7 @@ object TextOps {
         coalesce(sum(col("isstop")).over(wP), lit(0L)))
       .where(col("isstop").isNull)
       .select(col("doc_id"), col("pid"), col("pos"), col("w"))
-      .localCheckpoint()
+      .checkpointed
     val plen = cand.groupBy(col("doc_id"), col("pid"))
       .agg(count(lit(1)).as("plen"))
     val wsc = cand.join(plen, Seq("doc_id", "pid"))

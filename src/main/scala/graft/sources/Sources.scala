@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.PersistedCache.Materialize
 import graft.Tables
 
 /** Non-parquet source formats as DECLARED, oracle-checked queries
@@ -40,7 +41,7 @@ object Sources {
     * its declared ordering re-applied (the d33 cleanup discipline). */
   private def finish(s: SparkSession, out: DataFrame, dir: String,
       order: Seq[String]): DataFrame = {
-    val res = out.localCheckpoint(true)
+    val res = out.checkpointed
       .orderBy(order.map(col): _*)
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)

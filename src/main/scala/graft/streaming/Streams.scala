@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
+import graft.PersistedCache.Materialize
+
 /** Structured Streaming twins of the batch event queries (SURVEY.md
   * §2.D). The oracle harness is batch-only, so these are capability
   * demos driven by StreamingSpec: the same `events` parquet is replayed
@@ -549,7 +551,7 @@ object Streams {
     // self-contained and leaves nothing behind (the sort is re-applied
     // on the checkpointed blocks so the declared ordering is plan-level,
     // not an accident of block layout)
-    val out = result.localCheckpoint(true).orderBy(col("user_id"))
+    val out = result.checkpointed.orderBy(col("user_id"))
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     out
   }
@@ -724,7 +726,7 @@ object Streams {
       .crossJoin(dead.agg(
         count(lit(1)).as("n_corrupt"),
         sum(length(col("raw_line")).cast("long")).as("sum_corrupt_len")))
-    val res = out.localCheckpoint(true).orderBy(col("n_docs_good"))
+    val res = out.checkpointed.orderBy(col("n_docs_good"))
     fs.delete(new Path(root), true)
     res
   }

@@ -49,7 +49,7 @@ object C17Prof {
         withDf.write.format("noop").mode("overwrite").save(); withDf.count()
       }
     }
-    graft.ops.TextOps.clearCache()
+    graft.PersistedCache.clearAll()
     time("1 shingle index build")(
       graft.ops.TextOps.shingleIndex(spark, sfDir).count())
     time("1b prefix rows")(
@@ -79,7 +79,7 @@ object C17Prof {
       graft.ops.TextOps.shingleCandidates(spark, sfDir).count())
     time("3 full query (both cached)")(
       graft.ops.TextOps.shingleJaccard(spark, sfDir).count())
-    graft.ops.TextOps.clearCache()
+    graft.PersistedCache.clearAll()
     time("4 full query COLD")(
       graft.ops.TextOps.shingleJaccard(spark, sfDir).count())
     spark.stop()

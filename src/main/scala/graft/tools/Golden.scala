@@ -27,12 +27,14 @@ object Golden {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  def computeAll(spark: SparkSession, sfDir: String): Map[String, String] =
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> (try hashOf(fn(spark, sfDir)) catch {
-        case e: Throwable => s"ERROR: ${e.getClass.getSimpleName}"
-      })
+  /** One declared query's hash, or `ERROR: <exception class>`. */
+  def hashQuery(spark: SparkSession, sfDir: String, name: String): String =
+    try hashOf(SparkEntry.queries(name)(spark, sfDir)) catch {
+      case e: Throwable => s"ERROR: ${e.getClass.getSimpleName}"
     }
+
+  def computeAll(spark: SparkSession, sfDir: String): Map[String, String] =
+    SparkEntry.queries.keys.map(n => n -> hashQuery(spark, sfDir, n)).toMap
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args.take(2)

@@ -36,7 +36,7 @@ object NswProf {
       val reps2 = args.lift(2).filter(_.forall(_.isDigit)).map(_.toInt)
         .getOrElse(2)
       (1 to reps2).foreach { i =>
-        Nsw.clearCache(); graft.ops.Ann.clearCache()
+        graft.PersistedCache.clearAll()
         val tAssign = t(graft.ops.Ann.assignments(s, d).count())
         val seeds = Nsw.seedCandidates(s, d)
         val tSeed = t(seeds.write.format("noop").mode("overwrite").save())
@@ -117,7 +117,7 @@ object NswProf {
       s.stop(); return
     }
     (1 to reps).foreach { i =>
-      Nsw.clearCache(); graft.ops.Ann.clearCache()
+      graft.PersistedCache.clearAll()
       val tAdj = t(Nsw.adjacency(s, d).count())
       val tFar = t(Nsw.adjacencyWithFar(s, d, Nsw.F).count())
       val tSearch = t(graft.SparkEntry.queries("ann_nsw_topk")(s, d).count())

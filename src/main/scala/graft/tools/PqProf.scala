@@ -24,7 +24,7 @@ object PqProf {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     (1 to reps).foreach { i =>
-      graft.ops.Ann.clearCache()
+      graft.PersistedCache.clearAll()
       val tSub = t(graft.ops.Ann.pqSubDistsProbe(s, d).count())
       val tCodes = t(graft.ops.Ann.pqCodes(s, d).count())
       val tQuery = t(graft.SparkEntry.queries("ann_pq_topk")(s, d).count())

@@ -6,9 +6,10 @@ import graft.SparkEntry
 /** Dev tool: repeat-time one declared query to separate fixed overhead
   * (first-run codegen/scan setup) from steady-state cost.
   * Usage: runMain graft.tools.ProfileQuery <name> [sfDir] [reps] [cpus] [cold]
-  * Passing `cold` as the 5th arg drops all graft session caches before
-  * each rep (Bench's cold methodology) — steady-state COLD, i.e. JVM and
-  * codegen warm but shared intermediates rebuilt every rep.
+  * Passing `cold` as the 5th arg runs the cold reset
+  * (`PersistedCache.clearAll`) before each rep (Bench's cold
+  * methodology) — steady-state COLD, i.e. JVM and codegen warm but
+  * shared intermediates rebuilt every rep.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -29,11 +30,7 @@ object ProfileQuery {
       .foreach(v => s.conf.set(graft.ops.Ann.IterativeCheckpointConf, v))
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      if (cold) {
-        graft.ops.Knn.clearCache(); graft.ops.Ann.clearCache(); graft.ops.Nsw.clearCache()
-        graft.ops.Graph.clearCache(); graft.ops.TextOps.clearCache()
-        graft.ops.Quality.clearCache()
-      }
+      if (cold) graft.PersistedCache.clearAll()
       val t0 = System.nanoTime()
       val n = fn(s, d).count()
       println(f"[profile] $name run $i: ${(System.nanoTime() - t0) / 1e9}%6.3f s ($n rows, local[$cpus])")

@@ -49,7 +49,7 @@ object RoutingProbe {
     val n = graft.Tables.embeddings(spark, dir).count()
     seedCs.foreach { case (c, hier) =>
       def once(): (Long, Double) = {
-        Ann.clearCache(); Nsw.clearCache()
+        graft.PersistedCache.clearAll()
         val t0 = System.nanoTime()
         val rows =
           if (hier) Ann.hierProbesOf(spark, dir, c, Nsw.coarseCFor(c),

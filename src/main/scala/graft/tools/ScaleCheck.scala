@@ -339,7 +339,7 @@ object ScaleCheck {
       // (the 63k lesson, r13 §10: a mid-sequence row's retained blocks
       // starved a later unrelated row's heap — this row's extra
       // retrained-index reads were exactly such an insertion)
-      Nsw.clearCache(); Ann.clearCache()
+      graft.PersistedCache.clearAll()
       s"${actions.count(_.action == "kept_serving")} serving kept, " +
         s"${actions.count(_.action == "kept_recent")} recent kept, " +
         s"${deleted.size} superseded/tmp deleted, search unchanged, " +
@@ -595,9 +595,9 @@ object ScaleCheck {
           .select(col("qid"), col("cid"))
         val hits = approx.join(exact, Seq("qid", "cid")).count()
         val r = hits.toDouble / (nq * Ann.K)
-        // release the tier's working set (session caches; the
-        // checkpointed beams follow via the context cleaner)
-        Nsw.clearCache(); Ann.clearCache()
+        // release the tier's working set (session caches and the
+        // engine's checkpointed beams)
+        graft.PersistedCache.clearAll()
         require(r >= 0.9,
           f"tier-${i + 2} clustered recall $r%.4f < 0.9 at shape beam $bAuto")
         f"recall $r%.4f (sampled, n_q=$nq) at shape beam $bAuto, " +
@@ -636,7 +636,7 @@ object ScaleCheck {
           (System.nanoTime() - t0) / 1e9
         }
         val t = math.min(run(), run()) // min-of-2: contention guard
-        Nsw.clearCache(); Ann.clearCache()
+        graft.PersistedCache.clearAll()
         (n, b, t)
       }
       val pts = trendTiers.map(searchOnly)

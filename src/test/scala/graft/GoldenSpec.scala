@@ -23,11 +23,28 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("all query outputs match their golden hashes on sf0.001") {
-    val current = tools.Golden.computeAll(spark, sf0001)
+    // hygiene law in the same pass: after each query the one cold reset
+    // leaves no persisted RDD behind (relative to what was already
+    // persisted, so another suite's fixtures and an earlier query's leak
+    // are not charged to this query)
+    val sc = spark.sparkContext
+    PersistedCache.clearAll()
+    var known = sc.getPersistentRDDs.keys.toSet
+    val leaks = Map.newBuilder[String, Int]
+    val current = SparkEntry.queries.keys.map { name =>
+      val h = tools.Golden.hashQuery(spark, sf0001, name)
+      PersistedCache.clearAll()
+      val left = sc.getPersistentRDDs.keys.toSet -- known
+      if (left.nonEmpty) { leaks += name -> left.size; known ++= left }
+      name -> h
+    }.toMap
     val bad = current.filter { case (name, h) => golden.get(name).exists(_ != h) }
     assert(bad.isEmpty,
       s"outputs drifted for: ${bad.keys.toSeq.sorted.mkString(", ")}")
     assert(current.values.forall(!_.startsWith("ERROR")),
       current.filter(_._2.startsWith("ERROR")).toString)
+    val leaked = leaks.result()
+    assert(leaked.isEmpty, "persisted RDDs left after PersistedCache.clearAll(): " +
+      leaked.toSeq.sorted.map { case (q, n) => s"$q ($n)" }.mkString(", "))
   }
 }

@@ -265,9 +265,13 @@ class SamplingSpec extends SparkSpec {
     // law: the range-partitioned two-pass prefix sum (r18) is exactly
     // sum(c) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING TO 1 PRECEDING)
     // on a unique-keyed table — at several partition counts, including
-    // ones that force multi-row and near-empty range partitions
+    // ones that force multi-row and near-empty range partitions, and
+    // with exchange reuse on and off. 20k rows: the range partitioner
+    // samples about 60 rows per output partition (3,840 at 64), so the
+    // boundaries come from a partial sample (at a few hundred rows it
+    // takes every row, and two executions always agree)
     val rnd = new scala.util.Random(7)
-    val rows = (0 until 257).map(i => (rnd.nextInt(10000).toLong, i.toLong))
+    val rows = (0 until 20000).map(i => (rnd.nextInt(10000000).toLong, i.toLong))
       .distinctBy(_._1).map { case (k, _) => (k, (k % 7) + 1) }
     val df = rows.toDF("k", "c")
     val expect = {
@@ -276,12 +280,14 @@ class SamplingSpec extends SparkSpec {
       df.withColumn("cb", coalesce(sum(col("c")).over(w), lit(0L)))
         .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     }
-    Seq(1, 3, 8, 64).foreach { p =>
+    val reuse = "spark.sql.exchange.reuse"
+    try for (r <- Seq("true", "false"); p <- Seq(1, 3, 8, 64)) {
+      spark.conf.set(reuse, r)
       val got = ops.PrefixSum.strictlyBefore(df, Seq("k"), "c", "cb", p)
         .select(col("k"), col("c"), col("cb"))
         .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got == expect, s"partitions=$p")
-    }
+      assert(got == expect, s"partitions=$p exchange.reuse=$r")
+    } finally spark.conf.unset(reuse)
     // s05's census must equal the literal ntile(10) form it replaced
     val viaNtile = {
       val w = org.apache.spark.sql.expressions.Window

@@ -117,6 +117,31 @@ class TextSpec extends SparkSpec {
     assert(rows.forall(_.getAs[Double]("cosine") <= 1.0))
   }
 
+  test("c17: shingle_id_set counts code points on supplementary-plane " +
+    "text, like the substring expression form it replaced") {
+    // U+1F600 and U+10400 are two UTF-16 units each; Spark's length and
+    // substring count each as one character, and so must the ids
+    val k = TextOps.ShingleK
+    val docs = Seq("a\uD83D\uDE00b\uD801\uDC00cdefgh\uD83D\uDE00ijk",
+      "\u65E5\u672C\uD83D\uDE00 text \uD801\uDC00 \u00E9t\u00E9")
+      .toDF("text")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Long)].collect().groupMap(_._1)(_._2).view
+        .mapValues(_.toSet).toMap
+    val got = ids(docs.select(col("text"), explode(functions.TextHash
+      .shingle_id_set(col("text"), lit(k)))))
+    val viaExpr = ids(docs.select(col("text"), explode(array_distinct(expr(
+        s"transform(sequence(1, length(text) - ${k - 1}), " +
+          s"i -> substring(text, i, $k))"))).as("sg"))
+      .select(col("text"),
+        functions.HashExpressions.fnv1a64(spark, col("sg"))))
+    assert(viaExpr.size == 2 && got == viaExpr)
+    // 7 code points in 14 UTF-16 units: shorter than k, so no shingles
+    val short = "\uD801\uDC00\uD83D\uDE00" * 3 + "\uD801\uDC00"
+    assert(Seq(short).toDF("text").select(functions.TextHash
+      .shingle_id_set(col("text"), lit(k))).head().getSeq[Long](0).isEmpty)
+  }
+
   test("c17: FNV shingle ids are collision-free on this corpus") {
     import org.apache.spark.sql.functions._
     val sg = Tables.documents(spark, sf0001)
