@@ -133,22 +133,57 @@ object Tables {
     }.sum
   }
 
-  /** Strict boolean conf gate (ADVICE r16): the graft.* branch confs
-    * (Ann.LutBroadcastConf, Nsw.EmbBroadcastConf) pick between a
-    * broadcast and a shuffle plan where choosing the WRONG branch past
-    * a scale ceiling is the failure the conf exists to avoid — so
-    * "FALSE"/"0"/"off" silently falling through to the default is
-    * unacceptable. Literal true/false (any case, trimmed) or a loud
-    * error; absent → `default`. */
-  private[graft] def strictBoolConf(s: org.apache.spark.sql.SparkSession,
-      key: String, default: Boolean = true): Boolean =
-    s.conf.getOption(key) match {
-      case None => default
-      case Some(v) => v.trim.toLowerCase(java.util.Locale.ROOT) match {
-        case "true" => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"$key must be 'true' or 'false', got '$other'")
-      }
-    }
+  /** The engine's ceiling on the estimated BUILT size of a broadcast
+    * join side (see [[broadcastFits]]). 700 MiB keeps every side the
+    * rehearsals measured as broadcast-right under it and every side they
+    * had to force off over it: the 2M-vector embedding lookup (≈0.6 GB)
+    * broadcasts — its shuffle-hash branch exchanged ≈137 GB of seed
+    * pairs with the embedding payload attached — while the 63k-query ADC
+    * LUT (≈1.05 GB), the 632k-vertex NSW adjacency (≈0.79 GB) and the
+    * ≥4M-vector embedding lookup (≥1.2 GB) shuffle-hash. Spark's 10 MB
+    * auto-broadcast default prices arbitrary plan-estimated relations and
+    * is far too low for these: it would flip the sf0.1 LUT (≈33 MB) to
+    * shuffle-hash, measured slower there (ann_pq_topk 6.8–7.9 s vs
+    * 4.0–5.4 s broadcast, local[4]). */
+  val BroadcastCeilingBytes: Long = 700L << 20
+
+  /** Estimated built bytes per corpus row of each join side the ANN/NSW
+    * tiers size with [[broadcastFits]]. */
+  object RowBytes {
+    /** One query's ADC lookup table: 8 subspaces × 256 codewords of
+      * doubles, plus array and row headers. */
+    val Lut = 16600L
+    /** One (vec_id, 64-float embedding) lookup row. */
+    val Embedding = 300L
+    /** One (cid, code0..code7) PQ code row. */
+    val PqCodes = 80L
+    /** One vertex's NSW search adjacency: at most M + F + 2 = 26 edges
+      * of two longs (+1 absorbs rounding in the ring arithmetic, +1 is
+      * the self-loop row), at 48 B per row of the built HashedRelation
+      * rather than the raw payload, so the estimate errs toward
+      * shuffle-hash. */
+    val Adjacency = 26 * 48L
+  }
+
+  /** The one broadcast-or-partition rule for the ANN/NSW join sides
+    * whose size is known by construction: broadcast while `rows` ×
+    * `rowBytes` fits [[BroadcastCeilingBytes]], unless the session has
+    * turned broadcast off (`spark.sql.autoBroadcastJoinThreshold` ≤ 0).
+    * The choice only picks the exchange of the same join, so it never
+    * changes an answer. */
+  private[graft] def broadcastFits(s: SparkSession, rows: Long,
+      rowBytes: Long): Boolean =
+    s.sessionState.conf.autoBroadcastJoinThreshold > 0 &&
+      rows * rowBytes <= BroadcastCeilingBytes
+
+  /** `side` broadcast when it fits at `rowBytes` per corpus vector
+    * ([[broadcastFits]]; the vector count is the embeddings footer, no
+    * job), else hinted `shuffle_hash`: key-partitioned, nothing
+    * replicated per executor, and no sort of the big side as a
+    * sort-merge join would do. */
+  private[graft] def sizedSide(s: SparkSession, d: String, side: DataFrame,
+      rowBytes: Long): DataFrame =
+    if (broadcastFits(s, footerRowCount(s, s"$d/embeddings.parquet"),
+        rowBytes)) broadcast(side)
+    else side.hint("shuffle_hash")
 }

@@ -210,27 +210,6 @@ object Ann {
   def trainedCentroids(s: SparkSession, d: String): DataFrame =
     trainedCentroidsAt(s, d, C)
 
-  /** When true (the default), each Lloyd's round is localCheckpoint'd —
-    * a lineage barrier per iteration, the shape reliable checkpoints
-    * take on a real cluster. Which side wins is a measured function of
-    * the per-round subtree size: at C=64 (round 8) the single unrolled
-    * plan won because Catalyst's exchange reuse deduped the repeated
-    * subtrees (3.5 s vs 4.3 s), but after the C=256 recall retune the
-    * n·C assignment subtree dominates and the barrier wins decisively
-    * (sf0.1 cold: 4.9 s vs 7.5 s, `ProfileQuery ann_ivf_topk_trained
-    * ... cold` A/B, SURVEY §8). The conf keeps both shapes one setting
-    * apart; results are bit-identical either way (the quantized-mean
-    * arithmetic doesn't care where the barrier sits). */
-  val IterativeCheckpointConf = "spark.graft.iterative.checkpoint"
-
-  /** When "false", the per-query ADC lookup tables join by qid-keyed
-    * shuffle-hash instead of broadcast — the at-scale branch for the
-    * leave-one-out PQ form where the query side IS the corpus and the
-    * LUT grows O(n·Cw·M). Default broadcast: the production serving
-    * shape (small query batches, LUT of a few thousand rows). Same
-    * results on both branches; see [[adcRerankTopk]]. */
-  val LutBroadcastConf = "spark.graft.ann.lutBroadcast"
-
   private[graft] def trainedCentroidsAt(s: SparkSession, d: String,
       c: Int): DataFrame =
     assignCache.getOrBuild(s, s"$d#trainedCents#$c") {
@@ -247,12 +226,12 @@ object Ann {
     val e = e0.select(col("vec_id"), col("embedding"))
     val seeds = e.where(col("vec_id") < c)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_vec"))
-    val barrier =
-      !s.conf.getOption(IterativeCheckpointConf).contains("false")
-    (1 to LloydIters).foldLeft(seeds) { (cs, _) =>
-      val next = refineOnce(s, e, cs)
-      if (barrier) next.checkpointed else next
-    }
+    // each round localCheckpoint'd: a lineage barrier per iteration. The
+    // n·C assignment subtree dominates each round at C=256, so the
+    // barrier beats the unrolled plan (sf0.1 cold: 4.9 s vs 7.5 s,
+    // SURVEY §8); results are bit-identical either way.
+    (1 to LloydIters).foldLeft(seeds)((cs, _) =>
+      refineOnce(s, e, cs).checkpointed)
   }
 
   /** Probe routing — THE one definition of "which `p` inverted lists
@@ -443,25 +422,17 @@ object Ann {
       .min(1L << 22).toInt
   }
 
-  /** When "false", the quantized tiers' exact-rerank corpus-embedding
-    * lookups join by key-partitioned shuffle-hash instead of broadcast —
-    * the at-scale branch past the ~4M-vector broadcast ceiling (the
-    * [[graft.ops.Nsw.EmbBroadcastConf]] twin). Default broadcast: right
-    * at every graded and rehearsal tier, and the only strategy that
-    * never sorts. r18, measured at the 63k rehearsal: with neither hint
-    * the planner's size ESTIMATE crossed the 10 MB auto-broadcast
-    * default (63k × ~300 B ≈ 19 MB) and flipped both lookups to
-    * SORT-MERGE — which local-sorted the 400M-row (n·n/10) rerank
-    * stream, with the 260 B query embedding attached after the first
-    * join, into ~80 GB of UnsafeExternalSorter spill and a disk-full
-    * abort (SCALE_r18.md §4). Same results on both branches (same join,
-    * different exchange). */
-  val RerankEmbBroadcastConf = "spark.graft.ann.rerankEmbBroadcast"
-
-  private def rerankEmbSide(s: SparkSession, proj: DataFrame): DataFrame =
-    if (graft.Tables.strictBoolConf(s, RerankEmbBroadcastConf))
-      broadcast(proj)
-    else proj.hint("shuffle_hash")
+  /** A corpus-embedding lookup of the quantized tiers' exact rerank,
+    * sized by [[graft.Tables.sizedSide]]. r18, measured at the 63k
+    * rehearsal: with neither hint the planner's size ESTIMATE crossed
+    * the 10 MB auto-broadcast default (63k × ~300 B ≈ 19 MB) and flipped
+    * both lookups to SORT-MERGE — which local-sorted the 400M-row
+    * (n·n/10) rerank stream, with the 260 B query embedding attached
+    * after the first join, into ~80 GB of UnsafeExternalSorter spill and
+    * a disk-full abort (SCALE_r18.md §4). */
+  private def rerankEmbSide(s: SparkSession, d: String,
+      proj: DataFrame): DataFrame =
+    Tables.sizedSide(s, d, proj, Tables.RowBytes.Embedding)
 
   /** Keep each query's `rlim` best candidates under the (score, cid)
     * total order — the quantized-tier pre-cut, heap form (map-side
@@ -662,13 +633,13 @@ object Ann {
     // M-byte code table broadcast (n·~80 B — 4× smaller than the float
     // vectors the exact tier broadcasts) the query side streams, stays
     // qid-partitioned through the LUT join, and the cut plans as ONE
-    // complete aggregation. The broadcast is O(n), the same ceiling as
-    // the per-query LUT relation, so the SAME conf governs both: past
-    // it ([[LutBroadcastConf]] false) the join is left to the planner —
+    // complete aggregation. The broadcast is O(n) and sized by the same
+    // rule as the per-query LUT relation: past the ceiling the join is
+    // left to the planner (a non-equi join has no shuffle-hash form) —
     // the flat n² scan is not the at-scale serving tier (IVFPQ is).
     val cside = pqCodes(s, d).withColumnRenamed("vec_id", "cid")
     val csideSized =
-      if (graft.Tables.strictBoolConf(s, LutBroadcastConf)) broadcast(cside)
+      if (Tables.broadcastFits(s, n, Tables.RowBytes.PqCodes)) broadcast(cside)
       else cside
     val pairs = queries.join(csideSized, col("qid") =!= col("cid"))
     adcRerankTopk(s, d, pairs)
@@ -704,14 +675,13 @@ object Ann {
     // Broadcast is right for production ANN serving (a query batch is
     // small: Cw·M doubles ≈ 16 KB per query). The declared leave-one-out
     // form makes EVERY corpus row a query — at 100× the broadcast is
-    // O(n·Cw·M) and becomes the scale-killer of the PQ tier, so the conf
-    // flips the join to a qid-keyed shuffle-hash: each pair row meets
-    // exactly its own query's LUT row and nothing is replicated to every
-    // executor. Results identical either way (same join, different
-    // exchange) — plan-asserted in AnnSpec for both branches.
-    val lutBroadcast =
-      graft.Tables.strictBoolConf(s, LutBroadcastConf)
-    val lutSide = if (lutBroadcast) broadcast(lut) else lut.hint("shuffle_hash")
+    // O(n·Cw·M) and becomes the scale-killer of the PQ tier, so past the
+    // broadcast ceiling the join is a qid-keyed shuffle-hash: each pair
+    // row meets exactly its own query's LUT row and nothing is
+    // replicated to every executor. Results identical either way (same
+    // join, different exchange) — plan-asserted in AnnSpec for both
+    // branches.
+    val lutSide = Tables.sizedSide(s, d, lut, Tables.RowBytes.Lut)
     // The positional element_at assumes codeword ids are contiguous from
     // 0 (true by construction: the codebook is `vec_id < PqCw`). If that
     // precondition ever broke — gapped ids after a fixture change — the
@@ -731,9 +701,9 @@ object Ann {
     // bound pushdown, so the full ADC-scored pair stream was sorted per
     // partition, exchanged whole, and sorted again — see [[rerankLimit]].
     val cands = heapCut(s, scored, "adc", rerankLimit(s, d, cutNum, cutDen))
-    val q = rerankEmbSide(s, Tables.embeddings(s, d)
+    val q = rerankEmbSide(s, d, Tables.embeddings(s, d)
       .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val c = rerankEmbSide(s, Tables.embeddings(s, d)
+    val c = rerankEmbSide(s, d, Tables.embeddings(s, d)
       .select(col("vec_id").as("cid"), col("embedding").as("cv")))
     heapTopK(s, cands.join(q, Seq("qid")).join(c, Seq("cid"))
       .select(col("qid"), col("cid"),
@@ -1534,9 +1504,9 @@ object Ann {
     // the adcRerankTopk twin — see [[rerankLimit]]/[[heapCut]]). The
     // long→double cast inside heapCut is exact: sdc ≤ dim·255² ≪ 2⁵³.
     val cands = heapCut(s, scored, "sdc", rerankLimit(s, d, cutNum, cutDen))
-    val q = rerankEmbSide(s, Tables.embeddings(s, d)
+    val q = rerankEmbSide(s, d, Tables.embeddings(s, d)
       .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val c = rerankEmbSide(s, Tables.embeddings(s, d)
+    val c = rerankEmbSide(s, d, Tables.embeddings(s, d)
       .select(col("vec_id").as("cid"), col("embedding").as("cv")))
     heapTopK(s, cands.join(q, Seq("qid")).join(c, Seq("cid"))
       .select(col("qid"), col("cid"),

@@ -190,7 +190,6 @@ object Knn {
   /** Byte budget per candidate block in [[knnTopkBlocked]] — sized so a
     * block co-resides comfortably with a query partition in executor
     * memory (same order as Spark's own broadcast threshold). */
-  val BlockBytesConf = "spark.graft.knn.blockBytes"
   private val DefaultBlockBytes = 64L << 20
 
   /** Candidate-side block count: ceil(candidate bytes / block budget),
@@ -199,12 +198,11 @@ object Knn {
     * Floored at 2: a candidate set that fits ONE block belongs to the
     * broadcast layout (knn_topk), so this operator always exercises the
     * partial-heap merge path it exists to provide. */
-  private[graft] def candidateBlocks(s: SparkSession, d: String): Int = {
+  private[graft] def candidateBlocks(s: SparkSession, d: String,
+      budget: Long = DefaultBlockBytes): Int = {
     val bytes = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    val budget = s.conf.getOption(BlockBytesConf).map(_.toLong)
-      .getOrElse(DefaultBlockBytes)
     ((bytes + budget - 1) / budget).min(4096).max(2).toInt
   }
 
@@ -216,12 +214,17 @@ object Knn {
     * results, same oracle — only the physical layout differs, and the
     * block count follows the data size ([[candidateBlocks]]), not a
     * constant. */
-  def knnTopkBlocked(s: SparkSession, d: String): DataFrame = {
+  def knnTopkBlocked(s: SparkSession, d: String): DataFrame =
+    knnTopkBlockedAt(s, d, DefaultBlockBytes)
+
+  /** [[knnTopkBlocked]] under an explicit block budget. */
+  private[graft] def knnTopkBlockedAt(s: SparkSession, d: String,
+      budget: Long): DataFrame = {
     val e = Tables.embeddings(s, d)
     val p = Tables.parallelism(s)
     val q = e.repartition(p)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val c = e.repartition(candidateBlocks(s, d))
+    val c = e.repartition(candidateBlocks(s, d, budget))
       .select(col("vec_id").as("cid"), col("embedding").as("cv"),
         col("label").as("clabel"))
     // SHUFFLE_REPLICATE_NL forbids the broadcast fallback the optimizer

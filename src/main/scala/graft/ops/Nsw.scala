@@ -388,17 +388,6 @@ object Nsw {
   private val cache = new graft.PersistedCache(this)
   def clearCache(): Unit = graft.PersistedCache.clear(this)
 
-  /** When "false", [[bestM]]'s embedding lookups join by key-partitioned
-    * shuffle-hash instead of broadcast — the at-scale branch for
-    * corpora past the broadcast ceiling (force-broadcast of the full
-    * vector table is ~160 MB at 632k·64-d, ~0.5 GB at 2M, and hits the
-    * 1 GB ceiling near 4M vectors — VERDICT r15 item 4, the predicted
-    * scale defect #5). Default broadcast: right at every rehearsal
-    * tier, and the broadcast is ONE shared relation reused for both
-    * endpoint lookups. Same edge set on both branches (same join,
-    * different exchange) — spec-asserted like [[Ann.LutBroadcastConf]]. */
-  val EmbBroadcastConf = "spark.graft.nsw.embBroadcast"
-
   /** Session confs REQUIRED wherever a big graph/index build can start
     * — i.e. any session whose [[ensureNswIndex]]/[[adjacency]] call may
     * see a rehearsal-tier (or larger) corpus, not just the dedicated
@@ -536,31 +525,26 @@ object Nsw {
     * candidate multiset is the big side, so it must never be SORTED:
     * the original window form spilled the full volume through
     * UnsafeExternalSorter and ran the rehearsal box out of disk. The
-    * embedding lookup is conf-gated ([[EmbBroadcastConf]], r16 —
-    * VERDICT r15 item 4): default BROADCAST of the (vec_id, embedding)
-    * relation for each endpoint — right while the corpus vectors fit
-    * the broadcast ceiling
-    * (~632k·64-d ≈ 160 MB; binds near 4M vectors). Past that, set the
-    * conf "false" and both lookups become key-partitioned shuffle-hash
-    * joins: the expansion exchanges by u then v, the embeddings table
-    * builds the hash side, nothing is replicated per executor — the
-    * [[Ann.LutBroadcastConf]] precedent. Same join, different
-    * exchange; edge set identical either way (spec-asserted). The
+    * embedding lookup is sized by [[graft.Tables.sizedSide]] (VERDICT r15
+    * item 4): BROADCAST of the (vec_id, embedding) relation for each
+    * endpoint while the corpus vectors fit the broadcast ceiling (binds
+    * between 2M and 4M vectors). Past that both lookups become
+    * key-partitioned shuffle-hash joins: the expansion exchanges by u
+    * then v, the embeddings table builds the hash side, nothing is
+    * replicated per executor. Same join, different exchange; edge set
+    * identical either way (spec-asserted). The
     * top-M cut is the bounded-heap aggregate with map-side partial
     * aggregation; same (dist, v) comparator as the window (knn_topk ≡
     * knn_topk_agg precedent), so the selected edge SET — and every
     * declared hash — is unchanged. */
   /** Score candidate (u, v) pairs against the corpus embeddings — the
-    * conf-gated lookup half of [[bestM]], reusable on its own so the
+    * size-gated lookup half of [[bestM]], reusable on its own so the
     * descent can score each unordered 2-hop pair ONCE (r18). */
   private def scoredPairs(s: SparkSession, d: String,
       cands: DataFrame): DataFrame = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    // strict parse, loud failure (ADVICE r16): "FALSE"/"0"/"off" silently
-    // taking the broadcast branch is exactly the at-scale failure the
-    // conf exists to avoid, so anything but a literal boolean is an error
-    val embBroadcast = graft.Tables.strictBoolConf(s, EmbBroadcastConf)
-    val side = if (embBroadcast) broadcast(e) else e.hint("shuffle_hash")
+    val side = Tables.sizedSide(s, d,
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      Tables.RowBytes.Embedding)
     val eu = side.select(col("vec_id").as("u"), col("embedding").as("uv"))
     val ev = side.select(col("vec_id").as("v"), col("embedding").as("vv"))
     cands.join(eu, Seq("u")).join(ev, Seq("v"))
@@ -794,33 +778,19 @@ object Nsw {
     * 100 TB; past the adjacency broadcast ceiling the shuffle-hash grow
     * join re-keys the stream and the heap takes its one exchange as
     * before. */
-  private def hop(s: SparkSession, d: String, beam: DataFrame,
+  private[graft] def hop(s: SparkSession, d: String, beam: DataFrame,
       b: Int = B, far: Int = 0,
       adjOverride: Option[DataFrame] = None): DataFrame = {
     val adj = adjacencyWithFar(s, d, far, adjOverride)
-    // Join-strategy by measured size (r17, guide §3.1): the adjacency is
-    // plan-time sized from Catalyst stats (cached relation / parquet
-    // footer — no job). Under the session's autoBroadcastJoinThreshold
-    // it is broadcast — the beam then crosses ZERO exchanges in the grow
-    // join; past the threshold (the 100 TB tier: n·(M+F) edges, e.g.
-    // ~768 MB at 2M vectors) the previous shuffle-hash layout is kept
-    // verbatim (sort-merge would add two sorts for nothing). The
-    // unconditional shuffle_hash hint was paying two per-hop exchanges
-    // (beam by cand + adjacency by u, every hop a fresh job) at every
-    // tier where the graph fits the broadcast budget.
-    val bcThreshold = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      .map(v => scala.util.Try(v.trim.toLong) // bare long, incl. -1 = off
-        .getOrElse(org.apache.spark.network.util.JavaUtils
-          .byteStringAsBytes(v)))
-      .getOrElse(10L << 20) // Spark's own default
-    // Catalyst stats are useless here — the cached graph sits behind a
-    // localCheckpoint (LogicalRDD: unknown size). But the edge count is
-    // known BY CONSTRUCTION: ≤ n·(M+F+2) rows of two longs (+1 absorbs
-    // rounding in the ring/far arithmetic, +1 is the self-loop row per
-    // vertex added below); 48 B/row prices the built HashedRelation, not
-    // the raw payload, so the estimate errs toward shuffle-hash. n comes
-    // from the parquet footer — a driver metadata read, no job (the
-    // Knn.candidateBlocks precedent).
+    // Join strategy by size (r17, guide §3.1): while the adjacency fits
+    // the broadcast ceiling it is broadcast — the beam then crosses ZERO
+    // exchanges in the grow join; past it (the 100 TB tier: n·(M+F)
+    // edges, ≈2.5 GB built at 2M vectors) the shuffle-hash layout is
+    // kept (sort-merge would add two sorts for nothing). Catalyst stats
+    // are useless here — the cached graph sits behind a localCheckpoint
+    // (LogicalRDD: unknown size) — but the edge count is known BY
+    // CONSTRUCTION, so the side is priced per corpus vector
+    // ([[graft.Tables.RowBytes.Adjacency]]).
     // Self-loop fold (r18, guide §2.4): the monotone "old beam ∪ grown"
     // union used to be a physical Union of the qid-partitioned beam with
     // the qid-partitioned grow output — which DESTROYS the recognized
@@ -836,12 +806,8 @@ object Nsw {
     // exchanges, single insertion per candidate, no buffer serde.
     val selfLoops = Tables.embeddings(s, d)
       .select(col("vec_id").as("u"), col("vec_id").as("v"))
-    val adjPlus = adj.unionByName(selfLoops)
-    val adjBytes = Tables.footerRowCount(s, s"$d/embeddings.parquet") *
-      (M + F + 2) * 48L
-    val adjSized = // threshold <= 0 = broadcast disabled by the session
-      if (bcThreshold > 0 && adjBytes <= bcThreshold) broadcast(adjPlus)
-      else adjPlus.hint("shuffle_hash")
+    val adjSized = Tables.sizedSide(s, d, adj.unionByName(selfLoops),
+      Tables.RowBytes.Adjacency)
     val grown = beam
       .join(adjSized, beam("cand") === adjSized("u"))
       .select(col("qid"), col("v").as("cand"))
@@ -875,9 +841,9 @@ object Nsw {
       .withColumn("rn", row_number().over(w))
   }
 
-  private[graft] def nswTopkAt(s: SparkSession, d: String,
-      hops: Int, b: Int = B, e: Int = E, far: Int = F,
-      adjOverride: Option[DataFrame] = None,
+  /** The search's starting beam: every query (or the `qOnly` subset)
+    * paired with the `e` entry vertices, itself excluded. */
+  private[graft] def entryBeam(s: SparkSession, d: String, e: Int = E,
       qOnly: Option[DataFrame] = None): DataFrame = {
     // qOnly (r13 review): restrict the QUERY side to an explicit (qid)
     // set before the search — per-query independence makes the
@@ -900,20 +866,20 @@ object Nsw {
       .getOrElse(qsAll)
     val entries = Tables.embeddings(s, d).where(col("vec_id") < e)
       .select(col("vec_id").as("cand"))
-    val beam0 = qs.crossJoin(broadcast(entries))
-      .where(col("cand") =!= col("qid"))
-    // per-hop lineage barrier (the Lloyd's/NN-descent discipline, same
-    // conf): each hop references the previous beam TWICE (grow join +
-    // monotone union), so an unbarriered fold doubles the plan per hop —
-    // measured 46–63 s cold at sf0.1 vs ~17 s with the barrier. The
-    // materialized beam is tiny (n_q·B rows); results are bit-identical
-    // either way.
-    val barrier =
-      !s.conf.getOption(Ann.IterativeCheckpointConf).contains("false")
-    val beamH = (1 to hops).foldLeft(beam0) { (bm, _) =>
-      val next = hop(s, d, bm, b, far, adjOverride)
-      if (barrier) next.checkpointed else next
-    }
+    qs.crossJoin(broadcast(entries)).where(col("cand") =!= col("qid"))
+  }
+
+  private[graft] def nswTopkAt(s: SparkSession, d: String,
+      hops: Int, b: Int = B, e: Int = E, far: Int = F,
+      adjOverride: Option[DataFrame] = None,
+      qOnly: Option[DataFrame] = None): DataFrame = {
+    val beam0 = entryBeam(s, d, e, qOnly)
+    // per-hop lineage barrier (the Lloyd's/NN-descent discipline):
+    // unbarriered, the plan of the fold grows with every hop — measured
+    // 46–63 s cold at sf0.1 vs ~17 s with the barrier. The materialized
+    // beam is tiny (n_q·B rows); results are bit-identical either way.
+    val beamH = (1 to hops).foldLeft(beam0)((bm, _) =>
+      hop(s, d, bm, b, far, adjOverride).checkpointed)
     rank(s, d, beamH).where(col("rn") <= K)
       .select(col("qid"), col("rn").as("rnk"), col("cand").as("cid"),
         round(col("dist"), 6).as("dist"))

@@ -4,7 +4,7 @@ import scala.util.chaining._
 
 import org.apache.spark.sql.SparkSession
 
-import graft.ops.{Ann, Nsw}
+import graft.ops.Nsw
 
 /** Build-and-commit one persisted NSW artifact — the builder half of
   * the [[NswTune]] diagnostic pair (NswTune reads only committed
@@ -25,15 +25,6 @@ object NswBuild {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(Ann.LutBroadcastConf, "false")
-      // Nsw.EmbBroadcastConf stays DEFAULT (broadcast) here on purpose:
-      // on one box the shuffle-hash branch exchanges the seed expansion
-      // WITH a 256 B embedding payload attached (≈137 GB at the 2M
-      // tier's 4.9·10⁸ seed pairs — worse than the 0.5 GB broadcast it
-      // avoids). The branch is for bucketed/co-partitioned clusters and
-      // for tiers past the ~4M broadcast ceiling, where it pairs with
-      // hierarchical routing; ScaleCheck's 20k build row exercises it
-      // every certification run and NswSpec pins edge-set invariance.
       // the ONE definition of the big-build session confs (shuffle-GC
       // reap + ObjectHashAggregate fallback headroom) lives on
       // Nsw.BuildSessionConfs with the measured rationale

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.PersistedCache.Materialize
 import graft.ops.Nsw
 
 /** Dev profiler: split ann_nsw_topk's cold cost into its phases —
@@ -42,7 +43,7 @@ object NswProf {
         val tSeed = t(seeds.write.format("noop").mode("overwrite").save())
         var g: org.apache.spark.sql.DataFrame = null
         val tG0 = t {
-          g = Nsw.bestM(s, d, seeds).localCheckpoint(true)
+          g = Nsw.bestM(s, d, seeds).checkpointed
           g.count()
         }
         val tRounds = (1 to Nsw.DescentRounds).map { _ =>
@@ -52,7 +53,7 @@ object NswProf {
             val hop2 = sym.as("a").join(sym.as("b"), col("a.v") === col("b.u"))
               .select(col("a.u").as("u"), col("b.v").as("v"))
             val cands = g.unionByName(hop2).where(col("u") =!= col("v"))
-            g = Nsw.bestM(s, d, cands).localCheckpoint(true)
+            g = Nsw.bestM(s, d, cands).checkpointed
             g.count()
           }
         }
@@ -70,12 +71,7 @@ object NswProf {
       import org.apache.spark.sql.functions._
       val adj = Nsw.adjacencyWithFar(s, d, Nsw.F)
       val b = Nsw.tunedB(s, d)
-      val qs = graft.Tables.repartitioned(graft.Tables.embeddings(s, d), s)
-        .select(col("vec_id").as("qid"))
-      val entries = graft.Tables.embeddings(s, d)
-        .where(col("vec_id") < Nsw.E).select(col("vec_id").as("cand"))
-      var beam = qs.crossJoin(broadcast(entries))
-        .where(col("cand") =!= col("qid")).localCheckpoint(true)
+      var beam = Nsw.entryBeam(s, d).checkpointed
       (1 to 2).foreach { h =>
         val grown = beam.join(adj, beam("cand") === adj("u"))
           .select(col("qid"), col("v").as("cand"))
@@ -102,18 +98,16 @@ object NswProf {
             col("dist"), col("cand"), lit(0), b).as("top"))
           .select(col("qid"), explode(col("top")).as("t"))
           .select(col("qid"), col("t.id").as("cand"))
-        val tHop = t { beam = heaped.localCheckpoint(true) }
+        val tHop = t { beam = heaped.checkpointed }
         println(f"[nswprof] hop $h: scoreNoop=$tScore%5.2f s  " +
           f"fullHop=$tHop%5.2f s")
       }
       s.stop(); return
     }
     if (args.lift(1).contains("explain-hop")) {
-      // dump the ONE-hop unbarriered plan (the per-hop shape the
-      // checkpoint barrier hides from a whole-query explain)
-      s.conf.set(graft.ops.Ann.IterativeCheckpointConf, "false")
-      Nsw.nswTopkAt(s, d, hops = 1)
-        .explain("formatted")
+      // dump ONE hop's plan (the per-hop shape the checkpoint barrier
+      // hides from a whole-query explain)
+      Nsw.hop(s, d, Nsw.entryBeam(s, d), far = Nsw.F).explain("formatted")
       s.stop(); return
     }
     (1 to reps).foreach { i =>

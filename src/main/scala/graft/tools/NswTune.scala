@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.PersistedCache.Materialize
 import graft.ops.{Ann, Nsw}
 
 /** One-off sampled-recall grid over a big clustered tier's PERSISTED
@@ -29,7 +30,6 @@ object NswTune {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(Ann.LutBroadcastConf, "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -46,7 +46,7 @@ object NswTune {
           col("qv"), col("cv")).as("dist"))
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= Ann.K)
-      .select(col("qid"), col("cid")).localCheckpoint(true)
+      .select(col("qid"), col("cid")).checkpointed
     val nq = exact.select(col("qid")).distinct().count()
     println(s"[tune] ground truth: $nq queries")
 
@@ -64,8 +64,8 @@ object NswTune {
         "nothing (run the build via ScaleCheck/ensureNswIndex first, " +
         "or fix the seedC argument)")
     val adj = Nsw.storedAdjacency(spark, dir, seedC, dRounds)
-      .localCheckpoint(true)
-    val qids = qs.select(col("qid")).localCheckpoint(true)
+      .checkpointed
+    val qids = qs.select(col("qid")).checkpointed
     grid.foreach { case (h, b) =>
       val t0 = System.nanoTime()
       val approx = Nsw.nswTopkAt(spark, dir, h, b, far = 0,

@@ -24,10 +24,6 @@ object ProfileQuery {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_ITER_CKPT=true flips the iterative-lineage barrier
-    // (ops.Ann.IterativeCheckpointConf) for A/B cost measurements
-    sys.env.get("SPARK_GRAFT_ITER_CKPT")
-      .foreach(v => s.conf.set(graft.ops.Ann.IterativeCheckpointConf, v))
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       if (cold) graft.PersistedCache.clearAll()

@@ -5,6 +5,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.PersistedCache.Materialize
 import graft.ops.{Ann, Knn, Nsw, TextOps}
 
 /** The sf1 dress-rehearsal half that DuckDB cannot gate (VERDICT r9
@@ -66,15 +67,6 @@ object ScaleCheck {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the at-scale ADC branch: leave-one-out makes every corpus row a
-      // query, so the per-query LUT must shuffle, not broadcast
-      .config(Ann.LutBroadcastConf, "false")
-      // the at-scale bestM branch (VERDICT r15 item 4): rehearsal
-      // builds run the shuffle-hash embedding lookup — the 20k
-      // sub-quadratic build row below therefore EXERCISES the
-      // de-broadcast build shape every certification run (its
-      // M-regularity law and the approx-graph search law gate it)
-      .config(Nsw.EmbBroadcastConf, "false")
       // the ONE definition of the big-build session confs (shuffle-GC
       // reap + ObjectHashAggregate fallback headroom) lives on
       // Nsw.BuildSessionConfs with the measured rationale
@@ -267,9 +259,9 @@ object ScaleCheck {
     // honors it through the partitioned write/read round-trip)
     check("ann upsert incremental law") {
       val up = Ann.upsertedLists(spark, sfDir)
-        .select(col("vec_id"), col("cent_id"), col("cdist")).persist()
+        .select(col("vec_id"), col("cent_id"), col("cdist")).persisted
       val rebuilt = Ann.rebuiltLists(spark, sfDir)
-        .select(col("vec_id"), col("cent_id"), col("cdist")).persist()
+        .select(col("vec_id"), col("cent_id"), col("cdist")).persisted
       val nUp = up.count()
       val d1 = up.except(rebuilt).count()
       val d2 = rebuilt.except(up).count()
@@ -292,9 +284,9 @@ object ScaleCheck {
         f"delta fraction $frac%.3f below the " +
           s"${Ann.RetrainNum}/${Ann.RetrainDen} retrain trigger")
       val re = Ann.retrainedLists(spark, sfDir)
-        .select(col("vec_id"), col("cent_id"), col("cdist")).persist()
+        .select(col("vec_id"), col("cent_id"), col("cdist")).persisted
       val fresh = Ann.storedLists(spark, sfDir)
-        .select(col("vec_id"), col("cent_id"), col("cdist")).persist()
+        .select(col("vec_id"), col("cent_id"), col("cdist")).persisted
       val n = re.count()
       val d1 = re.except(fresh).count()
       val d2 = fresh.except(re).count()
@@ -378,9 +370,9 @@ object ScaleCheck {
     // run proves the grouped-map memory contract (per-task state = one
     // user's events) survives 1M events
     check("d37 grouped-map double impl") {
-      val a = graft.ops.EventOps.groupedMapRuns(spark, sfDir).persist()
+      val a = graft.ops.EventOps.groupedMapRuns(spark, sfDir).persisted
       val b = graft.ops.EventOps.groupedMapRunsDeclarative(spark, sfDir)
-        .persist()
+        .persisted
       val n = a.count()
       val d1 = a.except(b).count()
       val d2 = b.except(a).count()
@@ -398,11 +390,11 @@ object ScaleCheck {
     check("components double impl") {
       val edges = graft.ops.Graph.nearDupEdges(spark, sfDir)
         .select(col("a_id").as("u"), col("b_id").as("v"))
-        .localCheckpoint(true)
+        .checkpointed
       val star =
-        graft.ops.Graph.componentMapOf(spark, edges, "star").persist()
+        graft.ops.Graph.componentMapOf(spark, edges, "star").persisted
       val prop =
-        graft.ops.Graph.componentMapOf(spark, edges, "minprop").persist()
+        graft.ops.Graph.componentMapOf(spark, edges, "minprop").persisted
       val nStar = star.count()
       val d1 = star.except(prop).count()
       val d2 = prop.except(star).count()
@@ -473,7 +465,7 @@ object ScaleCheck {
     // CONVERGED peel must all keep degree >= k within the surviving
     // set — the invariant re-derived from the raw edges, not the query
     check("g06 kcore survivor law") {
-      val out = graft.ops.Graph.kcore(spark, sfDir).persist()
+      val out = graft.ops.Graph.kcore(spark, sfDir).persisted
       val nOut = out.count()
       val lastRound = out.agg(max(col("peel_round"))).head().getLong(0)
       val msg = if (lastRound < graft.ops.Graph.KcorePeels) {
@@ -577,7 +569,7 @@ object ScaleCheck {
               col("qv"), col("cv")).as("dist"))
           .withColumn("rnk", row_number().over(w))
           .where(col("rnk") <= Ann.K)
-          .select(col("qid"), col("cid")).localCheckpoint(true)
+          .select(col("qid"), col("cid")).checkpointed
         val nq = exact.select(col("qid")).distinct().count()
         require(nq == Ann.RecallSampleCap,
           s"cap must bind at this tier: n_q=$nq")
@@ -625,7 +617,7 @@ object ScaleCheck {
       def searchOnly(dir: String): (Long, Int, Double) = {
         val n = graft.Tables.embeddings(spark, dir).count()
         val qs = Ann.recallSampleOf(spark, dir, Ann.RecallSampleCap)
-          .select(col("qid")).localCheckpoint(true)
+          .select(col("qid")).checkpointed
         val seedC = tierSeedC(n)
         val b = Nsw.storedBeam(spark, dir, seedC)
         def run(): Double = {

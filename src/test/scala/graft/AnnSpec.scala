@@ -87,31 +87,65 @@ class AnnSpec extends SparkSpec {
 
   test("adc lut branch: broadcast vs qid-keyed shuffle-hash — same rows, " +
     "declared physical shapes") {
+    // ann_pq_topk sizes its LUT join and both rerank embedding lookups
+    // by Tables.sizedSide; ann_sq8_topk sizes its rerank lookups. A
+    // session with broadcast off takes every sized side to shuffle-hash.
     def joins(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
       val p = df.queryExecution.executedPlan.toString
       ("BroadcastHashJoin".r.findAllIn(p).size,
         "ShuffledHashJoin".r.findAllIn(p).size)
     }
-    val bc = Ann.pqTopk(spark, sf0001)
-    val bcRows = bc.collect()
-    val (bcB, _) = joins(bc)
-    assert(bcB >= 1, s"default branch must broadcast the LUT join " +
-      s"(saw $bcB broadcasts)")
-    try {
-      spark.conf.set(Ann.LutBroadcastConf, "false")
-      Ann.clearCache()
-      val sh = Ann.pqTopk(spark, sf0001)
-      val shRows = sh.collect()
-      val (shB, shS) = joins(sh)
-      assert(shS >= 1, s"at-scale branch must shuffle-hash the LUT " +
-        s"join (saw $shS)")
-      assert(shB < bcB, "the conf must actually remove the LUT broadcast")
-      // identical results: same join, different exchange
-      assert(shRows.map(_.toString).sorted.toSeq ===
-        bcRows.map(_.toString).sorted.toSeq)
-    } finally {
-      spark.conf.unset(Ann.LutBroadcastConf)
-      Ann.clearCache()
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    for (name <- Seq("ann_pq_topk", "ann_sq8_topk")) withClue(s"$name: ") {
+      val bc = Ann.queries(name)(spark, sf0001)
+      val bcRows = bc.collect()
+      val (bcB, _) = joins(bc)
+      assert(bcB >= 1, s"default branch must broadcast the sized sides " +
+        s"(saw $bcB broadcasts)")
+      try {
+        spark.conf.set(bcKey, "-1")
+        Ann.clearCache()
+        val sh = Ann.queries(name)(spark, sf0001)
+        val shRows = sh.collect()
+        val (shB, shS) = joins(sh)
+        assert(shS >= 1, s"broadcast-off branch must shuffle-hash the " +
+          s"sized sides (saw $shS)")
+        assert(shB < bcB, "broadcast off must remove the sized broadcasts")
+        // identical results: same join, different exchange
+        assert(shRows.map(_.toString).sorted.toSeq ===
+          bcRows.map(_.toString).sorted.toSeq)
+      } finally {
+        spark.conf.unset(bcKey)
+        Ann.clearCache()
+      }
+    }
+  }
+
+  test("broadcast size rule: every recorded tier decision, and a session " +
+    "with broadcast off shuffle-hashes every side") {
+    import Tables.RowBytes
+    // the prices follow the sides' shapes
+    assert(RowBytes.Adjacency === (ops.Nsw.M + ops.Nsw.F + 2) * 48L)
+    assert(RowBytes.Lut >= Ann.PqM * Ann.PqCw * 8L)
+    // (side, corpus rows, broadcast?) — sf0.1 is n = 2000
+    val table = Seq(
+      (RowBytes.Lut, 2000L, true),
+      (RowBytes.Lut, 63000L, false),
+      (RowBytes.Embedding, 2000L, true),
+      (RowBytes.Embedding, 2000000L, true),
+      (RowBytes.Embedding, 4000000L, false),
+      (RowBytes.PqCodes, 2000L, true),
+      (RowBytes.Adjacency, 2000L, true),
+      (RowBytes.Adjacency, 632000L, false),
+      (RowBytes.Adjacency, 2000000L, false))
+    def decisions = table.map { case (price, n, _) =>
+      Tables.broadcastFits(spark, n, price) }
+    assert(decisions === table.map(_._3))
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    for (off <- Seq("-1", "0")) {
+      spark.conf.set(bcKey, off)
+      try assert(decisions.forall(!_), s"threshold $off")
+      finally spark.conf.unset(bcKey)
     }
   }
 

@@ -160,50 +160,33 @@ class NswSpec extends SparkSpec {
   test("search plan: the beam-grow join is size-gated — broadcast under " +
     "the session threshold, shuffled-hash past it, rows identical (AQE " +
     "on and off)") {
-    // r17: the grow join picks its strategy from the CONSTRUCTIVE
-    // adjacency size bound (n·(M+F+1) edges) against
-    // autoBroadcastJoinThreshold — broadcast while the graph fits (no
-    // per-hop exchanges of the beam), the r16 shuffle-hash layout past
-    // the ceiling. Assert BOTH branches and that they return identical
-    // rows. The per-hop localCheckpoint barrier hides interior hops
-    // from the final plan, so assert on an unbarriered search plan; the
-    // barrier is a lineage device, not a plan change.
-    val key = graft.ops.Ann.IterativeCheckpointConf
+    // the grow join prices the adjacency by construction
+    // (Tables.RowBytes.Adjacency per vertex) against the engine's
+    // broadcast ceiling — broadcast while the graph fits (no per-hop
+    // exchanges of the beam), shuffle-hash past it or when the session
+    // turns broadcast off. Assert BOTH branches on one hop's plan (the
+    // per-hop localCheckpoint barrier hides interior hops from a whole-
+    // search plan) and that they return identical rows.
     val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.getOption(key)
-    val oldBc = spark.conf.getOption(bcKey)
-    def unbarriered() =
-      Nsw.nswTopkAt(spark, sf0001, Nsw.H, Nsw.tunedB(spark, sf0001))
-    try {
-      spark.conf.set(key, "false")
-      withAqeBothWays {
-        // sf0.001 (500 vectors): the bound is ~600 KB — broadcast branch
-        val plan = unbarriered().queryExecution.executedPlan.toString
-        assert(!plan.contains("ShuffledHashJoin"),
-          s"under the threshold the grow join must broadcast:\n" +
-            plan.take(3000))
-        val bRows = unbarriered().collect().map(_.toString)
-        // force the at-scale branch: threshold below any graph
-        spark.conf.set(bcKey, "-1")
-        val plan2 = unbarriered().queryExecution.executedPlan.toString
-        assert(plan2.contains("ShuffledHashJoin"),
-          s"past the threshold the grow join must stay shuffle-hash:\n" +
-            plan2.take(3000))
-        val sRows = unbarriered().collect().map(_.toString)
-        assert(bRows.sameElements(sRows),
-          "grow-join branches must be result-invariant")
-        spark.conf.unset(bcKey)
-      }
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      oldBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
-      }
-    }
+    def oneHop() = Nsw.hop(spark, sf0001, Nsw.entryBeam(spark, sf0001),
+      Nsw.tunedB(spark, sf0001), Nsw.F)
+    try withAqeBothWays {
+      // sf0.001 (500 vectors): the bound is ~600 KB — broadcast branch
+      val plan = oneHop().queryExecution.executedPlan.toString
+      assert(!plan.contains("ShuffledHashJoin"),
+        s"under the ceiling the grow join must broadcast:\n" +
+          plan.take(3000))
+      val bRows = oneHop().collect().map(_.toString).sorted
+      spark.conf.set(bcKey, "-1")
+      val plan2 = oneHop().queryExecution.executedPlan.toString
+      assert(plan2.contains("ShuffledHashJoin"),
+        s"with broadcast off the grow join must shuffle-hash:\n" +
+          plan2.take(3000))
+      val sRows = oneHop().collect().map(_.toString).sorted
+      assert(bRows.sameElements(sRows),
+        "grow-join branches must be result-invariant")
+      spark.conf.unset(bcKey)
+    } finally spark.conf.unset(bcKey)
   }
 
   test("search is deterministic: two runs are row-identical") {
@@ -368,14 +351,14 @@ class NswSpec extends SparkSpec {
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.select($"u", $"v").as[(Long, Long)].collect().sorted.toSeq
     // default branch: broadcast for both endpoint lookups
-    spark.conf.unset(Nsw.EmbBroadcastConf)
     val bc = Nsw.bestM(spark, sf0001, cands)
     val bcPlan = bc.queryExecution.executedPlan.toString
     assert(bcPlan.contains("BroadcastHashJoin"), bcPlan)
     assert(!bcPlan.contains("ShuffledHashJoin"), bcPlan)
-    // at-scale branch: key-partitioned shuffle-hash, no broadcast of
-    // the corpus vectors anywhere
-    spark.conf.set(Nsw.EmbBroadcastConf, "false")
+    // at-scale branch (reached with broadcast off): key-partitioned
+    // shuffle-hash, no broadcast of the corpus vectors anywhere
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(bcKey, "-1")
     try {
       val sh = Nsw.bestM(spark, sf0001, cands)
       val shPlan = sh.queryExecution.executedPlan.toString
@@ -383,7 +366,7 @@ class NswSpec extends SparkSpec {
       assert(!shPlan.contains("BroadcastHashJoin"), shPlan)
       assert(edges(sh) === edges(bc),
         "edge set must be invariant under the exchange strategy")
-    } finally spark.conf.unset(Nsw.EmbBroadcastConf)
+    } finally spark.conf.unset(bcKey)
     // and the heap dedup really bit: each u keeps exactly M distinct vs
     assert(edges(bc).groupBy(_._1).forall { case (_, vs) =>
       vs.size == Nsw.M && vs.distinct.size == Nsw.M })
@@ -454,27 +437,5 @@ class NswSpec extends SparkSpec {
     assert(flatPath.contains("_sc4096_") && !flatPath.contains("_sc4096h"),
       flatPath.substring(flatPath.lastIndexOf("/")))
     assert(hierPath.contains("_sc8192h256_"), hierPath)
-  }
-
-  test("branch confs refuse non-literal booleans loudly (ADVICE r16): " +
-    "'FALSE'/'0'/'off' must not silently take the broadcast branch") {
-    val cands = Seq((0L, 1L), (1L, 0L)).toDF("u", "v")
-    for (bad <- Seq("FALSE ", "0", "off", "no")) {
-      spark.conf.set(Nsw.EmbBroadcastConf, bad)
-      try {
-        val e = bad.trim.toLowerCase(java.util.Locale.ROOT) match {
-          case "true" | "false" => None // accepted spellings — not bad
-          case _ => Some(intercept[IllegalArgumentException] {
-            Nsw.bestM(spark, sf0001, cands).queryExecution.executedPlan
-          })
-        }
-        e.foreach(ex => assert(ex.getMessage.contains(Nsw.EmbBroadcastConf)))
-      } finally spark.conf.unset(Nsw.EmbBroadcastConf)
-    }
-    // case/whitespace-tolerant literals ARE accepted, on both branches
-    spark.conf.set(Nsw.EmbBroadcastConf, " False ")
-    try assert(Nsw.bestM(spark, sf0001, cands).queryExecution
-      .executedPlan.toString.contains("ShuffledHashJoin"))
-    finally spark.conf.unset(Nsw.EmbBroadcastConf)
   }
 }

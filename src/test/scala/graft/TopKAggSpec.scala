@@ -55,24 +55,20 @@ class TopKAggSpec extends SparkSpec {
   test("blocked knn: block count follows the byte budget, results don't") {
     // tiny budget → many blocks; huge budget → the 2-block floor (one
     // block would mean the broadcast layout is the right operator)
-    spark.conf.set(ops.Knn.BlockBytesConf, "4096")
-    val many = ops.Knn.candidateBlocks(spark, sf0001)
-    spark.conf.set(ops.Knn.BlockBytesConf, (1L << 30).toString)
-    val few = ops.Knn.candidateBlocks(spark, sf0001)
+    val many = ops.Knn.candidateBlocks(spark, sf0001, 4096L)
+    val few = ops.Knn.candidateBlocks(spark, sf0001, 1L << 30)
     assert(few == 2 && many > few, s"few=$few many=$many")
     // result invariance across block counts (the partial heaps merge to
     // the same total order no matter how the candidate side is cut)
     val win = ops.Knn.knnTopk(spark, sf0001)
       .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
       .as[(Long, Long, Long, Double)].collect()
-    for (budget <- Seq("4096", (1L << 30).toString)) {
-      spark.conf.set(ops.Knn.BlockBytesConf, budget)
-      val blocked = ops.Knn.knnTopkBlocked(spark, sf0001)
+    for (budget <- Seq(4096L, 1L << 30)) {
+      val blocked = ops.Knn.knnTopkBlockedAt(spark, sf0001, budget)
         .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
         .as[(Long, Long, Long, Double)].collect()
       assert(blocked.sameElements(win), s"diverged at blockBytes=$budget")
     }
-    spark.conf.unset(ops.Knn.BlockBytesConf)
   }
 
   test("buffer serialization round-trips through sorted order") {
