@@ -816,13 +816,15 @@ object Ann {
       s"n${r.getLong(0)}x${r.getLong(1)}b$bytes"
     })
 
+  /** Versioned by every constant the artifact depends on AND a corpus
+    * fingerprint, so neither retuning C/P/M nor an in-place fixture
+    * regeneration can silently serve a stale index. `v2_` is the list
+    * layout ([[writeLists]]; v1 was `cent_id=` directories), so a
+    * leftover v1 index is only ever a superseded [[IndexGc]] version. */
   private def indexPath(s: SparkSession, d: String): String = {
     val root = s.conf.getOption(IndexDirConf)
       .getOrElse("spark-warehouse/graft_ann_index")
-    // the path is versioned by every constant the artifact depends on
-    // AND a corpus fingerprint, so neither retuning C/P/M nor an
-    // in-place fixture regeneration can silently serve a stale index
-    s"$root/v1_C${C}_L${LloydIters}_M${PqM}_Cw${PqCw}_" +
+    s"$root/v2_C${C}_L${LloydIters}_M${PqM}_Cw${PqCw}_" +
       s"${corpusFingerprint(s, d)}_${graft.Tables.dirTag(d)}"
   }
 
@@ -836,11 +838,11 @@ object Ann {
   }
 
   /** BUILD once, idempotently: trained centroids, the inverted lists
-    * (partitioned BY cent_id on disk — the layout that makes a probe
-    * touch only its P/C of the files on a real cluster), and the PQ code
-    * table. The `_BUILT` marker commits the artifact only after all
-    * three tables are fully written, so a killed build re-runs instead
-    * of serving a torso. Everything written is bit-exact arithmetic
+    * (one flat file set clustered by cent_id — see [[writeLists]] for
+    * why not a directory per list), and the PQ code table. The `_BUILT`
+    * marker commits the artifact only after all three tables are fully
+    * written, so a killed build re-runs instead of serving a torso.
+    * Everything written is bit-exact arithmetic
     * (quantized means, IEEE distances), so index-from-disk ≡
     * index-recomputed — which is what lets the indexed queries keep
     * full DuckDB oracles. */
@@ -865,10 +867,7 @@ object Ann {
           IndexGc.buildTmpPath(path))
         trainedCentroids(s, d)
           .write.mode("overwrite").parquet(s"$tmp/centroids")
-        trainedAssignments(s, d)
-          .select(col("vec_id"), col("embedding"), col("cdist"), col("cent_id"))
-          .write.mode("overwrite").partitionBy("cent_id")
-          .parquet(s"$tmp/lists")
+        writeLists(trainedAssignments(s, d), s"$tmp/lists")
         pqCodes(s, d).write.mode("overwrite").parquet(s"$tmp/codes")
         fs.create(new Path(tmp, "_BUILT"), true).close()
         if (!fs.rename(tmp, new Path(path))) {
@@ -886,11 +885,7 @@ object Ann {
     s.read.parquet(s"${ensureIndex(s, d)}/centroids")
 
   private[graft] def storedLists(s: SparkSession, d: String): DataFrame =
-    // cent_id comes back as a partition column (inferred int) — restore
-    // the long type the live assignment table carries
-    s.read.parquet(s"${ensureIndex(s, d)}/lists")
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
-        col("embedding"), col("cdist"))
+    listsAt(s, s"${ensureIndex(s, d)}/lists")
 
   private[graft] def storedCodes(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${ensureIndex(s, d)}/codes")
@@ -971,11 +966,8 @@ object Ann {
         val stored = s.read.parquet(s"$tmp/base/centroids")
         def writeSlice(rows: org.apache.spark.sql.Column, dir: String)
             : Unit = {
-          buildAssignments(s, d, stored, Some(rows))
-            .select(col("vec_id"), col("embedding"), col("cdist"),
-              col("cent_id"))
-            .write.mode("overwrite").partitionBy("cent_id")
-            .parquet(s"$tmp/$dir/lists")
+          writeLists(buildAssignments(s, d, stored, Some(rows)),
+            s"$tmp/$dir/lists")
           pqCodes(s, d).where(rows)
             .write.mode("overwrite").parquet(s"$tmp/$dir/codes")
         }
@@ -993,10 +985,19 @@ object Ann {
     path
   }
 
+  /** One inverted-list file set: flat parquet, `cent_id` a plain long
+    * column, rows clustered by list. Not `partitionBy("cent_id")`: every
+    * probe join reads all lists, and at C = 256 that layout cost each
+    * read a 256-task partition-discovery job plus ~400 tiny-file opens
+    * (measured: most of `ann_ivf_topk_indexed`'s time at n = 500). */
+  private def writeLists(lists: DataFrame, path: String): Unit =
+    lists.select(col("vec_id"), col("cent_id"), col("embedding"), col("cdist"))
+      .repartition(col("cent_id"))
+      .sortWithinPartitions(col("cent_id"), col("vec_id"))
+      .write.mode("overwrite").parquet(path)
+
   private def listsAt(s: SparkSession, p: String): DataFrame =
     s.read.parquet(p)
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
-        col("embedding"), col("cdist"))
 
   /** The maintained inverted lists: base file set ∪ appended delta file
     * set (never a rewrite — reading both IS the merge). */
@@ -1080,8 +1081,8 @@ object Ann {
     if (!fs.exists(marker)) buildLock.synchronized {
       if (!fs.exists(marker)) {
         // the trigger is a fact about the maintained artifact itself
-        val nBase = s.read.parquet(s"$upPath/base/lists").count()
-        val nDelta = s.read.parquet(s"$upPath/delta/lists").count()
+        val nBase = listsAt(s, s"$upPath/base/lists").count()
+        val nDelta = listsAt(s, s"$upPath/delta/lists").count()
         require(nDelta * RetrainDen >= nBase * RetrainNum,
           s"retrain not triggered: delta $nDelta < " +
             s"$RetrainNum/$RetrainDen of base $nBase")
@@ -1093,11 +1094,8 @@ object Ann {
         trainOver(s, Tables.repartitioned(rows, s), C)
           .write.mode("overwrite").parquet(s"$tmp/centroids")
         val stored = s.read.parquet(s"$tmp/centroids")
-        assignOver(s, Tables.repartitioned(rows, s), stored)
-          .select(col("vec_id"), col("embedding"), col("cdist"),
-            col("cent_id"))
-          .write.mode("overwrite").partitionBy("cent_id")
-          .parquet(s"$tmp/lists")
+        writeLists(assignOver(s, Tables.repartitioned(rows, s), stored),
+          s"$tmp/lists")
         // the fine (PQ) codebook is a separate quantizer family; the
         // new version re-encodes under it unchanged, like ensureIndex
         pqCodes(s, d).write.mode("overwrite").parquet(s"$tmp/codes")

@@ -239,6 +239,83 @@ class AnnSpec extends SparkSpec {
     assert(a.sameElements(b), "post-retrain search must equal fresh-build")
   }
 
+  test("ann index read-back ≡ recomputed: stored lists equal the trained " +
+    "assignments, no cast") {
+    val cols = Seq("vec_id", "cent_id", "embedding", "cdist").map(col)
+    val stored = Ann.storedLists(spark, sf0001).select(cols: _*)
+    val live = Ann.trainedAssignments(spark, sf0001).select(cols: _*)
+    assert(stored.schema.map(_.dataType) === live.schema.map(_.dataType))
+    assert(stored.except(live).count() == 0 &&
+           live.except(stored).count() == 0,
+      "inverted lists read back from disk must equal the recomputed ones")
+  }
+
+  test("ivf index layout: one flat list file set — no cent_id= " +
+    "directories, no partition schema, no discovery job at query build") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+    Ann.indexBuild(spark, sf0001).collect()
+    val lists = new Path(s"${Ann.livePaths(spark, sf0001).head}/lists")
+    val fs = lists.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val partDirs = fs.listStatus(lists)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cent_id="))
+    assert(partDirs.isEmpty,
+      s"${partDirs.length} cent_id= directories under $lists")
+
+    // tasks launched while the query DataFrame is BUILT (no action yet);
+    // the group's events are flushed by a sentinel job queued behind them
+    val group = s"layout-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    @volatile var sentinelJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => e.stageIds.foreach(stages.add)
+          case Some(`sentinel`) => sentinelJob = e.jobId
+          case _ =>
+        }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob) flushed.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val q = try {
+      sc.setJobGroup(group, "build ann_ivf_topk_indexed")
+      val q = Ann.ivfTopkIndexed(spark, sf0001)
+      sc.setJobGroup(sentinel, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the sentinel job end")
+      q
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val built = s"${tasks.get} tasks launched while building the query DataFrame"
+    info(built)
+    assert(tasks.get < 16, built)
+
+    val helper = new AdaptiveSparkPlanHelper {}
+    q.write.format("noop").mode("overwrite").save()
+    val listScans = helper.collect(q.queryExecution.executedPlan) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == "lists") => f
+    }
+    assert(listScans.nonEmpty, "no scan of the inverted lists in the plan")
+    listScans.foreach { f =>
+      assert(f.relation.partitionSchema.isEmpty,
+        s"lists scan has partition schema ${f.relation.partitionSchema}")
+    }
+  }
+
   test("sampled recall estimates full recall within a 4σ binomial envelope") {
     // the form that survives 100 TB: exact ground truth on the fnv
     // query sample only; the full-population recall must sit inside the

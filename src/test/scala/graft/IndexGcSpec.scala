@@ -32,6 +32,40 @@ class IndexGcSpec extends SparkSpec {
     assert(IndexGc.familyOf("li_bucketed").isEmpty)
   }
 
+  test("a v1 (partitioned-lists) index beside the v2 serving index is a " +
+    "superseded ivf version, never serving") {
+    val oldRoot = spark.conf.getOption(Ann.IndexDirConf)
+    val root = "spark-warehouse/graft_gc_test_" +
+      java.util.UUID.randomUUID.toString.take(8)
+    spark.conf.set(Ann.IndexDirConf, root)
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    try {
+      val v2 = new Path(Ann.livePaths(spark, sf0001).head).getName
+      assert(v2.startsWith("v2_"), s"serving index $v2 is not layout v2")
+      val v1 = "v1_" + v2.stripPrefix("v2_")
+      // GC reads only names and _BUILT markers, never the data files
+      Seq(v1, v2).foreach(n => fs.create(new Path(s"$root/$n/_BUILT")).close())
+      assert(IndexGc.familyOf(v1) === IndexGc.familyOf(v2))
+
+      val kept = IndexGc.gcIndexRoot(spark, Seq(sf0001), keepN = 1,
+        graceMs = 0L).map(a => new Path(a.path).getName -> a).toMap
+      assert(kept(v2).action === "kept_serving")
+      assert(kept(v1).action === "kept_recent", kept(v1).toString)
+      assert(kept(v1).family.startsWith("ivf/main/"))
+
+      val swept = IndexGc.gcIndexRoot(spark, Seq(sf0001), keepN = 0,
+        graceMs = 0L).map(a => new Path(a.path).getName -> a.action).toMap
+      assert(swept === Map(v2 -> "kept_serving", v1 -> "deleted"))
+    } finally {
+      oldRoot match {
+        case Some(v) => spark.conf.set(Ann.IndexDirConf, v)
+        case None => spark.conf.unset(Ann.IndexDirConf)
+      }
+      fs.delete(new Path(root), true)
+    }
+  }
+
   test("retention GC: serving protected absolutely, keepN then grace " +
     "protect superseded, deletions beyond both; search bit-identical") {
     val oldRoot = spark.conf.getOption(Ann.IndexDirConf)
