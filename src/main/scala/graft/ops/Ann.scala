@@ -19,16 +19,18 @@ import graft.functions.VectorExpressions
   *     trained index is bit-reproducible on any engine — which is what
   *     lets even the TRAINED approximate query carry a DuckDB oracle.
   *  2. Assign: every candidate vector joins its nearest centroid — one
-  *     broadcast join over C rows, O(n·C) distance evaluations, then the
-  *     inverted lists are exactly a hash partitioning by cent_id.
-  *  3. Probe: each query scans only the P nearest inverted lists —
-  *     O(n·P/C) of the pair space instead of O(n²).
+  *     broadcast join over C rows, O(n·C) distance evaluations; the
+  *     inverted lists are the (vec_id, cent_id) rows grouped by cent_id.
+  *  3. Probe: each query scores only the vectors of its P nearest
+  *     inverted lists — O(n·P/C) of the pair space instead of O(n²).
   *
-  * At 100 TB the assignment table is bucketed/partitioned by cent_id so a
-  * probe touches only P partitions; recall/cost is tuned with (C, P).
-  * Every query here is deterministic end-to-end (fixed seed pick, exact
-  * arithmetic, total-order tie-breaks) and oracle-checked; `ann_recall*`
-  * reports recall@K against the exact ops.Knn top-k as integer counts.
+  * The probe join ([[probeJoin]]) still READS every list: no plan here
+  * prunes lists by cent_id (measured on the stored index, whose lists
+  * are one cent_id-clustered file set); the saving is in the pair space
+  * scored, tuned with (C, P). Every query here is deterministic
+  * end-to-end (fixed seed pick, exact arithmetic, total-order
+  * tie-breaks) and oracle-checked; `ann_recall*` reports recall@K
+  * against the exact ops.Knn top-k as integer counts.
   */
 object Ann {
   /** (C, P) retuned in round 9 for the production recall bar: trained
@@ -156,31 +158,15 @@ object Ann {
         col("embedding"), col("m").getItem(0).getField("dist").as("cdist"))
   }
 
-  /** One Lloyd's round: argmin-assign to `cents`, then the quantized
-    * elementwise mean per cluster (see `Quant`). Empty clusters keep
-    * their previous centroid. The mean shuffles only (C·dim) partial
-    * sums — map-side combine does the heavy lifting, the scale shape of
-    * distributed k-means. */
+  /** One Lloyd's round: argmin-assign to `cents` ([[assignOver]]; the
+    * optimizer prunes the vec_id and cdist columns this round does not
+    * read), then the quantized elementwise mean per
+    * cluster (see `Quant`). Empty clusters keep their previous centroid.
+    * The mean shuffles only (C·dim) partial sums — map-side combine does
+    * the heavy lifting, the scale shape of distributed k-means. */
   private def refineOnce(s: SparkSession, e: DataFrame,
       cents: DataFrame): DataFrame = {
-    // same heap-argmin as buildAssignments (one definition of the
-    // assignment rule would be circular here: this one drops cdist) —
-    // and the same SortAggregate trap (see assignOver): at the retuned
-    // training C of a rehearsal tier this runs per Lloyd iteration, so
-    // a min_by here sorts n·C rows four times per build
-    // group key narrowed to vec_id + first(embedding), as in assignOver
-    // (r18): the array-valued grouping key hashed ~260 B per candidate
-    // row, four times per training pass
-    val assign = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cent_id"),
-        VectorExpressions.cosine_distance(s, col("embedding"), col("cent_vec"))
-          .as("cdist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.top_k_by(s,
-        col("cdist"), col("cent_id"), lit(0), 1).as("m"),
-        first(col("embedding")).as("embedding"))
-      .select(col("m").getItem(0).getField("id").as("cent_id"),
-        col("embedding"))
+    val assign = assignOver(s, e, cents).select(col("cent_id"), col("embedding"))
     val means = quantizedMeans(assign, "cent_id").withColumnRenamed("mean_vec", "new_vec")
     cents.join(means, Seq("cent_id"), "left")
       .select(col("cent_id"),
@@ -375,7 +361,7 @@ object Ann {
     * carries partial heaps and nothing is ever sorted. Same NaN-total
     * (dist, cid) comparator as the window ⇒ identical rows, ranks and
     * hashes. */
-  private def heapTopK(s: SparkSession, scored: DataFrame): DataFrame =
+  private[graft] def heapTopK(s: SparkSession, scored: DataFrame): DataFrame =
     scored.groupBy(col("qid"))
       .agg(graft.functions.TopKAgg.top_k_by(s,
         col("dist"), col("cid"), lit(0), K).as("top"))
@@ -447,30 +433,72 @@ object Ann {
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("cid"))
 
-  /** IVF approximate top-k under `cents`/`lists`: probe the `p` nearest
-    * lists per query, exact cosine within the probed lists. Leave-one-out
-    * like knn_topk. */
-  private def ivfTopkFrom(s: SparkSession, d: String, cents: DataFrame,
-      lists: DataFrame, p: Int,
-      qWhere: Option[org.apache.spark.sql.Column] = None,
-      qOnly: Option[DataFrame] = None): DataFrame = {
-    val probes = probesOf(s, d, cents, p, qWhere, qOnly)
-    val inv = lists
-      .select(col("cent_id"), col("vec_id").as("cid"), col("embedding").as("cv"))
-    // The inverted lists are the DATASET — never broadcast them. A
-    // shuffle-hash join partitions both sides by cent_id, i.e. each probe
-    // is routed to exactly the partitions holding its P lists; on a
-    // cluster `lists` would be bucketed by cent_id so only the probe side
-    // moves. (The hint also stops the optimizer from choosing broadcast
-    // at test scale, keeping the physical shape scale-faithful.)
-    // Top-K via the bounded heap (r17): the probed candidate stream is
-    // n·p/C rows per query and the window form sorted ALL of it per
-    // partition; see [[heapTopK]].
-    heapTopK(s, probes.join(inv.hint("shuffle_hash"), Seq("cent_id"))
-      .where(col("qid") =!= col("cid"))
+  /** THE quantized cut + exact rerank of every compressed tier (PQ,
+    * IVFPQ, SQ8, IVF×SQ8): keep each query's
+    * `greatest(PqRerankMin, n·cutNum DIV cutDen)` best candidates under
+    * the quantized `score` ([[heapCut]], limit from [[rerankLimit]]),
+    * then exact cosine over the survivors and the final heap top-K →
+    * (qid, rnk, cid, dist). Both cuts are heap form with plan-time
+    * limits (r17): the old runtime-column limit (agg + crossJoin)
+    * blinded every bound pushdown, so the full scored pair stream was
+    * sorted per partition, exchanged whole, and sorted again. The flat
+    * scans cut n/10; the composed tiers cut to the PROBED volume — a
+    * fixed global fraction would mis-size the cut once routing has
+    * already discarded most of the corpus. */
+  private def rerankTopk(s: SparkSession, d: String, scored: DataFrame,
+      score: String, cutNum: Int, cutDen: Int): DataFrame = {
+    val cands = heapCut(s, scored, score, rerankLimit(s, d, cutNum, cutDen))
+    val q = rerankEmbSide(s, d, Tables.embeddings(s, d)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv")))
+    val c = rerankEmbSide(s, d, Tables.embeddings(s, d)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv")))
+    heapTopK(s, cands.join(q, Seq("qid")).join(c, Seq("cid"))
       .select(col("qid"), col("cid"),
         VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
   }
+
+  /** The flat quantized scans' query side (PQ and SQ8): `side`'s rows
+    * hashed by qid into [[cutPartitions]] partitions for the n/10 cut.
+    * The keyed repartition (r17, the Knn.pairs move) both parallelizes
+    * the n² scan — the bare scan arrives as ONE input partition at
+    * fixture scale — and lets the qid-keyed heap cut aggregate with
+    * zero exchanges below the scan's nested-loop join. */
+  private def flatQuerySide(s: SparkSession, d: String,
+      side: DataFrame): DataFrame =
+    side.repartition(cutPartitions(s,
+      Tables.footerRowCount(s, s"$d/embeddings.parquet"),
+      rerankLimit(s, d, 1, PqRerankDiv)), col("qid"))
+
+  /** THE list-probe join of every IVF tier and of the NSW seed cells:
+    * probe rows meet inverted-list rows on cent_id. The lists are the
+    * DATASET, so they are never broadcast: the `shuffle_hash` hint
+    * partitions both sides by cent_id and builds the hash side per
+    * partition, and it stops the optimizer from broadcasting the lists
+    * at test scale, keeping the physical shape scale-faithful. Every
+    * list is still read — no plan prunes lists by cent_id. */
+  private[graft] def probeJoin(probes: DataFrame, lists: DataFrame): DataFrame =
+    probes.join(lists.hint("shuffle_hash"), Seq("cent_id"))
+
+  /** Leave-one-out (qid, cid, listCols…) candidates: every probe row
+    * (qid, qv, cent_id — [[probesOf]]) paired with the members of its
+    * list. `listCols` are further list columns to carry. */
+  private def probedCandidates(probes: DataFrame, lists: DataFrame,
+      listCols: Seq[org.apache.spark.sql.Column]): DataFrame =
+    probeJoin(probes,
+        lists.select(col("cent_id") +: col("vec_id").as("cid") +: listCols: _*))
+      .where(col("qid") =!= col("cid"))
+
+  /** IVF approximate top-k under `cents`/`lists`: probe the `p` nearest
+    * lists per query, exact cosine within the probed lists. Leave-one-out
+    * like knn_topk. Top-K via the bounded heap (r17): the probed
+    * candidate stream is n·p/C rows per query; see [[heapTopK]]. */
+  private def ivfTopkFrom(s: SparkSession, d: String, cents: DataFrame,
+      lists: DataFrame, p: Int,
+      qOnly: Option[DataFrame] = None): DataFrame =
+    heapTopK(s, probedCandidates(probesOf(s, d, cents, p, qOnly = qOnly),
+        lists, Seq(col("embedding").as("cv")))
+      .select(col("qid"), col("cid"),
+        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
 
   def ivfTopk(s: SparkSession, d: String): DataFrame =
     ivfTopkFrom(s, d, centroids(s, d), assignments(s, d), P)
@@ -548,29 +576,11 @@ object Ann {
   val PqRerankMin = 50
   val PqRerankDiv = 10
 
-  /** The PQ tier: flat (IndexPQ-style) scan over asymmetric-distance
-    * codes + exact re-rank — the memory-compression companion to IVF's
-    * list pruning. A PQ scan still touches every vector, but reads M
-    * table lookups (the per-query LUT is M·Cw distances, broadcast)
-    * instead of the full float vector; the classic production
-    * composition is IVF to prune lists THEN PQ within them (FAISS
-    * IVFPQ) — both halves exist here independently, each oracled.
-    *
-    * Distance semantics: embeddings are unit-norm (asserted in AnnSpec),
-    * so squared L2 = 2 − 2·cos is strictly monotone in cosine distance —
-    * ADC = Σₘ ‖qₘ − codeword(codeₘ)‖² ranks candidates for the cosine
-    * ground truth, and the exact cosine re-rank of the top [[PqRerank]]
-    * restores exact distances at the cut. Every float op (subspace
-    * euclidean, square, the M-term left-fold sum, cosine) is written in
-    * the same order in both engines, so results stay hash-exact. */
-  /** (id, cw_id, s0..s{M−1}) for M = [[PqM]]: per-subspace euclidean distances of every
-    * vector against every codeword — shared by encoding (argmin per
-    * subspace) and the query LUT (squares). n·Cw map-side rows. */
-  /** [[pqSubDists]] handle for the PqProf diagnostic (no query path). */
-  private[graft] def pqSubDistsProbe(s: SparkSession, d: String): DataFrame =
-    pqSubDists(s, d)
-
-  private def pqSubDists(s: SparkSession, d: String): DataFrame =
+  /** (vec_id, cw_id, s0..s{M−1}) for M = [[PqM]]: per-subspace
+    * euclidean distances of every vector against every codeword —
+    * shared by encoding (argmin per subspace) and the query LUT
+    * (squares). n·Cw map-side rows. */
+  private[graft] def pqSubDists(s: SparkSession, d: String): DataFrame =
     // session-cached: every PQ query consumes this table TWICE (the
     // code argmin and the query LUT are both views of it) and Spark
     // does not reuse aliased subtrees — uncached, the n·Cw distance
@@ -608,21 +618,27 @@ object Ann {
     pqSubDists(s, d).groupBy(col("vec_id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** ADC top-[[PqRerank]] then exact cosine re-rank → (qid, rnk, cid,
-    * dist). The per-query LUT (squared sub-distances) is joined into
-    * [[PqM]] hash joins against the code table — the Spark rendering of
-    * PQ's table-lookup scan loop. */
+  /** The PQ tier: flat (IndexPQ-style) scan over asymmetric-distance
+    * codes + exact re-rank → (qid, rnk, cid, dist) — the
+    * memory-compression companion to IVF's list pruning. A PQ scan
+    * still touches every vector, but reads M table lookups (the
+    * per-query LUT is M·Cw distances, broadcast) instead of the full
+    * float vector; the classic production composition is IVF to prune
+    * lists THEN PQ within them (FAISS IVFPQ) — both halves exist here
+    * independently, each oracled.
+    *
+    * Distance semantics: embeddings are unit-norm (asserted in AnnSpec),
+    * so squared L2 = 2 − 2·cos is strictly monotone in cosine distance —
+    * ADC = Σₘ ‖qₘ − codeword(codeₘ)‖² ranks candidates for the cosine
+    * ground truth, and the exact cosine re-rank of the top
+    * [[rerankLimit]] restores exact distances at the cut. Every float op
+    * (subspace euclidean, square, the M-term left-fold sum, cosine) is
+    * written in the same order in both engines, so results stay
+    * hash-exact. */
   private def pqRerankTopk(s: SparkSession, d: String): DataFrame = {
-    // keyed repartition (r17): the bare scan arrives as ONE input
-    // partition at fixture scale, so the whole n² ADC pair scan ran in
-    // a single task; hashing by qid both parallelizes it and (the
-    // Knn.pairs move) lets the ADC heap cut aggregate with zero
-    // exchanges below the BNLJ.
-    // partition count derived from (n, cut size) — see [[cutPartitions]]
     val n = Tables.footerRowCount(s, s"$d/embeddings.parquet")
-    val queries = Tables.embeddings(s, d).select(col("vec_id").as("qid"))
-      .repartition(cutPartitions(s, n,
-        rerankLimit(s, d, 1, PqRerankDiv)), col("qid"))
+    val queries = flatQuerySide(s, d,
+      Tables.embeddings(s, d).select(col("vec_id").as("qid")))
     // Broadcast the CODE side explicitly (r18, guide §3.1 — the sq8Topk
     // twin): left to its size estimates the planner broadcast the
     // (smaller) bare-qid QUERY side and streamed the codes, so the pair
@@ -642,19 +658,15 @@ object Ann {
       if (Tables.broadcastFits(s, n, Tables.RowBytes.PqCodes)) broadcast(cside)
       else cside
     val pairs = queries.join(csideSized, col("qid") =!= col("cid"))
-    adcRerankTopk(s, d, pairs)
+    rerankTopk(s, d, adcScored(s, d, pairs), "adc", 1, PqRerankDiv)
   }
 
-  /** ADC-score `pairs` (qid, cid, code0..codeM-1), keep the ADC
-    * top-`greatest(PqRerankMin, n·cutNum/cutDen)` per query, exact-cosine
-    * re-rank to K. Shared by the flat PQ scan (all pairs; cut n/10) and
-    * the IVFPQ composition (probed pairs only; cut scaled to the PROBED
-    * candidate count — see [[ivfpqTopkFrom]]): a fixed global fraction
-    * would mis-size the cut once routing has already discarded most of
-    * the corpus. */
-  private def adcRerankTopk(s: SparkSession, d: String,
-      pairs: DataFrame, cutNum: Int = 1,
-      cutDen: Int = PqRerankDiv): DataFrame = {
+  /** ADC-score `pairs` (qid, cid, code0..codeM-1) → (qid, cid, adc):
+    * the LUT half of the PQ tiers, shared by the flat scan (all pairs)
+    * and the IVFPQ composition (probed pairs only); both then go
+    * through [[rerankTopk]]. */
+  private def adcScored(s: SparkSession, d: String,
+      pairs: DataFrame): DataFrame = {
     // The per-query LUT in the layout PQ serving engines actually use:
     // ONE row per query carrying M arrays of Cw squared sub-distances,
     // indexed positionally by codeword id (sort_array pins cw order).
@@ -691,23 +703,11 @@ object Ann {
     val adcSum = (0 until PqM).map(m =>
         element_at(col(s"lut$m"), col(s"code$m").cast("int") + 1))
       .reduce(_ + _)
-    val scored = pairs.join(lutSide, Seq("qid"))
+    pairs.join(lutSide, Seq("qid"))
       .select(col("qid"), col("cid"),
         coalesce(adcSum, raise_error(lit(
           "ADC LUT lookup returned null - non-contiguous codeword ids?"))
           .cast("double")).as("adc"))
-    // ADC cut + exact re-rank, both heap form with plan-time limits
-    // (r17): the old runtime-column rlim (agg + crossJoin) blinded every
-    // bound pushdown, so the full ADC-scored pair stream was sorted per
-    // partition, exchanged whole, and sorted again — see [[rerankLimit]].
-    val cands = heapCut(s, scored, "adc", rerankLimit(s, d, cutNum, cutDen))
-    val q = rerankEmbSide(s, d, Tables.embeddings(s, d)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val c = rerankEmbSide(s, d, Tables.embeddings(s, d)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-    heapTopK(s, cands.join(q, Seq("qid")).join(c, Seq("cid"))
-      .select(col("qid"), col("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
   }
 
   def pqTopk(s: SparkSession, d: String): DataFrame = pqRerankTopk(s, d)
@@ -722,25 +722,19 @@ object Ann {
     * (list recall × ADC rank noise) multiply, so its recall is bounded
     * by its routing tier's — measured alongside it by
     * `ann_ivfpq_recall`, law-tested ≤ routing recall. Candidates route
-    * by cent_id exactly as in ivfTopk (shuffle-hash, lists never
-    * broadcast). */
+    * through [[probedCandidates]], like ivfTopk. */
   private[graft] def ivfpqTopkFrom(s: SparkSession, d: String,
       cents: DataFrame, lists: DataFrame, p: Int,
       codes: Option[DataFrame] = None, nLists: Int = C): DataFrame = {
-    val probes = probesOf(s, d, cents, p)
-      .select(col("qid"), col("cent_id"))
-    val inv = lists
-      .select(col("cent_id"), col("vec_id").as("cid"))
-    val cand = probes.join(inv.hint("shuffle_hash"), Seq("cent_id"))
-      .where(col("qid") =!= col("cid"))
+    val cand = probedCandidates(probesOf(s, d, cents, p), lists, Nil)
       .select(col("qid"), col("cid"))
+    val scored = adcScored(s, d, cand.join(codes.getOrElse(pqCodes(s, d))
+      .withColumnRenamed("vec_id", "cid"), Seq("cid")))
     // re-rank cut scaled to the PROBED pair count: each query carries
     // ≈ n·p/C candidates, and the exact re-rank takes half of them —
     // the flat-scan lesson (fixed cuts decay with n) applied to the
     // composed tier, where the decaying quantity is probed volume
-    adcRerankTopk(s, d, cand.join(codes.getOrElse(pqCodes(s, d))
-      .withColumnRenamed("vec_id", "cid"), Seq("cid")),
-      cutNum = p, cutDen = 2 * nLists)
+    rerankTopk(s, d, scored, "adc", p, 2 * nLists)
   }
 
   /** Probed lists for the composed IVFPQ tier. Wider than plain IVF's P
@@ -785,11 +779,10 @@ object Ann {
 
   // ------------------------------------------------ stored index (r10)
 
-  /** Root directory for persisted ANN indexes (cwd-relative by default —
-    * the same place Spark's own warehouse lives). On a cluster this
-    * would be a table location; locally it's the write half of the
-    * production lifecycle: TRAIN/ASSIGN/ENCODE once, persist, then every
-    * query session pays probe cost only. */
+  /** Root directory for persisted ANN indexes, read through
+    * [[IndexGc.root]]: the write half of the production lifecycle —
+    * TRAIN/ASSIGN/ENCODE once, persist, then every query session pays
+    * probe cost only. */
   val IndexDirConf = "spark.graft.ann.indexDir"
 
   /** Cheap corpus fingerprint (row count + max vec_id + total parquet
@@ -821,12 +814,9 @@ object Ann {
     * regeneration can silently serve a stale index. `v2_` is the list
     * layout ([[writeLists]]; v1 was `cent_id=` directories), so a
     * leftover v1 index is only ever a superseded [[IndexGc]] version. */
-  private def indexPath(s: SparkSession, d: String): String = {
-    val root = s.conf.getOption(IndexDirConf)
-      .getOrElse("spark-warehouse/graft_ann_index")
-    s"$root/v2_C${C}_L${LloydIters}_M${PqM}_Cw${PqCw}_" +
+  private def indexPath(s: SparkSession, d: String): String =
+    s"${IndexGc.root(s)}/v2_C${C}_L${LloydIters}_M${PqM}_Cw${PqCw}_" +
       s"${corpusFingerprint(s, d)}_${graft.Tables.dirTag(d)}"
-  }
 
   /** Every path the CURRENT resolution rule can hand a reader for this
     * dataset — the IVF lifecycle's serving set, protected absolutely by
@@ -839,47 +829,20 @@ object Ann {
 
   /** BUILD once, idempotently: trained centroids, the inverted lists
     * (one flat file set clustered by cent_id — see [[writeLists]] for
-    * why not a directory per list), and the PQ code table. The `_BUILT`
-    * marker commits the artifact only after all three tables are fully
+    * why not a directory per list), and the PQ code table, committed by
+    * [[IndexGc.commitOnce]] only after all three tables are fully
     * written, so a killed build re-runs instead of serving a torso.
     * Everything written is bit-exact arithmetic
     * (quantized means, IEEE distances), so index-from-disk ≡
     * index-recomputed — which is what lets the indexed queries keep
     * full DuckDB oracles. */
-  /** In-JVM guard so two sessions hitting the same unbuilt path can
-    * never interleave writes; combined with build-into-temp + one atomic
-    * directory rename below, a reader either sees no index (and builds)
-    * or a fully-committed one — never a half-written lists directory.
-    * Cross-JVM writers racing on the same local warehouse dir are out of
-    * contract (a cluster deployment would build through its table
-    * catalog's transaction instead). */
-  private val buildLock = new Object
-
-  private def ensureIndex(s: SparkSession, d: String): String = {
-    import org.apache.hadoop.fs.Path
-    val path = indexPath(s, d)
-    val marker = new Path(path, "_BUILT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) buildLock.synchronized {
-      if (!fs.exists(marker)) {
-        // build into a temp sibling, commit via one atomic rename
-        val tmp = new Path(
-          IndexGc.buildTmpPath(path))
-        trainedCentroids(s, d)
-          .write.mode("overwrite").parquet(s"$tmp/centroids")
-        writeLists(trainedAssignments(s, d), s"$tmp/lists")
-        pqCodes(s, d).write.mode("overwrite").parquet(s"$tmp/codes")
-        fs.create(new Path(tmp, "_BUILT"), true).close()
-        if (!fs.rename(tmp, new Path(path))) {
-          // a racing external writer won; serve theirs if committed
-          fs.delete(tmp, true)
-          if (!fs.exists(marker)) throw new IllegalStateException(
-            s"ANN index commit failed and no committed index at $path")
-        }
-      }
+  private def ensureIndex(s: SparkSession, d: String): String =
+    IndexGc.commitOnce(s, indexPath(s, d)) { tmp =>
+      trainedCentroids(s, d)
+        .write.mode("overwrite").parquet(s"$tmp/centroids")
+      writeLists(trainedAssignments(s, d), s"$tmp/lists")
+      pqCodes(s, d).write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    path
-  }
 
   private[graft] def storedCentroids(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${ensureIndex(s, d)}/centroids")
@@ -890,14 +853,18 @@ object Ann {
   private[graft] def storedCodes(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${ensureIndex(s, d)}/codes")
 
+  /** Inverted-list census — (cent_id, list_size) per list, ordered. */
+  private def listCensus(lists: DataFrame): DataFrame =
+    lists.groupBy(col("cent_id"))
+      .agg(count(lit(1)).as("list_size"))
+      .orderBy(col("cent_id"))
+
   /** ann_index_build: run the BUILD half and describe the artifact —
     * the trained inverted-list census, read back from the files just
     * written (so the declared row is a fact about the persisted index,
     * not about an in-memory intermediate). */
   def indexBuild(s: SparkSession, d: String): DataFrame =
-    storedLists(s, d).groupBy(col("cent_id"))
-      .agg(count(lit(1)).as("list_size"))
-      .orderBy(col("cent_id"))
+    listCensus(storedLists(s, d))
 
   /** ann_ivf_topk_indexed: the QUERY half — identical semantics (and
     * oracle SQL) to ann_ivf_topk_trained, but consuming the persisted
@@ -949,41 +916,24 @@ object Ann {
     * quantizer), incrementally-maintained ≡ rebuilt-from-scratch
     * BIT-EXACT (the b40 monoid-merge story for the index; law-tested in
     * AnnSpec, ScaleCheck-gated at sf1) — which is what lets the
-    * upserted queries keep full DuckDB oracles. Same atomic
-    * temp-dir + rename + `_BUILT` commit as [[ensureIndex]]. */
-  private def ensureUpsertedIndex(s: SparkSession, d: String): String = {
-    import org.apache.hadoop.fs.Path
-    val path = s"${indexPath(s, d)}_upsert"
-    val marker = new Path(path, "_BUILT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) buildLock.synchronized {
-      if (!fs.exists(marker)) {
-        val cut = upsertCut(s, d)
-        val tmp = new Path(
-          IndexGc.buildTmpPath(path))
-        baseTrainedCentroids(s, d)
-          .write.mode("overwrite").parquet(s"$tmp/base/centroids")
-        val stored = s.read.parquet(s"$tmp/base/centroids")
-        def writeSlice(rows: org.apache.spark.sql.Column, dir: String)
-            : Unit = {
-          writeLists(buildAssignments(s, d, stored, Some(rows)),
-            s"$tmp/$dir/lists")
-          pqCodes(s, d).where(rows)
-            .write.mode("overwrite").parquet(s"$tmp/$dir/codes")
-        }
-        writeSlice(col("vec_id") < cut, "base")
-        // the incremental phase: ONLY the arriving batch is scored
-        writeSlice(col("vec_id") >= cut, "delta")
-        fs.create(new Path(tmp, "_BUILT"), true).close()
-        if (!fs.rename(tmp, new Path(path))) {
-          fs.delete(tmp, true)
-          if (!fs.exists(marker)) throw new IllegalStateException(
-            s"ANN upsert-index commit failed and no committed index at $path")
-        }
+    * upserted queries keep full DuckDB oracles. Committed by
+    * [[IndexGc.commitOnce]], like [[ensureIndex]]. */
+  private def ensureUpsertedIndex(s: SparkSession, d: String): String =
+    IndexGc.commitOnce(s, s"${indexPath(s, d)}_upsert") { tmp =>
+      val cut = upsertCut(s, d)
+      baseTrainedCentroids(s, d)
+        .write.mode("overwrite").parquet(s"$tmp/base/centroids")
+      val stored = s.read.parquet(s"$tmp/base/centroids")
+      def writeSlice(rows: org.apache.spark.sql.Column, dir: String): Unit = {
+        writeLists(buildAssignments(s, d, stored, Some(rows)),
+          s"$tmp/$dir/lists")
+        pqCodes(s, d).where(rows)
+          .write.mode("overwrite").parquet(s"$tmp/$dir/codes")
       }
+      writeSlice(col("vec_id") < cut, "base")
+      // the incremental phase: ONLY the arriving batch is scored
+      writeSlice(col("vec_id") >= cut, "delta")
     }
-    path
-  }
 
   /** One inverted-list file set: flat parquet, `cent_id` a plain long
     * column, rows clustered by list. Not `partitionBy("cent_id")`: every
@@ -1025,9 +975,7 @@ object Ann {
     * declared fact about the post-upsert artifact (every row of base ∪
     * delta, keyed by the frozen quantizer's cells). */
   def indexUpsert(s: SparkSession, d: String): DataFrame =
-    upsertedLists(s, d).groupBy(col("cent_id"))
-      .agg(count(lit(1)).as("list_size"))
-      .orderBy(col("cent_id"))
+    listCensus(upsertedLists(s, d))
 
   /** ann_ivf_topk_upserted: IVF search over the maintained index —
     * probes route through the FROZEN base-trained centroids into the
@@ -1070,44 +1018,29 @@ object Ann {
     * training rule is a pure function of the (vec_id, embedding) set,
     * the retrained index ≡ the fresh full-corpus build BIT-EXACT
     * (post-retrain search ≡ fresh-build search — the lifecycle law
-    * AnnSpec asserts and the DuckDB oracle certifies). Same atomic
-    * temp-dir + rename + `_BUILT` commit as [[ensureIndex]]. */
+    * AnnSpec asserts and the DuckDB oracle certifies). Committed by
+    * [[IndexGc.commitOnce]], like [[ensureIndex]]. */
   private def ensureRetrainedIndex(s: SparkSession, d: String): String = {
-    import org.apache.hadoop.fs.Path
     val upPath = ensureUpsertedIndex(s, d)
-    val path = s"${indexPath(s, d)}_retrain"
-    val marker = new Path(path, "_BUILT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) buildLock.synchronized {
-      if (!fs.exists(marker)) {
-        // the trigger is a fact about the maintained artifact itself
-        val nBase = listsAt(s, s"$upPath/base/lists").count()
-        val nDelta = listsAt(s, s"$upPath/delta/lists").count()
-        require(nDelta * RetrainDen >= nBase * RetrainNum,
-          s"retrain not triggered: delta $nDelta < " +
-            s"$RetrainNum/$RetrainDen of base $nBase")
-        val rows = listsAt(s, s"$upPath/base/lists")
-          .unionByName(listsAt(s, s"$upPath/delta/lists"))
-          .select(col("vec_id"), col("embedding"))
-        val tmp = new Path(
-          IndexGc.buildTmpPath(path))
-        trainOver(s, Tables.repartitioned(rows, s), C)
-          .write.mode("overwrite").parquet(s"$tmp/centroids")
-        val stored = s.read.parquet(s"$tmp/centroids")
-        writeLists(assignOver(s, Tables.repartitioned(rows, s), stored),
-          s"$tmp/lists")
-        // the fine (PQ) codebook is a separate quantizer family; the
-        // new version re-encodes under it unchanged, like ensureIndex
-        pqCodes(s, d).write.mode("overwrite").parquet(s"$tmp/codes")
-        fs.create(new Path(tmp, "_BUILT"), true).close()
-        if (!fs.rename(tmp, new Path(path))) {
-          fs.delete(tmp, true)
-          if (!fs.exists(marker)) throw new IllegalStateException(
-            s"ANN retrain commit failed and no committed index at $path")
-        }
-      }
+    IndexGc.commitOnce(s, s"${indexPath(s, d)}_retrain") { tmp =>
+      // the trigger is a fact about the maintained artifact itself
+      val nBase = listsAt(s, s"$upPath/base/lists").count()
+      val nDelta = listsAt(s, s"$upPath/delta/lists").count()
+      require(nDelta * RetrainDen >= nBase * RetrainNum,
+        s"retrain not triggered: delta $nDelta < " +
+          s"$RetrainNum/$RetrainDen of base $nBase")
+      val rows = listsAt(s, s"$upPath/base/lists")
+        .unionByName(listsAt(s, s"$upPath/delta/lists"))
+        .select(col("vec_id"), col("embedding"))
+      trainOver(s, Tables.repartitioned(rows, s), C)
+        .write.mode("overwrite").parquet(s"$tmp/centroids")
+      val stored = s.read.parquet(s"$tmp/centroids")
+      writeLists(assignOver(s, Tables.repartitioned(rows, s), stored),
+        s"$tmp/lists")
+      // the fine (PQ) codebook is a separate quantizer family; the
+      // new version re-encodes under it unchanged, like ensureIndex
+      pqCodes(s, d).write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    path
   }
 
   private[graft] def retrainedCentroids(s: SparkSession, d: String)
@@ -1122,9 +1055,7 @@ object Ann {
     * build's census (the lifecycle law), which is exactly what its
     * oracle asserts. */
   def indexRetrain(s: SparkSession, d: String): DataFrame =
-    retrainedLists(s, d).groupBy(col("cent_id"))
-      .agg(count(lit(1)).as("list_size"))
-      .orderBy(col("cent_id"))
+    listCensus(retrainedLists(s, d))
 
   /** ann_ivf_topk_retrained: search over the retrained version — must
     * equal fresh-build search bit-exactly (shares the trained oracle). */
@@ -1146,11 +1077,9 @@ object Ann {
       .orderBy(col("m"), col("code"))
   }
 
-  /** Inverted-list census — list sizes per centroid (skew visibility). */
+  /** The seed index's list census (skew visibility). */
   def ivfStats(s: SparkSession, d: String): DataFrame =
-    assignments(s, d).groupBy(col("cent_id"))
-      .agg(count(lit(1)).as("list_size"))
-      .orderBy(col("cent_id"))
+    listCensus(assignments(s, d))
 
   /** recall@K of an approximate top-k against the exact ops.Knn top-k —
     * pure integer counts plus one division, so the quality of the
@@ -1242,16 +1171,11 @@ object Ann {
     // exact ground truth for the sample, heap cut (r17): the n_s·n
     // scored stream is never sorted; same (dist, cid) order as the
     // window it replaces
-    val exact = c.crossJoin(broadcast(qs))
+    val exact = heapCut(s, c.crossJoin(broadcast(qs))
       .where(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorExpressions.cosine_distance(s, col("qv"), col("cv"))
-          .as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.top_k_by(s,
-        col("dist"), col("cid"), lit(0), K).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.id").as("cid"))
+          .as("dist")), "dist", K)
     val approx = ivfTopkFrom(s, d, trainedCentroids(s, d),
       trainedAssignments(s, d), P,
       qOnly = Some(qs.select(col("qid").as("vec_id"))))
@@ -1287,8 +1211,9 @@ object Ann {
     * order-maximum — a survivor always exists (law-tested).
     *
     * Scale shape: the pair generator is a self-equi-join on cent_id —
-    * the assignment table is already hash-partitioned by cent_id, so
-    * this is the one join bucketing makes local; no all-pairs anywhere.
+    * Σ|cell|² pairs, no all-pairs anywhere. Nothing stores the
+    * assignment table bucketed by cent_id; the planner chooses how this
+    * join moves it.
     */
   private def semdedupDup(s: SparkSession, d: String): DataFrame = {
     val a = assignments(s, d)
@@ -1473,15 +1398,8 @@ object Ann {
     * re-rank — (qid, rnk, cid, dist), the ann_*_topk contract. */
   def sq8Topk(s: SparkSession, d: String): DataFrame = {
     val codes = sq8Codes(s, d)
-    // keyed repartition (r17): the SDC heap cut groups by qid; hashing
-    // the query side by it here means zero exchanges downstream of the
-    // BNLJ (the Knn.pairs move). Partition count derived from (n, cut
-    // size) — see [[cutPartitions]] (r18: the fixed-parallelism form
-    // sort-fell-back and filled the rehearsal disk at 63k).
-    val n = Tables.footerRowCount(s, s"$d/embeddings.parquet")
-    val qside = codes.select(col("vec_id").as("qid"), col("codes").as("qc"))
-      .repartition(cutPartitions(s, n,
-        rerankLimit(s, d, 1, PqRerankDiv)), col("qid"))
+    val qside = flatQuerySide(s, d,
+      codes.select(col("vec_id").as("qid"), col("codes").as("qc")))
     val cside = codes.select(col("vec_id").as("cid"), col("codes").as("cc"))
     // the knn_topk shape: repartitioned queries × broadcast compressed
     // corpus (the code table is 4× smaller than the float vectors the
@@ -1490,25 +1408,7 @@ object Ann {
     val scored = qside.join(broadcast(cside), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorExpressions.sq_dist_long(s, col("qc"), col("cc")).as("sdc"))
-    sq8RerankTopk(s, d, scored)
-  }
-
-  /** SDC-ranked cut + exact cosine re-rank over scored (qid, cid, sdc)
-    * pairs — shared by the flat scan (cut n/10) and the IVF×SQ8
-    * composition (cut scaled to the PROBED volume, the ivfpq lesson). */
-  private def sq8RerankTopk(s: SparkSession, d: String, scored: DataFrame,
-      cutNum: Int = 1, cutDen: Int = PqRerankDiv): DataFrame = {
-    // SDC cut + exact re-rank, heap form with a plan-time limit (r17,
-    // the adcRerankTopk twin — see [[rerankLimit]]/[[heapCut]]). The
-    // long→double cast inside heapCut is exact: sdc ≤ dim·255² ≪ 2⁵³.
-    val cands = heapCut(s, scored, "sdc", rerankLimit(s, d, cutNum, cutDen))
-    val q = rerankEmbSide(s, d, Tables.embeddings(s, d)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val c = rerankEmbSide(s, d, Tables.embeddings(s, d)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-    heapTopK(s, cands.join(q, Seq("qid")).join(c, Seq("cid"))
-      .select(col("qid"), col("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
+    rerankTopk(s, d, scored, "sdc", 1, PqRerankDiv)
   }
 
   def sq8Recall(s: SparkSession, d: String): DataFrame =
@@ -1524,16 +1424,12 @@ object Ann {
     * same routing, milder compression (SQ8's rank noise is far below
     * PQ's — flat recall 1.0 at the graded tiers — so composed recall
     * tracks the routing tier's almost exactly; law-tested ≤ routing in
-    * AnnSpec). Candidates route by cent_id exactly as in ivfTopk
-    * (shuffle-hash, lists never broadcast); the code table joins
-    * qid-/cid-keyed (shuffle-hash — corpus-sized, never broadcast). */
+    * AnnSpec). Candidates route through [[probedCandidates]], like
+    * ivfTopk; the code table joins qid-/cid-keyed (shuffle-hash —
+    * corpus-sized, never broadcast). */
   def ivfsqTopk(s: SparkSession, d: String): DataFrame = {
-    val probes = probesOf(s, d, storedCentroids(s, d), P)
-      .select(col("qid"), col("cent_id"))
-    val inv = storedLists(s, d)
-      .select(col("cent_id"), col("vec_id").as("cid"))
-    val cand = probes.join(inv.hint("shuffle_hash"), Seq("cent_id"))
-      .where(col("qid") =!= col("cid"))
+    val cand = probedCandidates(probesOf(s, d, storedCentroids(s, d), P),
+        storedLists(s, d), Nil)
       .select(col("qid"), col("cid"))
     val codes = sq8Codes(s, d)
     val scored = cand
@@ -1543,7 +1439,7 @@ object Ann {
         .hint("shuffle_hash"), Seq("cid"))
       .select(col("qid"), col("cid"),
         VectorExpressions.sq_dist_long(s, col("qc"), col("cc")).as("sdc"))
-    sq8RerankTopk(s, d, scored, cutNum = P, cutDen = 2 * C)
+    rerankTopk(s, d, scored, "sdc", P, 2 * C)
   }
 
   def ivfsqRecall(s: SparkSession, d: String): DataFrame =
@@ -1717,10 +1613,6 @@ object Ann {
        |  round(CAST(n_hits AS DOUBLE) / ($K * n_queries), 6) AS recall
        |FROM hits, nq""".stripMargin
 
-  /** Every ANN query is deterministic (fixed seed pick, fixed iteration
-    * count, exact order-independent arithmetic, total-order tie-breaks),
-    * so all five carry full DuckDB oracles — including the Lloyd's-trained
-    * index, whose quantized means are engine-exact by construction. */
   /** DuckDB twin of [[labelCentroids]] + argmin assignment, leaving a
     * `pred` CTE with (vec_id, label, pred). */
   private val nccCtes: String =
@@ -2004,6 +1896,31 @@ object Ann {
            |  WHERE a.vec_id <> p.qid)""".stripMargin,
         cutNum = P, cutDen = 2 * C)}""".stripMargin
 
+  /** The trained index's list census: what ann_index_build reads back
+    * from the stored index, and what ann_index_retrain reads back from
+    * the retrained version (retraining over base ∪ delta IS a fresh
+    * full-corpus train). */
+  private def trainedCensusOracle: String =
+    s"""WITH $seedCentsCte,
+       |$lloydCtes,
+       |${assignProbeCtes(s"cents$LloydIters")}
+       |SELECT cent_id, count(*) AS list_size FROM assign
+       |GROUP BY cent_id ORDER BY cent_id""".stripMargin
+
+  /** Trained-index IVF search: ann_ivf_topk_trained and its stored
+    * (_indexed) and retrained (_retrained) forms, which are
+    * bit-identical to it. */
+  private def trainedTopkOracle: String =
+    s"""WITH $seedCentsCte,
+       |$lloydCtes,
+       |${ivfCtes(s"cents$LloydIters")}
+       |$topkSelect""".stripMargin
+
+  /** Every ANN query is deterministic (fixed seed pick, fixed iteration
+    * count, exact order-independent arithmetic, total-order tie-breaks),
+    * so every one carries a full DuckDB oracle — including the
+    * Lloyd's-trained index, whose quantized means are engine-exact by
+    * construction. */
   val oracles: Map[String, String] = Map(
     "ann_sq8_topk" ->
       s"""WITH $sq8Ctes
@@ -2075,11 +1992,7 @@ object Ann {
       s"""WITH $seedCentsCte,
          |${ivfCtes("cents0")}
          |$topkSelect""".stripMargin,
-    "ann_ivf_topk_trained" ->
-      s"""WITH $seedCentsCte,
-         |$lloydCtes,
-         |${ivfCtes(s"cents$LloydIters")}
-         |$topkSelect""".stripMargin,
+    "ann_ivf_topk_trained" -> trainedTopkOracle,
     "ann_recall" ->
       s"""WITH $seedCentsCte,
          |${ivfCtes("cents0")},
@@ -2091,19 +2004,10 @@ object Ann {
          |$recallSelect""".stripMargin,
     // ann_index_build: the artifact's list census ≡ the trained
     // assignment census (the stored index is bit-exact recomputation)
-    "ann_index_build" ->
-      s"""WITH $seedCentsCte,
-         |$lloydCtes,
-         |${assignProbeCtes(s"cents$LloydIters")}
-         |SELECT cent_id, count(*) AS list_size FROM assign
-         |GROUP BY cent_id ORDER BY cent_id""".stripMargin,
+    "ann_index_build" -> trainedCensusOracle,
     // ann_ivf_topk_indexed: identical semantics to the trained live
     // form — the oracle is shared verbatim
-    "ann_ivf_topk_indexed" ->
-      s"""WITH $seedCentsCte,
-         |$lloydCtes,
-         |${ivfCtes(s"cents$LloydIters")}
-         |$topkSelect""".stripMargin,
+    "ann_ivf_topk_indexed" -> trainedTopkOracle,
     // the upsert family: the quantizer is trained over the BASE slice
     // only (the first 9/10 of the corpus — the frozen index arriving
     // batches append under), then EVERY row is assigned against it.
@@ -2124,17 +2028,8 @@ object Ann {
     // full-corpus train (the maintained lists hold exactly the corpus),
     // so the post-retrain census and search share the fresh-build
     // oracles verbatim — the bit-exact lifecycle law, oracle-certified
-    "ann_index_retrain" ->
-      s"""WITH $seedCentsCte,
-         |$lloydCtes,
-         |${assignProbeCtes(s"cents$LloydIters")}
-         |SELECT cent_id, count(*) AS list_size FROM assign
-         |GROUP BY cent_id ORDER BY cent_id""".stripMargin,
-    "ann_ivf_topk_retrained" ->
-      s"""WITH $seedCentsCte,
-         |$lloydCtes,
-         |${ivfCtes(s"cents$LloydIters")}
-         |$topkSelect""".stripMargin,
+    "ann_index_retrain" -> trainedCensusOracle,
+    "ann_ivf_topk_retrained" -> trainedTopkOracle,
     // sampled recall: the same fnv carve (TextOps.fnvFold is the proven
     // cell-identical twin of the engine's fnv1a64), capped to the
     // RecallSampleCap smallest (hash, vec_id) — the KMV rule, identical

@@ -61,6 +61,52 @@ object IndexGc {
   def buildTmpPath(committedPath: String): String =
     s"$committedPath$BuildTmpTag${java.util.UUID.randomUUID.toString.take(8)}"
 
+  /** The commit marker: a version directory is readable iff it holds
+    * this file, written last inside the temp dir before the rename. */
+  val BuiltMarker = "_BUILT"
+
+  /** Root directory of every persisted ANN index ([[Ann.IndexDirConf]];
+    * cwd-relative by default — the same place Spark's own warehouse
+    * lives). On a cluster this would be a table location. */
+  def root(s: SparkSession): String =
+    s.conf.getOption(Ann.IndexDirConf)
+      .getOrElse("spark-warehouse/graft_ann_index")
+
+  /** In-JVM guard so two sessions hitting the same unbuilt path can never
+    * interleave writes. One lock for every index family; NSW's scoped
+    * build confs take it too (reentrant from a build's own hold).
+    * Cross-JVM writers racing on the same local warehouse dir are out of
+    * contract (a cluster deployment would build through its table
+    * catalog's transaction instead). */
+  private[ops] val buildLock = new Object
+
+  /** THE commit protocol of every persisted index: unless `path` already
+    * holds [[BuiltMarker]], run `build` into a fresh [[buildTmpPath]]
+    * sibling, write the marker, and commit with one atomic directory
+    * rename. A reader sees either no index (and builds) or a fully
+    * committed one — never a torso; a `build` that throws leaves only
+    * temp debris, which the next call ignores and [[gcIndexRoot]] ages
+    * out. Returns `path`. */
+  def commitOnce(s: SparkSession, path: String)(build: String => Unit)
+      : String = {
+    val marker = new Path(path, BuiltMarker)
+    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) buildLock.synchronized {
+      if (!fs.exists(marker)) {
+        val tmp = new Path(buildTmpPath(path))
+        build(tmp.toString)
+        fs.create(new Path(tmp, BuiltMarker), true).close()
+        if (!fs.rename(tmp, new Path(path))) {
+          // a racing external writer won; serve theirs if committed
+          fs.delete(tmp, true)
+          if (!fs.exists(marker)) throw new IllegalStateException(
+            s"index commit failed and no committed index at $path")
+        }
+      }
+    }
+    path
+  }
+
   /** Default deletion grace: a superseded version must have been
     * committed at least this long ago before GC may remove it — the
     * VACUUM retention window protecting concurrent readers that
@@ -125,21 +171,20 @@ object IndexGc {
   def gcIndexRoot(s: SparkSession, serveDatasets: Seq[String],
       keepN: Int = DefaultKeepN,
       graceMs: Long = DefaultGraceMs): Seq[GcAction] = {
-    val root = new Path(s.conf.getOption(Ann.IndexDirConf)
-      .getOrElse("spark-warehouse/graft_ann_index"))
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
+    val dir = new Path(root(s))
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return Seq.empty
     val serving = servingNames(s, serveDatasets)
     assertServingClassifiable(serving)
     val now = System.currentTimeMillis()
 
     def committedAt(p: Path): Option[Long] = {
-      val marker = new Path(p, "_BUILT")
+      val marker = new Path(p, BuiltMarker)
       if (fs.exists(marker)) Some(fs.getFileStatus(marker).getModificationTime)
       else None
     }
 
-    val dirs = fs.listStatus(root).filter(_.isDirectory).toSeq
+    val dirs = fs.listStatus(dir).filter(_.isDirectory).toSeq
     val classified = dirs.map { st =>
       val name = st.getPath.getName
       (st.getPath, name, familyOf(name), committedAt(st.getPath), st)

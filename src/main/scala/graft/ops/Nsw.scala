@@ -44,15 +44,15 @@ import graft.functions.VectorExpressions
   *     VISITED anywhere, so hop count only ever improves recall
   *     (law-tested in NswSpec).
   *
-  * Scale shape: per hop, one shuffle-hash join of the (qid, cand) beam
-  * against the (M+F)-out-degree adjacency list plus one per-query
-  * window — n_q·B·(M+F) rows in flight, never n². The search touches at
+  * Scale shape: per hop, one join of the (qid, cand) beam against the
+  * (M+F)-out-degree adjacency list (broadcast while it fits, else
+  * shuffle-hash — see [[hop]]) plus one per-query bounded-heap cut —
+  * n_q·B·(M+F) rows in flight, never n². The search touches at
   * most E + H·B·(M+F) ≈ 4.6k candidate slots per query
   * (8 + 4·48·24 = 4616; distinct vertices visited are well below —
   * beams overlap) regardless of corpus size —
-  * the sublinear-probe property that makes graph ANN the serving tier;
-  * at 100 TB the adjacency is bucketed by u exactly like the IVF lists
-  * by cent_id. Every query here is leave-one-out like the rest of the
+  * the sublinear-probe property that makes graph ANN the serving tier.
+  * Every query here is leave-one-out like the rest of the
   * ANN family and carries a full DuckDB oracle (the same unrolled CTE
   * chain, MATERIALIZED per hop).
   */
@@ -487,8 +487,7 @@ object Nsw {
           case Some(cut) => Ann.assignmentsBaseAt(s, d, seedC, cut)
           case None => Ann.assignmentsAt(s, d, seedC)
         }).select(col("cent_id"), col("vec_id").as("v")))
-    val cell = probes.join(inv.hint("shuffle_hash"), Seq("cent_id"))
-      .select(col("u"), col("v"))
+    val cell = Ann.probeJoin(probes, inv).select(col("u"), col("v"))
     val nDf = Tables.embeddings(s, d)
       .where(baseN.map(c => col("vec_id") < c).getOrElse(lit(true)))
       .agg(count(lit(1)).as("nn"))
@@ -506,6 +505,32 @@ object Nsw {
     // heap absorbs the few duplicates map-side (r16, VERDICT r15 item 5).
     cell.unionByName(ring).where(col("u") =!= col("v"))
   }
+
+  /** Score candidate (u, v) pairs against the corpus embeddings — the
+    * size-gated lookup half of [[bestM]], reusable on its own so the
+    * descent can score each unordered 2-hop pair ONCE (r18). */
+  private def scoredPairs(s: SparkSession, d: String,
+      cands: DataFrame): DataFrame = {
+    val side = Tables.sizedSide(s, d,
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      Tables.RowBytes.Embedding)
+    val eu = side.select(col("vec_id").as("u"), col("embedding").as("uv"))
+    val ev = side.select(col("vec_id").as("v"), col("embedding").as("vv"))
+    cands.join(eu, Seq("u")).join(ev, Seq("v"))
+      .select(col("u"), col("v"),
+        VectorExpressions.cosine_distance(s, col("uv"), col("vv"))
+          .as("dist"))
+  }
+
+  /** The best-M cut over a pre-scored (u, v, dist) stream — the heap
+    * half of [[bestM]]. */
+  private def heapBestM(s: SparkSession, scored: DataFrame): DataFrame =
+    scored
+      .groupBy(col("u"))
+      .agg(graft.functions.TopKAgg.top_k_distinct_by(s,
+        col("dist"), col("v"), lit(0), M).as("top"))
+      .select(col("u"), explode(col("top")).as("t"))
+      .select(col("u"), col("t.id").as("v"))
 
   /** Score candidate edges and keep each u's best M under the (dist, v)
     * total order — the one definition of "keep best M" shared by the
@@ -537,32 +562,6 @@ object Nsw {
     * aggregation; same (dist, v) comparator as the window (knn_topk ≡
     * knn_topk_agg precedent), so the selected edge SET — and every
     * declared hash — is unchanged. */
-  /** Score candidate (u, v) pairs against the corpus embeddings — the
-    * size-gated lookup half of [[bestM]], reusable on its own so the
-    * descent can score each unordered 2-hop pair ONCE (r18). */
-  private def scoredPairs(s: SparkSession, d: String,
-      cands: DataFrame): DataFrame = {
-    val side = Tables.sizedSide(s, d,
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      Tables.RowBytes.Embedding)
-    val eu = side.select(col("vec_id").as("u"), col("embedding").as("uv"))
-    val ev = side.select(col("vec_id").as("v"), col("embedding").as("vv"))
-    cands.join(eu, Seq("u")).join(ev, Seq("v"))
-      .select(col("u"), col("v"),
-        VectorExpressions.cosine_distance(s, col("uv"), col("vv"))
-          .as("dist"))
-  }
-
-  /** The best-M cut over a pre-scored (u, v, dist) stream — the heap
-    * half of [[bestM]]. */
-  private def heapBestM(s: SparkSession, scored: DataFrame): DataFrame =
-    scored
-      .groupBy(col("u"))
-      .agg(graft.functions.TopKAgg.top_k_distinct_by(s,
-        col("dist"), col("v"), lit(0), M).as("top"))
-      .select(col("u"), explode(col("top")).as("t"))
-      .select(col("u"), col("t.id").as("v"))
-
   private[graft] def bestM(s: SparkSession, d: String, cands: DataFrame): DataFrame =
     heapBestM(s, scoredPairs(s, d, cands))
 
@@ -634,7 +633,8 @@ object Nsw {
   }
 
   /** Runtime SQL confs scoped around every eager build, save/restored
-    * under [[buildLock]] (reentrant from [[ensureNswIndex]]'s hold).
+    * under [[IndexGc.buildLock]] (reentrant from [[ensureNswIndex]]'s
+    * hold).
     *
     * 1. Constraint propagation OFF — two reasons, both r16: (a) with
     * the expansion `distinct()`s gone (VERDICT r15 item 5) the bestM
@@ -658,14 +658,14 @@ object Nsw {
     *
     * Both are optimizer/execution-level only — the edge set is
     * untouched; every build call is eager (localCheckpoint(true)), so
-    * nothing leaks past the restore. The [[buildLock]] guard
+    * nothing leaks past the restore. The [[IndexGc.buildLock]] guard
     * serializes the save/mutate/restore against a concurrent build on
     * the same session (ADVICE r16). A concurrent SERVING query planned
     * during the window merely compiles without constraint propagation
     * (and with a bigger hash-fallback budget) — an optimization
     * delta, never a correctness one. */
   private def withBuildSqlConfs[T](s: SparkSession)(f: => T): T =
-    buildLock.synchronized {
+    IndexGc.buildLock.synchronized {
       val keys = Seq(
         "spark.sql.constraintPropagation.enabled" -> "false",
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
@@ -754,8 +754,8 @@ object Nsw {
     * aggregation.
     *
     * r17 (optimization round, guide §2.3/§2.4): this was
-    * `.distinct()` then [[rank]] then `rn <= b` — a full hash exchange
-    * of the grown multiset (n_q·B·(M+F) rows) for the dedup plus a
+    * `.distinct()` then a rank window then `rn <= b` — a full hash
+    * exchange of the grown multiset (n_q·B·(M+F) rows) for the dedup plus a
     * second full exchange + two per-partition sorts for the ranking
     * window, EVERY hop. `top_k_distinct_by` (the same heap that already
     * replaced the build path's expansion distinct in r16) does dedup
@@ -773,11 +773,9 @@ object Nsw {
     * single COMPLETE aggregation: zero per-hop exchanges (the partial/
     * final split it replaces reduced nothing at beam widths where
     * rows-per-qid-per-partition < b — it double-inserted and
-    * round-tripped every candidate through buffer serde). The scoring
-    * joins stay broadcast-hash at fixture scale and cent-bucketed at
-    * 100 TB; past the adjacency broadcast ceiling the shuffle-hash grow
-    * join re-keys the stream and the heap takes its one exchange as
-    * before. */
+    * round-tripped every candidate through buffer serde). Past the
+    * adjacency broadcast ceiling the shuffle-hash grow join re-keys the
+    * stream and the heap takes its one exchange as before. */
   private[graft] def hop(s: SparkSession, d: String, beam: DataFrame,
       b: Int = B, far: Int = 0,
       adjOverride: Option[DataFrame] = None): DataFrame = {
@@ -826,19 +824,18 @@ object Nsw {
       .select(col("qid"), col("t.id").as("cand"))
   }
 
-  /** Score (qid, cand) against the corpus vectors and rank per query
-    * under the (dist, cand) total order. */
-  private def rank(s: SparkSession, d: String, cands: DataFrame): DataFrame = {
+  /** Final top-K of (qid, cand) candidates, distinct per qid: scored
+    * against the corpus vectors and cut by [[Ann.heapTopK]] under the
+    * (dist, cid) total order a rank window would use, so the rows are
+    * the window's (the knn_topk ≡ knn_topk_agg precedent). */
+  private def topK(s: SparkSession, d: String, cands: DataFrame): DataFrame = {
     val q = Tables.embeddings(s, d)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val c = Tables.embeddings(s, d)
       .select(col("vec_id").as("cand"), col("embedding").as("cv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand").asc)
-    cands.join(q, "qid").join(c, "cand")
-      .select(col("qid"), col("cand"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
+    Ann.heapTopK(s, cands.join(q, "qid").join(c, "cand")
+      .select(col("qid"), col("cand").as("cid"),
+        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
   }
 
   /** The search's starting beam: every query (or the `qOnly` subset)
@@ -851,9 +848,9 @@ object Nsw {
     // pay 60× the beam work (the Ann.probesOf qOnly twin). Declared
     // queries pass None: leave-one-out over the whole corpus.
     // keyed repartition (r18, guide §2.4 — the Knn.pairs precedent): hash
-    // the query side by its future aggregate/window key so EVERY
-    // downstream per-qid operator (each hop's bounded-heap cut, the final
-    // rank window) sees its ClusteredDistribution already satisfied. The
+    // the query side by its future aggregate key so EVERY downstream
+    // per-qid operator (each hop's bounded-heap cut, the final top-K
+    // heap) sees its ClusteredDistribution already satisfied. The
     // broadcast grow/scoring joins preserve the partitioning, and
     // localCheckpoint carries outputPartitioning through the per-hop
     // barrier (LogicalRDD.fromDataset keeps it), so the whole unrolled
@@ -880,10 +877,7 @@ object Nsw {
     // beam is tiny (n_q·B rows); results are bit-identical either way.
     val beamH = (1 to hops).foldLeft(beam0)((bm, _) =>
       hop(s, d, bm, b, far, adjOverride).checkpointed)
-    rank(s, d, beamH).where(col("rn") <= K)
-      .select(col("qid"), col("rn").as("rnk"), col("cand").as("cid"),
-        round(col("dist"), 6).as("dist"))
-      .orderBy(col("qid"), col("rnk"))
+    topK(s, d, beamH)
   }
 
   def nswTopk(s: SparkSession, d: String): DataFrame =
@@ -893,6 +887,48 @@ object Nsw {
     Ann.recallOf(s, d, nswTopk(s, d).select(col("qid"), col("cid")))
 
   // ------------------------------------------- persisted graph (r13)
+
+  /** 64-bit FNV-1a digest of the WHOLE [[BSteps]] table (every
+    * threshold/beam pair), folded into the index path. The r13 path
+    * carried only `BSteps.last._2`, so retuning any NON-last row would
+    * have changed the live beam rule (and the oracle's CASE) without
+    * changing the path — serving a stale persisted beam at that tier
+    * (ADVICE r13 item 1). Any edit to any row now moves the path. */
+  private[graft] def bStepsDigest: String = {
+    val str = BSteps.map { case (hi, bb) => s"$hi:$bb" }.mkString(",")
+    val h = str.foldLeft(0xcbf29ce484222325L)((a, c) =>
+      (a ^ c.toLong) * 0x100000001b3L)
+    f"$h%016x".take(12)
+  }
+
+  private def nswIndexPath(s: SparkSession, d: String,
+      seedC: Int = Ann.C, dRounds: Option[Int] = None): String = {
+    // versioned by EVERY constant the artifact depends on — the graph
+    // build constants AND (r13 review finding) the beam-rule constants,
+    // since the beam DECISION is committed in the meta file: a beam
+    // retune without this would serve a stale persisted beam while the
+    // live rule (and the oracle) moved. The beam rule enters as a
+    // digest of the FULL step table (r14), not just its last row. A
+    // non-default seed retune ([[retunedSeedC]]) is its own version
+    // family (`_sc<seedC>`): the declared fixed-C path is byte-stable.
+    // a hier-routed seed set is its own version family: the h segment
+    // is rule-derived (coarseCFor), so the path stays a pure function
+    // of (constants, seedC, corpus) — no new caller-supplied knob
+    val sc = if (seedC == Ann.C) ""
+      else s"_sc$seedC" +
+        (if (seedRoutingIsHier(seedC)) s"h${coarseCFor(seedC)}" else "")
+    s"${IndexGc.root(s)}/nsw_v3_M${M}_F${F}_P${PAdj}_R${RingD}_" +
+      s"D${dRounds.getOrElse(descentRoundsFor(seedC))}_" +
+      s"B${B}bs${bStepsDigest}m${ClusterShareMul}d${ClusterBeamDiv}" +
+      s"c${Ann.C}$sc" +
+      s"_${Ann.corpusFingerprint(s, d)}_${graft.Tables.dirTag(d)}"
+  }
+
+  /** The path the CURRENT resolution rule hands a reader — the NSW
+    * serving version, protected absolutely by [[IndexGc]]. */
+  private[graft] def livePath(s: SparkSession, d: String,
+      seedC: Int = Ann.C, dRounds: Option[Int] = None): String =
+    nswIndexPath(s, d, seedC, dRounds)
 
   /** The NSW graph as a versioned ON-DISK artifact (VERDICT r12 item 1 —
     * the `ensureIndex` pattern the IVF family proved, applied to the one
@@ -923,89 +959,26 @@ object Nsw {
     * rebuild (not an in-place patch) as the declared compaction step.
     * Between retrains, delta vectors are served by the IVF tier (exact
     * within probed lists), which needs no graph. */
-  /** 64-bit FNV-1a digest of the WHOLE [[BSteps]] table (every
-    * threshold/beam pair), folded into the index path. The r13 path
-    * carried only `BSteps.last._2`, so retuning any NON-last row would
-    * have changed the live beam rule (and the oracle's CASE) without
-    * changing the path — serving a stale persisted beam at that tier
-    * (ADVICE r13 item 1). Any edit to any row now moves the path. */
-  private[graft] def bStepsDigest: String = {
-    val str = BSteps.map { case (hi, bb) => s"$hi:$bb" }.mkString(",")
-    val h = str.foldLeft(0xcbf29ce484222325L)((a, c) =>
-      (a ^ c.toLong) * 0x100000001b3L)
-    f"$h%016x".take(12)
-  }
-
-  private def nswIndexPath(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): String = {
-    val root = s.conf.getOption(Ann.IndexDirConf)
-      .getOrElse("spark-warehouse/graft_ann_index")
-    // versioned by EVERY constant the artifact depends on — the graph
-    // build constants AND (r13 review finding) the beam-rule constants,
-    // since the beam DECISION is committed in the meta file: a beam
-    // retune without this would serve a stale persisted beam while the
-    // live rule (and the oracle) moved. The beam rule enters as a
-    // digest of the FULL step table (r14), not just its last row. A
-    // non-default seed retune ([[retunedSeedC]]) is its own version
-    // family (`_sc<seedC>`): the declared fixed-C path is byte-stable.
-    // a hier-routed seed set is its own version family: the h segment
-    // is rule-derived (coarseCFor), so the path stays a pure function
-    // of (constants, seedC, corpus) — no new caller-supplied knob
-    val sc = if (seedC == Ann.C) ""
-      else s"_sc$seedC" +
-        (if (seedRoutingIsHier(seedC)) s"h${coarseCFor(seedC)}" else "")
-    s"$root/nsw_v3_M${M}_F${F}_P${PAdj}_R${RingD}_" +
-      s"D${dRounds.getOrElse(descentRoundsFor(seedC))}_" +
-      s"B${B}bs${bStepsDigest}m${ClusterShareMul}d${ClusterBeamDiv}" +
-      s"c${Ann.C}$sc" +
-      s"_${Ann.corpusFingerprint(s, d)}_${graft.Tables.dirTag(d)}"
-  }
-
-  /** The path the CURRENT resolution rule hands a reader — the NSW
-    * serving version, protected absolutely by [[IndexGc]]. */
-  private[graft] def livePath(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): String =
-    nswIndexPath(s, d, seedC, dRounds)
-
-  private val buildLock = new Object
-
   private[graft] def ensureNswIndex(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): String = {
-    import org.apache.hadoop.fs.Path
-    val path = nswIndexPath(s, d, seedC, dRounds)
-    val marker = new Path(path, "_BUILT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) buildLock.synchronized {
-      if (!fs.exists(marker)) {
-        val tmp = new Path(
-          IndexGc.buildTmpPath(path))
-        adjacencyWithFar(s, d, F, seedC = seedC, dRounds = dRounds)
-          .write.mode("overwrite").parquet(s"$tmp/adjacency")
-        // the beam decision is INDEX metadata (r13): the shape signal
-        // (top seed-cell occupancy) is a property of the corpus the
-        // graph was built from, so it is decided once at build time and
-        // committed beside the edges — a cold session reads one tiny
-        // file instead of re-scanning the corpus for its beam. Signals
-        // computed ONCE and the beam derived locally (beamFrom).
-        import s.implicits._
-        val n = Tables.footerRowCount(s, s"$d/embeddings.parquet")
-        val top = topCellSize(s, d)
-        Seq((n, top, beamFrom(n, top)))
-          .toDF("n", "top_cell_size", "beam")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-        fs.create(new Path(tmp, "_BUILT"), true).close()
-        if (!fs.rename(tmp, new Path(path))) {
-          fs.delete(tmp, true)
-          if (!fs.exists(marker)) throw new IllegalStateException(
-            s"NSW index commit failed and no committed index at $path")
-        }
-      }
+      seedC: Int = Ann.C, dRounds: Option[Int] = None): String =
+    IndexGc.commitOnce(s, nswIndexPath(s, d, seedC, dRounds)) { tmp =>
+      adjacencyWithFar(s, d, F, seedC = seedC, dRounds = dRounds)
+        .write.mode("overwrite").parquet(s"$tmp/adjacency")
+      // the beam decision is INDEX metadata (r13): the shape signal
+      // (top seed-cell occupancy) is a property of the corpus the
+      // graph was built from, so it is decided once at build time and
+      // committed beside the edges — a cold session reads one tiny
+      // file instead of re-scanning the corpus for its beam. Signals
+      // computed ONCE and the beam derived locally (beamFrom).
+      import s.implicits._
+      val n = Tables.footerRowCount(s, s"$d/embeddings.parquet")
+      val top = topCellSize(s, d)
+      Seq((n, top, beamFrom(n, top)))
+        .toDF("n", "top_cell_size", "beam")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
     }
-    path
-  }
 
-  /** The committed on-disk adjacency, bucketed-by-u shaped on a real
-    * cluster exactly like the IVF lists by cent_id. */
+  /** The committed on-disk adjacency (u, v). */
   private[graft] def storedAdjacency(s: SparkSession, d: String,
       seedC: Int = Ann.C, dRounds: Option[Int] = None): DataFrame =
     s.read.parquet(s"${ensureNswIndex(s, d, seedC, dRounds)}/adjacency")
@@ -1067,10 +1040,7 @@ object Nsw {
     val cands = base.select(col("qid"), col("cid").as("cand"))
       .unionByName(delta.select(col("qid"), col("cid").as("cand")))
       .distinct()
-    rank(s, d, cands).where(col("rn") <= K)
-      .select(col("qid"), col("rn").as("rnk"), col("cand").as("cid"),
-        round(col("dist"), 6).as("dist"))
-      .orderBy(col("qid"), col("rnk"))
+    topK(s, d, cands)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -56,7 +56,7 @@ object NswTune {
     // almost certainly a typo'd seedC (ADVICE r14). This tool reads
     // only committed artifacts, per its contract above.
     val builtPath = new org.apache.hadoop.fs.Path(
-      Nsw.livePath(spark, dir, seedC, dRounds), "_BUILT")
+      Nsw.livePath(spark, dir, seedC, dRounds), graft.ops.IndexGc.BuiltMarker)
     val fs = builtPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(builtPath),
       s"no committed NSW artifact for (dir=$dir, seedC=$seedC, " +

@@ -25,7 +25,7 @@ object PqProf {
     }
     (1 to reps).foreach { i =>
       graft.PersistedCache.clearAll()
-      val tSub = t(graft.ops.Ann.pqSubDistsProbe(s, d).count())
+      val tSub = t(graft.ops.Ann.pqSubDists(s, d).count())
       val tCodes = t(graft.ops.Ann.pqCodes(s, d).count())
       val tQuery = t(graft.SparkEntry.queries("ann_pq_topk")(s, d).count())
       println(f"[pqprof] rep $i: subDists=$tSub%6.2f s  codes=$tCodes%6.2f s" +

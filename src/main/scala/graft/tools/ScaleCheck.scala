@@ -319,7 +319,7 @@ object ScaleCheck {
       val fs = new Path("spark-warehouse").getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       graft.ops.Ann.livePaths(spark, sfDir).foreach { p =>
-        require(fs.exists(new Path(p, "_BUILT")),
+        require(fs.exists(new Path(p, graft.ops.IndexGc.BuiltMarker)),
           s"serving version lost its commit: $p") }
       val post = canon(Ann.ivfTopkRetrained(spark, sfDir))
       require(pre.sameElements(post), "search changed across GC")

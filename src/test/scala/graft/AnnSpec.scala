@@ -30,11 +30,58 @@ class AnnSpec extends SparkSpec {
 
   test("ivf probe join shuffles on cent_id instead of broadcasting the " +
     "lists (AQE on and off)") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      ShuffledHashJoinExec}
+
+    val helper = new AdaptiveSparkPlanHelper {}
+    // a scan of inverted lists: a stored list file set (`…/lists`) or
+    // the session-cached seed assignment table (its schema has cdist)
+    def isListsScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName == "lists")
+      case m: InMemoryTableScanExec =>
+        m.relation.output.exists(_.name == "cdist")
+      case _ => false
+    }
+    def readsLists(p: SparkPlan): Boolean = helper.find(p)(isListsScan).isDefined
+    // the lists scan with no join between it and `p` (through AQE
+    // stages and reused exchanges): the join above is THE probe join,
+    // not one further up, e.g. ivfsq's hinted code-table joins
+    def feedsLists(p: SparkPlan): Boolean = isListsScan(p) || (p match {
+      case _: BaseJoinExec => false
+      case a: AdaptiveSparkPlanExec => feedsLists(a.executedPlan)
+      case q: QueryStageExec => feedsLists(q.plan)
+      case r: ReusedExchangeExec => feedsLists(r.child)
+      case _ => p.children.exists(feedsLists)
+    })
+    // ivfpq legitimately broadcasts its LUT and code sides, so the law
+    // is on the tree: no broadcast subtree may hold a lists scan
+    val tiers = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "ivfTopk" -> Ann.ivfTopk, "ivfTopkIndexed" -> Ann.ivfTopkIndexed,
+      "ivfTopkUpserted" -> Ann.ivfTopkUpserted, "ivfpqTopk" -> Ann.ivfpqTopk,
+      "ivfsqTopk" -> Ann.ivfsqTopk,
+      "nswSeedCells" -> ((s, d) => graft.ops.Nsw.seedCandidates(s, d)))
     withAqeBothWays {
-      val plan = Ann.ivfTopk(spark, sf0001).queryExecution.executedPlan.toString
-      assert(plan.contains("ShuffledHashJoin"), s"expected shuffled hash join:\n$plan")
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"inverted lists must not be broadcast:\n$plan")
+      tiers.foreach { case (name, q) =>
+        val df = q(spark, sf0001)
+        df.write.format("noop").mode("overwrite").save()
+        val plan = df.queryExecution.executedPlan
+        assert(readsLists(plan), s"$name: no lists scan found:\n$plan")
+        assert(helper.collect(plan) { case j: ShuffledHashJoinExec => j }
+            .exists(_.children.exists(feedsLists)),
+          s"$name: the lists must feed a shuffled hash join directly:\n$plan")
+        val broadcastLists = helper.collect(plan) {
+          case b: BroadcastExchangeExec if readsLists(b) => b }
+        assert(broadcastLists.isEmpty,
+          s"$name: inverted lists must not be broadcast:\n$plan")
+      }
     }
   }
 

@@ -32,6 +32,51 @@ class IndexGcSpec extends SparkSpec {
     assert(IndexGc.familyOf("li_bucketed").isEmpty)
   }
 
+  test("commit protocol: a crashed build commits nothing and leaves only " +
+    "unclassified temp debris; the next call rebuilds; a committed path " +
+    "never rebuilds") {
+    val root = "spark-warehouse/graft_commit_test_" +
+      java.util.UUID.randomUUID.toString.take(8)
+    val name = "v2_C256_L4_M8_Cw256_n10x9b100__commit_law"
+    val path = s"$root/$name"
+    val marker = new Path(path, IndexGc.BuiltMarker)
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    def build(tmp: String): Unit = {
+      builds.incrementAndGet()
+      spark.range(3).write.parquet(s"$tmp/data")
+    }
+    try {
+      // (1) a build that throws midway, after writing part of its output
+      val ex = intercept[IllegalStateException] {
+        IndexGc.commitOnce(spark, path) { tmp =>
+          build(tmp)
+          throw new IllegalStateException("killed mid-build")
+        }
+      }
+      assert(ex.getMessage === "killed mid-build")
+      assert(!fs.exists(marker) && !fs.exists(new Path(path)),
+        "a crashed build must leave nothing at the committed path")
+
+      // (2) its debris is one temp sibling the GC never reads as a version
+      val debris = fs.listStatus(new Path(root)).map(_.getPath.getName).toSeq
+      assert(debris.size === 1, debris.mkString(", "))
+      assert(debris.head.startsWith(name + IndexGc.BuildTmpTag), debris.head)
+      assert(IndexGc.familyOf(debris.head).isEmpty)
+      assert(IndexGc.familyOf(name).isDefined)
+
+      // (3) the next call runs the build again and commits it
+      assert(IndexGc.commitOnce(spark, path)(build) === path)
+      assert(builds.get === 2)
+      assert(fs.exists(marker))
+      assert(spark.read.parquet(s"$path/data").count() === 3)
+
+      // (4) with the marker present the build never runs
+      assert(IndexGc.commitOnce(spark, path)(build) === path)
+      assert(builds.get === 2, "a committed path must not rebuild")
+    } finally fs.delete(new Path(root), true)
+  }
+
   test("a v1 (partitioned-lists) index beside the v2 serving index is a " +
     "superseded ivf version, never serving") {
     val oldRoot = spark.conf.getOption(Ann.IndexDirConf)
