@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Distances
 
 /** The reference's core surface: exact K-nearest-neighbors as a Spark
   * pipeline (SURVEY.md §2.A). The reference computes it twice — a
@@ -33,7 +32,10 @@ import graft.functions.Distances
 object Knn {
   val K = 10
 
-  /** (qid, cid, dist) pair stream, leave-one-out, cosine.
+  /** (qid, qlabel, cid, clabel, dist) pair stream, leave-one-out,
+    * cosine. The query's own label rides along (one int per row) so the
+    * vote tail compares a prediction with it without re-reading and
+    * joining the labels.
     *
     * The query side is hash-repartitioned BY qid (not round-robin): the
     * broadcast join preserves the streamed side's partitioning, so every
@@ -49,12 +51,13 @@ object Knn {
   private def pairs(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.repartition(Tables.parallelism(s), col("vec_id"))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        col("label").as("qlabel"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("cv"),
       col("label").as("clabel"))
     q.crossJoin(broadcast(c))
       .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("clabel"),
+      .select(col("qid"), col("qlabel"), col("cid"), col("clabel"),
         graft.functions.VectorExpressions
           .cosine_distance(s, col("qv"), col("cv")).as("dist"))
   }
@@ -86,63 +89,64 @@ object Knn {
       .select(col("qid"), col("rnk"), col("cid"), round(col("dist"), 6).as("dist"))
       .orderBy(col("qid"), col("rnk"))
 
-  /** A1→A5: classify every embedding by majority vote of its 10 nearest
-    * (leave-one-out); vote ties break to the smallest label. */
-  /** Majority vote over the first k ranked neighbors (tie → smallest
-    * label) — THE vote pipeline; knnClassify is the k = K case and the
-    * k-sweep re-invokes it per k so a tie-break or rounding change can
-    * never fork between them. */
-  private def classifyAt(s: SparkSession, d: String, k: Int): DataFrame = {
-    val votes = topkRankedShared(s, d).where(col("rnk") <= k)
-      .groupBy(col("qid"), col("clabel")).agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("n").desc, col("clabel").asc)
+  /** Weighted vote over the first k ranked neighbors, for every k in
+    * `ks` at once — THE vote pipeline (A5): one row per (qid, k) with the
+    * query's own label `qlabel` and the winning `pred`; vote ties break
+    * to the smallest label. `weight` is a per-neighbor vote column over
+    * `rnk` (`lit(1)` is the plain majority vote). The k's explode over
+    * the cached ≤K-row-per-query set, which is already partitioned by
+    * qid, so the vote aggregate and window plan no exchange. */
+  private def predictionsAt(s: SparkSession, d: String, ks: Seq[Int],
+      weight: Column): DataFrame = {
+    val votes = topkRankedShared(s, d)
+      .withColumn("k", explode(array(ks.map(lit): _*)))
+      .where(col("rnk") <= col("k"))
+      .groupBy(col("qid"), col("qlabel"), col("k"), col("clabel"))
+      .agg(sum(weight).as("n"))
+    val w = Window.partitionBy(col("qid"), col("k"))
+      .orderBy(col("n").desc, col("clabel").asc)
     votes.withColumn("vr", row_number().over(w)).where(col("vr") === 1)
-      .select(col("qid"), col("clabel").as("pred"))
+      .select(col("qid"), col("qlabel"), col("k"), col("clabel").as("pred"))
   }
 
-  /** Accuracy of [[classifyAt]] against the held-out labels. */
-  private def accuracyAt(s: SparkSession, d: String, k: Int): DataFrame = {
-    val truth = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    classifyAt(s, d, k).join(truth, col("qid") === col("vec_id"))
-      .agg(count(lit(1)).as("n_queries"),
-        round(avg(when(col("pred") === col("label"), 1.0).otherwise(0.0)), 6)
-          .as("accuracy"))
-  }
+  /** Share of [[predictionsAt]] rows whose vote matches the query label. */
+  private def accuracy =
+    round(avg(when(col("pred") === col("qlabel"), 1.0).otherwise(0.0)), 6)
+      .as("accuracy")
 
+  /** A5: classify every embedding by majority vote of its 10 nearest
+    * (leave-one-out). */
   def knnClassify(s: SparkSession, d: String): DataFrame =
-    classifyAt(s, d, K).orderBy(col("qid"))
+    predictionsAt(s, d, Seq(K), lit(1)).select(col("qid"), col("pred"))
+      .orderBy(col("qid"))
 
   /** A6: leave-one-out accuracy of the 10-NN cosine classifier. */
   def knnAccuracy(s: SparkSession, d: String): DataFrame =
-    accuracyAt(s, d, K).select(col("accuracy"))
+    predictionsAt(s, d, Seq(K), lit(1)).agg(accuracy)
 
-  /** A6-sweep: leave-one-out accuracy for k ∈ {1,3,5,10} from ONE
-    * ranked-neighbor pass — the hyperparameter sweep the reference's
-    * coursework would run as four separate jobs. The O(m·n) pair scan
-    * and the rank window are shared (session cache); each k is then a
-    * cheap re-aggregation of the same ≤10-row-per-query set, so
-    * sweeping k costs four tiny aggregates, not four corpus scans. */
+  /** A6-sweep: leave-one-out accuracy for k ∈ {1,3,5,10} — the
+    * hyperparameter sweep the reference's coursework would run as four
+    * separate jobs. One aggregate serves every k: each row of the shared
+    * ranked set (session cache) is copied once per k, the vote runs per
+    * (qid, k), and the accuracies are one `groupBy(k)` over the
+    * predictions. */
   def knnKSweep(s: SparkSession, d: String): DataFrame =
-    Seq(1, 3, 5, 10)
-      .map(k => accuracyAt(s, d, k)
-        .select(lit(k).as("k"), col("n_queries"), col("accuracy")))
-      .reduce(_.unionAll(_)).orderBy(col("k"))
+    predictionsAt(s, d, Seq(1, 3, 5, 10), lit(1))
+      .groupBy(col("k")).agg(count(lit(1)).as("n_queries"), accuracy)
+      .orderBy(col("k"))
 
   /** A5-regression: the k-NN REGRESSOR sibling of the classifier —
     * predict each query's numeric target as the mean of its k
     * neighbors' labels (labels are small ints, so sum is exact and the
     * one division is engine-identical), with the per-query absolute
     * error against the held-out true label. Same shared ranked set. */
-  def knnRegression(s: SparkSession, d: String): DataFrame = {
-    val truth = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
+  def knnRegression(s: SparkSession, d: String): DataFrame =
     topkRankedShared(s, d)
-      .groupBy(col("qid"))
+      .groupBy(col("qid"), col("qlabel"))
       .agg((sum(col("clabel")).cast("double") / count(lit(1))).as("pred"))
-      .join(truth, col("qid") === col("vec_id"))
       .select(col("qid"), round(col("pred"), 6).as("pred"),
-        round(abs(col("pred") - col("label")), 6).as("abs_err"))
+        round(abs(col("pred") - col("qlabel")), 6).as("abs_err"))
       .orderBy(col("qid"))
-  }
 
   /** A8: radius / threshold similarity join — all pairs closer than tau.
     * With ~random 64-d vectors cosine distance concentrates near 1, so a
@@ -198,10 +202,8 @@ object Knn {
     * Floored at 2: a candidate set that fits ONE block belongs to the
     * broadcast layout (knn_topk), so this operator always exercises the
     * partial-heap merge path it exists to provide. */
-  private[graft] def candidateBlocks(s: SparkSession, d: String,
-      budget: Long = DefaultBlockBytes): Int = {
-    val bytes = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), col("label"))
+  private[graft] def candidateBlocks(e: DataFrame, budget: Long): Int = {
+    val bytes = e.select(col("vec_id"), col("embedding"), col("label"))
       .queryExecution.optimizedPlan.stats.sizeInBytes
     ((bytes + budget - 1) / budget).min(4096).max(2).toInt
   }
@@ -224,7 +226,7 @@ object Knn {
     val p = Tables.parallelism(s)
     val q = e.repartition(p)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val c = e.repartition(candidateBlocks(s, d, budget))
+    val c = e.repartition(candidateBlocks(e, budget))
       .select(col("vec_id").as("cid"), col("embedding").as("cv"),
         col("label").as("clabel"))
     // SHUFFLE_REPLICATE_NL forbids the broadcast fallback the optimizer
@@ -246,21 +248,15 @@ object Knn {
   /** A5b: rank-weighted (Borda-count) vote — neighbor at rank r
     * contributes weight K-r+1. Integer weights keep the vote exactly
     * engine-portable (1/d weights would be order-dependent float sums). */
-  def knnClassifyWeighted(s: SparkSession, d: String): DataFrame = {
-    val votes = topkRankedShared(s, d)
-      .groupBy(col("qid"), col("clabel"))
-      .agg(sum(lit(K + 1) - col("rnk")).as("w"))
-    val wv = Window.partitionBy(col("qid")).orderBy(col("w").desc, col("clabel").asc)
-    votes.withColumn("vr", row_number().over(wv)).where(col("vr") === 1)
-      .select(col("qid"), col("clabel").as("pred"))
-      .orderBy(col("qid"))
-  }
+  def knnClassifyWeighted(s: SparkSession, d: String): DataFrame =
+    predictionsAt(s, d, Seq(K), lit(K + 1) - col("rnk"))
+      .select(col("qid"), col("pred")).orderBy(col("qid"))
 
   /** A6c: per-class precision/recall/F1 derived from the confusion
     * matrix — integer counts, single-division ratios. */
   def knnPrf(s: SparkSession, d: String): DataFrame = {
-    val truth = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val joined = knnClassify(s, d).join(truth, col("qid") === col("vec_id"))
+    val joined = predictionsAt(s, d, Seq(K), lit(1))
+      .withColumnRenamed("qlabel", "label")
     val perPred = joined.groupBy(col("pred").as("cls"))
       .agg(count(lit(1)).as("n_pred"),
         sum(when(col("pred") === col("label"), 1L).otherwise(0L)).as("tp"))
@@ -282,13 +278,11 @@ object Knn {
   }
 
   /** A6b: confusion matrix of the leave-one-out classifier. */
-  def knnConfusion(s: SparkSession, d: String): DataFrame = {
-    val truth = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    knnClassify(s, d).join(truth, col("qid") === col("vec_id"))
-      .groupBy(col("label"), col("pred"))
+  def knnConfusion(s: SparkSession, d: String): DataFrame =
+    predictionsAt(s, d, Seq(K), lit(1))
+      .groupBy(col("qlabel").as("label"), col("pred"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("label"), col("pred"))
-  }
 
   /** e04: the same exact-KNN semantics expressed ENTIRELY through the SQL
     * front end — temp view + a SQL string calling the injected codegen'd
@@ -342,7 +336,7 @@ object Knn {
     |  row_number() OVER (PARTITION BY qid ORDER BY dist ASC, cid ASC) AS rnk
     |  FROM pairs)""".stripMargin
   // ONE vote-pipeline CTE builder (suffix-parameterized so the k-sweep
-  // can instantiate it per k) — the oracle mirror of classifyAt.
+  // can instantiate it per k) — the oracle mirror of predictionsAt.
   private def voteCtes(k: Int, sfx: String) =
     s"""votes$sfx AS (SELECT qid, clabel, count(*) AS n
        |  FROM ranked WHERE rnk <= $k GROUP BY qid, clabel),

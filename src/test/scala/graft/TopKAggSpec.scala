@@ -55,8 +55,9 @@ class TopKAggSpec extends SparkSpec {
   test("blocked knn: block count follows the byte budget, results don't") {
     // tiny budget → many blocks; huge budget → the 2-block floor (one
     // block would mean the broadcast layout is the right operator)
-    val many = ops.Knn.candidateBlocks(spark, sf0001, 4096L)
-    val few = ops.Knn.candidateBlocks(spark, sf0001, 1L << 30)
+    val emb = Tables.embeddings(spark, sf0001)
+    val many = ops.Knn.candidateBlocks(emb, 4096L)
+    val few = ops.Knn.candidateBlocks(emb, 1L << 30)
     assert(few == 2 && many > few, s"few=$few many=$many")
     // result invariance across block counts (the partial heaps merge to
     // the same total order no matter how the candidate side is cut)
