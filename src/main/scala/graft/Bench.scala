@@ -25,9 +25,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** The BASELINE.md headline set (same workload shapes, same order). */
   private val headline = Seq(
-    "knn_topk",       // exact 10-NN cosine, window top-k — 17.5 s baseline
+    "knn_topk",       // exact 10-NN cosine, heap top-k — 17.5 s baseline
     "knn_classify",   // full A1–A5 pipeline
-    "knn_topk_agg",   // bounded-heap aggregate form of the same
+    "knn_topk_agg",   // the same ranked set under its heap-form name
     "b07_agg_q1",     // TPC-H Q1-shape aggregate — 0.31 s baseline
     "b03_join_broadcast", // star join + agg — 0.48 s baseline
     "c01_dedup_exact",    // normalized-text dedup — 0.30 s baseline
@@ -107,7 +107,7 @@ object Bench {
       }
       // Cold and warm reps are INTERLEAVED, not phased. Round 8's driver
       // run recorded knn_topk_agg warm=3.88 s vs cold=0.42 s, which is
-      // impossible steady-state (the query touches no session cache, so
+      // impossible steady-state (the query then touched no session cache, so
       // warm and cold do identical work) and not reproducible locally
       // (warm ≈ cold ≈ 0.5 s in isolation and in full-bench reruns).
       // Cause: the 5 warm reps ran back-to-back in a ~3 s window AFTER

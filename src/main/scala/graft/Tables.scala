@@ -147,8 +147,8 @@ object Tables {
     * 4.0–5.4 s broadcast, local[4]). */
   val BroadcastCeilingBytes: Long = 700L << 20
 
-  /** Estimated built bytes per corpus row of each join side the ANN/NSW
-    * tiers size with [[broadcastFits]]. */
+  /** Estimated built bytes per corpus row of each join side the KNN scan
+    * and the ANN/NSW tiers size with [[broadcastFits]]. */
   object RowBytes {
     /** One query's ADC lookup table: 8 subspaces × 256 codewords of
       * doubles, plus array and row headers. */
@@ -165,25 +165,29 @@ object Tables {
     val Adjacency = 26 * 48L
   }
 
-  /** The one broadcast-or-partition rule for the ANN/NSW join sides
-    * whose size is known by construction: broadcast while `rows` ×
-    * `rowBytes` fits [[BroadcastCeilingBytes]], unless the session has
-    * turned broadcast off (`spark.sql.autoBroadcastJoinThreshold` ≤ 0).
-    * The choice only picks the exchange of the same join, so it never
-    * changes an answer. */
+  /** The one broadcast-or-partition rule for the KNN candidate side and
+    * the ANN/NSW join sides, whose sizes are known by construction:
+    * broadcast while `rows` × `rowBytes` fits [[BroadcastCeilingBytes]],
+    * unless the session has turned broadcast off
+    * (`spark.sql.autoBroadcastJoinThreshold` ≤ 0). The choice only picks
+    * the layout of the same join, so it never changes an answer. */
   private[graft] def broadcastFits(s: SparkSession, rows: Long,
       rowBytes: Long): Boolean =
     s.sessionState.conf.autoBroadcastJoinThreshold > 0 &&
       rows * rowBytes <= BroadcastCeilingBytes
 
-  /** `side` broadcast when it fits at `rowBytes` per corpus vector
-    * ([[broadcastFits]]; the vector count is the embeddings footer, no
-    * job), else hinted `shuffle_hash`: key-partitioned, nothing
-    * replicated per executor, and no sort of the big side as a
+  /** [[broadcastFits]] for a side of `rowBytes` per corpus vector of
+    * dataset `d`; the vector count is the embeddings footer, no job. */
+  private[graft] def corpusFits(s: SparkSession, d: String,
+      rowBytes: Long): Boolean =
+    broadcastFits(s, footerRowCount(s, s"$d/embeddings.parquet"), rowBytes)
+
+  /** `side` broadcast when the corpus fits at `rowBytes` per vector
+    * ([[corpusFits]]), else hinted `shuffle_hash`: key-partitioned,
+    * nothing replicated per executor, and no sort of the big side as a
     * sort-merge join would do. */
   private[graft] def sizedSide(s: SparkSession, d: String, side: DataFrame,
       rowBytes: Long): DataFrame =
-    if (broadcastFits(s, footerRowCount(s, s"$d/embeddings.parquet"),
-        rowBytes)) broadcast(side)
+    if (corpusFits(s, d, rowBytes)) broadcast(side)
     else side.hint("shuffle_hash")
 }

@@ -14,11 +14,13 @@ import graft.ops.{Ann, Knn, Nsw, TextOps}
   * sf1 (4·10⁸ list_cosine calls ≈ days in DuckDB). At this tier the
   * correctness instrument changes, not the bar:
   *
-  *  - exact KNN is checked by TRIPLE AGREEMENT — the window form, the
-  *    blocked SHUFFLE_REPLICATE_NL form, and the bounded-heap aggregate
-  *    form are three independently-implemented physical plans whose
-  *    results must be row-identical (each pair is already hash-oracled
-  *    vs DuckDB at sf0.01/sf0.1, so this extends the same contract);
+  *  - exact KNN is checked by TRIPLE AGREEMENT — the broadcast scan
+  *    with its heap cut (knn_topk), the blocked SHUFFLE_REPLICATE_NL
+  *    scan with the same cut (knn_topk_blocked), and a row_number window
+  *    over the broadcast pair stream are three independent physical
+  *    plans whose results must be row-identical (the first two are
+  *    already hash-oracled vs DuckDB at sf0.01/sf0.1, so this extends
+  *    the same contract);
   *  - ANN tiers are checked by their LAWS (composed ≤ routing recall)
   *    and their production recall bars against the exact top-k the
   *    triple agreement just certified;
@@ -58,6 +60,19 @@ object ScaleCheck {
     * a ~90 GB disk to no-space when pairs still EXCHANGED; 3.1·10⁸
     * built in ~35 GB. */
   val SeedBuildCapacity = 800000000L
+
+  /** knn_topk cut by a rank window instead of the heap: row_number over
+    * (dist, cid) per query on the broadcast pair stream — the triple
+    * agreement's third, cut-independent plan, and the reference the
+    * TopKAggSpec heap laws compare with. Unordered. */
+  private[graft] def windowTopk(s: SparkSession, d: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
+      .orderBy(col("dist").asc, col("cid").asc)
+    Knn.scan(graft.Tables.embeddings(s, d),
+        graft.functions.VectorExpressions.cosine_distance(s, _, _), Knn.Broadcast)
+      .withColumn("rnk", row_number().over(w)).where(col("rnk") <= Knn.K)
+      .select(col("qid"), col("rnk"), col("cid"), round(col("dist"), 6).as("dist"))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("localdata/sf1")
@@ -103,15 +118,15 @@ object ScaleCheck {
       df.collect().map(_.toString).sorted
 
     // --- exact KNN: three independent physical plans, one result
-    val topkWindow = canon(Knn.knnTopk(spark, sfDir))
+    val topk = canon(Knn.knnTopk(spark, sfDir))
     check("knn triple agreement") {
       val blocked = canon(Knn.knnTopkBlocked(spark, sfDir))
-      val agg = canon(Knn.knnTopkAgg(spark, sfDir))
-      require(topkWindow.sameElements(blocked),
-        s"window(${topkWindow.length}) != blocked(${blocked.length})")
-      require(topkWindow.sameElements(agg),
-        s"window(${topkWindow.length}) != agg(${agg.length})")
-      s"3 plans × ${topkWindow.length} rows identical"
+      val window = canon(windowTopk(spark, sfDir))
+      require(topk.sameElements(blocked),
+        s"heap(${topk.length}) != blocked(${blocked.length})")
+      require(topk.sameElements(window),
+        s"heap(${topk.length}) != window(${window.length})")
+      s"3 plans × ${topk.length} rows identical"
     }
 
     // --- ANN: laws + production bars vs the certified exact top-k.

@@ -202,4 +202,50 @@ class KnnSpec extends SparkSpec {
     assert(byQid.isEmpty, s"knn_ksweep re-shuffles on qid: $byQid\n$plan")
     assert(jobs.get <= 5, s"knn_ksweep launched ${jobs.get} Spark jobs")
   }
+
+  /** Join operators of an executed plan, the plans of cached relations
+    * it reads included (knn_topk reads the session's cached ranked set). */
+  private def joinsIn(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    new AdaptiveSparkPlanHelper {}.flatMap(plan) {
+      case m: InMemoryTableScanExec => joinsIn(m.relation.cachedPlan)
+      case j: BaseJoinExec => Seq(j.nodeName)
+      case _ => Nil
+    }
+  }
+
+  test("layout law: with broadcast turned off knn_topk plans the block " +
+    "layout (CartesianProduct, no BroadcastNestedLoopJoin) with the " +
+    "broadcast layout's rows, and knn_ksweep still re-shuffles nothing on qid") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val wide = ops.Knn.knnTopk(spark, sf0001)
+    val wideRows = wide.collect().toSeq
+    val wideJoins = joinsIn(wide.queryExecution.executedPlan)
+    assert(wideJoins === Seq("BroadcastNestedLoopJoin"), wideJoins)
+    assert(wideRows.length === 500 * ops.Knn.K)
+    val off = spark.newSession()
+    off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val df = ops.Knn.knnTopk(off, sf0001)
+      val rows = df.collect().toSeq
+      val joins = joinsIn(df.queryExecution.executedPlan)
+      assert(!joins.contains("BroadcastNestedLoopJoin"), joins)
+      assert(joins.contains("CartesianProduct"), joins)
+      assert(rows === wideRows)
+      // the cached set keeps the cut's qid partitioning in this layout too
+      val sweep = ops.Knn.knnKSweep(off, sf0001)
+      sweep.collect()
+      val byQid = new AdaptiveSparkPlanHelper {}
+        .collect(sweep.queryExecution.executedPlan) {
+          case x: ShuffleExchangeExec => x.outputPartitioning
+        }.collect {
+          case p: Expression if p.references.exists(_.name == "qid") => p
+        }
+      assert(byQid.isEmpty, s"knn_ksweep re-shuffles on qid: $byQid")
+    } finally ops.Knn.clearCache()
+  }
 }

@@ -9,13 +9,17 @@ import graft.functions.TopKAgg
 class TopKAggSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The rank-window reference (ScaleCheck's third plan) as ordered rows. */
+  private def windowRows =
+    tools.ScaleCheck.windowTopk(spark, sf0001).orderBy($"qid", $"rnk")
+      .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
+      .as[(Long, Long, Long, Double)].collect()
+
   test("top_k_by equals window row_number top-k on the embeddings pipeline") {
-    val aggResult = ops.Knn.knnTopkAgg(spark, sf0001)
+    val aggResult = ops.Knn.knnTopk(spark, sf0001)
       .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
       .as[(Long, Long, Long, Double)].collect()
-    val winResult = ops.Knn.knnTopk(spark, sf0001)
-      .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
-      .as[(Long, Long, Long, Double)].collect()
+    val winResult = windowRows
     assert(aggResult.length === winResult.length)
     assert(aggResult.sameElements(winResult))
   }
@@ -32,7 +36,7 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("top_k_by plans partial aggregation before the exchange") {
-    val plan = ops.Knn.knnTopkAgg(spark, sf0001)
+    val plan = ops.Knn.topkRanked(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_top_k_by") || plan.contains("partial_"), plan)
   }
@@ -46,9 +50,7 @@ class TopKAggSpec extends SparkSpec {
     val blocked = ops.Knn.knnTopkBlocked(spark, sf0001)
       .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
       .as[(Long, Long, Long, Double)].collect()
-    val win = ops.Knn.knnTopk(spark, sf0001)
-      .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
-      .as[(Long, Long, Long, Double)].collect()
+    val win = windowRows
     assert(blocked.sameElements(win))
   }
 
@@ -61,9 +63,7 @@ class TopKAggSpec extends SparkSpec {
     assert(few == 2 && many > few, s"few=$few many=$many")
     // result invariance across block counts (the partial heaps merge to
     // the same total order no matter how the candidate side is cut)
-    val win = ops.Knn.knnTopk(spark, sf0001)
-      .select($"qid", $"rnk".cast("long"), $"cid", $"dist")
-      .as[(Long, Long, Long, Double)].collect()
+    val win = windowRows
     for (budget <- Seq(4096L, 1L << 30)) {
       val blocked = ops.Knn.knnTopkBlockedAt(spark, sf0001, budget)
         .select($"qid", $"rnk".cast("long"), $"cid", $"dist")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Pair perfbench run records of two checkouts by seed and judge the A/B.
 
-Usage: perf_pairs.py PARENT_DIR CHANGE_DIR [--trace 0|1] [--workload W]
+Usage: perf_pairs.py PARENT_DIR CHANGE_DIR [--trace 0|1] [--workload W] [--queries]
 
 Each DIR is a repository checkout in which `perfbench/run.py` has run;
 its records are `.bench_build/records/<workload>-seed<n>-trace<t>.json`.
@@ -13,6 +13,9 @@ whether the paired-runs rule holds: the change wins at least 9/10 of the
 pairs (ties count for neither side) and its median beats the parent's by
 more than the parent's interquartile range. A metric whose change median is
 worse than the parent's by more than its `bound` is marked OVER BOUND.
+With `--queries` the rows are the workload's queries instead: each side's
+value per seed is the median build+run seconds of that query's samples in
+the record's untraced passes, judged by the same rule.
 The script only reads; it writes nothing.
 """
 import argparse
@@ -37,6 +40,16 @@ def records(root, trace):
         with open(path) as fh:
             out.setdefault(m["workload"], {})[int(m["seed"])] = json.load(fh)
     return out
+
+
+def query_times(rec):
+    """{query: median build+run seconds over the record's untraced samples}."""
+    traced = rec.get("pass_traced", [])
+    per = {}
+    for p, q, build, run in rec.get("samples", []):
+        if not (p - 1 < len(traced) and traced[p - 1]):
+            per.setdefault(q, []).append(build + run)
+    return {q: statistics.median(xs) for q, xs in per.items()}
 
 
 def quartiles(xs):
@@ -68,6 +81,8 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--workload")
+    ap.add_argument("--queries", action="store_true",
+                    help="one row per query: median build+run seconds")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
@@ -91,13 +106,23 @@ def main():
             print(f"{side}: commit {', '.join(commits)}; "
                   f"runs with failures or oracle mismatches: {bad or 'none'}")
         print()
-        print("| metric | parent median [q1-q3] | change median [q1-q3] "
+        if a.queries:
+            pt = {s: query_times(par[wl][s]) for s in seeds}
+            ct = {s: query_times(chg[wl][s]) for s in seeds}
+            names = sorted({q for s in seeds for q in list(pt[s]) + list(ct[s])})
+            rows = [({"name": q},
+                     [pt[s].get(q) for s in seeds], [ct[s].get(q) for s in seeds])
+                    for q in names]
+        else:
+            rows = [(m, [par[wl][s]["metrics"].get(m["name"]) for s in seeds],
+                     [chg[wl][s]["metrics"].get(m["name"]) for s in seeds])
+                    for m in metrics]
+        print(f"| {'query (build+run s)' if a.queries else 'metric'} "
+              "| parent median [q1-q3] | change median [q1-q3] "
               "| change | wins/ties/pairs | paired-runs rule |")
         print("|---|---|---|---|---|---|")
-        for m in metrics:
+        for m, pv, cv in rows:
             name = m["name"]
-            pv = [par[wl][s]["metrics"].get(name) for s in seeds]
-            cv = [chg[wl][s]["metrics"].get(name) for s in seeds]
             if None in pv or None in cv:
                 print(f"| {name} | missing | missing | | | |")
                 continue
