@@ -157,6 +157,10 @@ object Tables {
     val Embedding = 300L
     /** One (cid, code0..code7) PQ code row. */
     val PqCodes = 80L
+    /** One (vec_id, 64 SQ8 codes) row: the row's null word and two
+      * fixed slots (the id, the array's offset and size), then the
+      * array's element count, its null word and 64 longs. */
+    val Sq8Codes = 8 + 2 * 8 + 8 + 8 + 64 * 8L
     /** One vertex's NSW search adjacency: at most M + F + 2 = 26 edges
       * of two longs (+1 absorbs rounding in the ring arithmetic, +1 is
       * the self-loop row), at 48 B per row of the built HashedRelation

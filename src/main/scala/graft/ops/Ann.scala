@@ -226,26 +226,22 @@ object Ann {
     * top `p`. Returns (qid, qv, cent_id); consumers that don't need the
     * query vector drop `qv`. Shared by the exact-within-lists IVF tier
     * and the IVFPQ composition so a tie-break or P change can never
-    * drift between them. */
-  private[graft] def probesOf(s: SparkSession, d: String, cents: DataFrame,
-      p: Int, qWhere: Option[org.apache.spark.sql.Column] = None,
-      qOnly: Option[DataFrame] = None): DataFrame = {
-    val all = Tables.embeddings(s, d)
-    val filtered = qWhere.map(all.where).getOrElse(all)
-    // qOnly: restrict the query side to an explicit (small) id set that
-    // is not expressible as a row-local predicate — e.g. the capped
-    // recall sample, a top-N by hash. Broadcast left-semi so only the
-    // corpus scan streams; the id set never shuffles the big side.
-    val restricted = qOnly.map(ids => filtered.join(
-        broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_semi"))
-      .getOrElse(filtered)
+    * drift between them.
+    *
+    * `queries` are the query rows, (vec_id, embedding) rows of the
+    * embeddings table: the whole table for every declared query, a
+    * slice or a sample of it for the NSW base build and the sampled
+    * recall. Queries are routed independently, so routing a subset
+    * gives exactly the subset's rows of the full routing. */
+  private[graft] def probesOf(s: SparkSession, queries: DataFrame,
+      cents: DataFrame, p: Int): DataFrame = {
     // keyed repartition (r17, the Knn.pairs move): hashing the query
     // side by vec_id up front lets the broadcast cross join preserve the
     // partitioning, so the top-p heap below plans ONE complete
     // aggregation with zero exchanges (round-robin forced a
     // partial/final split around a buffer shuffle). Same one up-front
     // shuffle either way.
-    val e = restricted.repartition(Tables.parallelism(s), col("vec_id"))
+    val e = queries.repartition(Tables.parallelism(s), col("vec_id"))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     // Top-p cut via the bounded heap, not a rank window (r16 — the r15
     // sort-free-bestM lesson applied to routing BEFORE the 2M tier
@@ -306,16 +302,15 @@ object Ann {
     * the result is row-identical to flat `probesOf(seedC, p)` — the
     * reduced-pCoarse form is the measured approximation, gated by its
     * own tier recall row before any build relies on it. */
-  private[graft] def hierProbesOf(s: SparkSession, d: String, seedC: Int,
-      coarseC: Int, pCoarse: Int, p: Int,
-      qWhere: Option[org.apache.spark.sql.Column] = None,
-      qOnly: Option[DataFrame] = None): DataFrame = {
+  private[graft] def hierProbesOf(s: SparkSession, d: String,
+      queries: DataFrame, seedC: Int, coarseC: Int, pCoarse: Int,
+      p: Int): DataFrame = {
     require(coarseC < seedC && Integer.bitCount(coarseC) == 1,
       s"coarseC=$coarseC must be a power of two below seedC=$seedC")
     val coarse = centroidsAt(s, d, coarseC)
     // stage 1: each query's pCoarse nearest coarse cells (n·coarseC
     // scored rows) — literally probesOf over the coarse prefix
-    val s1 = probesOf(s, d, coarse, pCoarse, qWhere, qOnly)
+    val s1 = probesOf(s, queries, coarse, pCoarse)
       .select(col("qid"), col("qv"), col("cent_id").as("coarse_id"))
     // the centroid→coarse inverted list: every seed centroid argmin-
     // assigned to a coarse cell (seedC·coarseC rows — trivial); the
@@ -408,17 +403,26 @@ object Ann {
       .min(1L << 22).toInt
   }
 
-  /** A corpus-embedding lookup of the quantized tiers' exact rerank,
-    * sized by [[graft.Tables.sizedSide]]. r18, measured at the 63k
-    * rehearsal: with neither hint the planner's size ESTIMATE crossed
-    * the 10 MB auto-broadcast default (63k × ~300 B ≈ 19 MB) and flipped
-    * both lookups to SORT-MERGE — which local-sorted the 400M-row
-    * (n·n/10) rerank stream, with the 260 B query embedding attached
-    * after the first join, into ~80 GB of UnsafeExternalSorter spill and
-    * a disk-full abort (SCALE_r18.md §4). */
-  private def rerankEmbSide(s: SparkSession, d: String,
-      proj: DataFrame): DataFrame =
-    Tables.sizedSide(s, d, proj, Tables.RowBytes.Embedding)
+  /** THE exact re-score of every ANN/NSW tier: (qid, cid) pairs →
+    * (qid, cid, dist), the cosine distance of the two corpus vectors.
+    * Both embedding lookups are sized by [[graft.Tables.sizedSide]], so
+    * they broadcast while the corpus fits and shuffle-hash past it, and
+    * never follow the planner's size ESTIMATE. r18, measured at the 63k
+    * rehearsal: with neither hint that estimate crossed the 10 MB
+    * auto-broadcast default (63k × ~300 B ≈ 19 MB) and flipped both
+    * lookups to SORT-MERGE — which local-sorted the 400M-row (n·n/10)
+    * rerank stream, with the 260 B query embedding attached after the
+    * first join, into ~80 GB of UnsafeExternalSorter spill and a
+    * disk-full abort (SCALE_r18.md §4). */
+  private[graft] def exactScored(s: SparkSession, d: String,
+      pairs: DataFrame): DataFrame = {
+    def lookup(id: String, vec: String) = Tables.sizedSide(s, d,
+      Tables.embeddings(s, d).select(col("vec_id").as(id), col("embedding").as(vec)),
+      Tables.RowBytes.Embedding)
+    pairs.join(lookup("qid", "qv"), Seq("qid")).join(lookup("cid", "cv"), Seq("cid"))
+      .select(col("qid"), col("cid"),
+        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist"))
+  }
 
   /** Keep each query's `rlim` best candidates under the (score, cid)
     * total order — the quantized-tier pre-cut, heap form (map-side
@@ -437,7 +441,8 @@ object Ann {
     * IVFPQ, SQ8, IVF×SQ8): keep each query's
     * `greatest(PqRerankMin, n·cutNum DIV cutDen)` best candidates under
     * the quantized `score` ([[heapCut]], limit from [[rerankLimit]]),
-    * then exact cosine over the survivors and the final heap top-K →
+    * then the exact re-score ([[exactScored]]) of the survivors and the
+    * final heap top-K →
     * (qid, rnk, cid, dist). Both cuts are heap form with plan-time
     * limits (r17): the old runtime-column limit (agg + crossJoin)
     * blinded every bound pushdown, so the full scored pair stream was
@@ -448,13 +453,7 @@ object Ann {
   private def rerankTopk(s: SparkSession, d: String, scored: DataFrame,
       score: String, cutNum: Int, cutDen: Int): DataFrame = {
     val cands = heapCut(s, scored, score, rerankLimit(s, d, cutNum, cutDen))
-    val q = rerankEmbSide(s, d, Tables.embeddings(s, d)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val c = rerankEmbSide(s, d, Tables.embeddings(s, d)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-    heapTopK(s, cands.join(q, Seq("qid")).join(c, Seq("cid"))
-      .select(col("qid"), col("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
+    heapTopK(s, exactScored(s, d, cands))
   }
 
   /** The flat quantized scans' query side (PQ and SQ8): `side`'s rows
@@ -488,27 +487,29 @@ object Ann {
         lists.select(col("cent_id") +: col("vec_id").as("cid") +: listCols: _*))
       .where(col("qid") =!= col("cid"))
 
-  /** IVF approximate top-k under `cents`/`lists`: probe the `p` nearest
-    * lists per query, exact cosine within the probed lists. Leave-one-out
-    * like knn_topk. Top-K via the bounded heap (r17): the probed
-    * candidate stream is n·p/C rows per query; see [[heapTopK]]. */
-  private def ivfTopkFrom(s: SparkSession, d: String, cents: DataFrame,
-      lists: DataFrame, p: Int,
-      qOnly: Option[DataFrame] = None): DataFrame =
-    heapTopK(s, probedCandidates(probesOf(s, d, cents, p, qOnly = qOnly),
+  /** IVF approximate top-k of the `queries` rows (see [[probesOf]])
+    * under `cents`/`lists`: probe the `p` nearest lists per query, exact
+    * cosine within the probed lists. Leave-one-out like knn_topk. Top-K
+    * via the bounded heap (r17): the probed candidate stream is n·p/C
+    * rows per query; see [[heapTopK]]. */
+  private[graft] def ivfTopkFrom(s: SparkSession, queries: DataFrame,
+      cents: DataFrame, lists: DataFrame, p: Int): DataFrame =
+    heapTopK(s, probedCandidates(probesOf(s, queries, cents, p),
         lists, Seq(col("embedding").as("cv")))
       .select(col("qid"), col("cid"),
         VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
 
   def ivfTopk(s: SparkSession, d: String): DataFrame =
-    ivfTopkFrom(s, d, centroids(s, d), assignments(s, d), P)
+    ivfTopkFrom(s, Tables.embeddings(s, d), centroids(s, d),
+      assignments(s, d), P)
 
   def ivfTopkTrained(s: SparkSession, d: String): DataFrame =
-    ivfTopkFrom(s, d, trainedCentroids(s, d), trainedAssignments(s, d), P)
+    ivfTopkFrom(s, Tables.embeddings(s, d), trainedCentroids(s, d),
+      trainedAssignments(s, d), P)
 
   private[graft] def ivfTopkTrainedAt(s: SparkSession, d: String,
       c: Int, p: Int): DataFrame =
-    ivfTopkFrom(s, d, trainedCentroidsAt(s, d, c),
+    ivfTopkFrom(s, Tables.embeddings(s, d), trainedCentroidsAt(s, d, c),
       trainedAssignmentsAt(s, d, c), p)
 
   private[graft] def recallTrainedAt(s: SparkSession, d: String,
@@ -726,7 +727,8 @@ object Ann {
   private[graft] def ivfpqTopkFrom(s: SparkSession, d: String,
       cents: DataFrame, lists: DataFrame, p: Int,
       codes: Option[DataFrame] = None, nLists: Int = C): DataFrame = {
-    val cand = probedCandidates(probesOf(s, d, cents, p), lists, Nil)
+    val cand = probedCandidates(
+        probesOf(s, Tables.embeddings(s, d), cents, p), lists, Nil)
       .select(col("qid"), col("cid"))
     val scored = adcScored(s, d, cand.join(codes.getOrElse(pqCodes(s, d))
       .withColumnRenamed("vec_id", "cid"), Seq("cid")))
@@ -760,22 +762,21 @@ object Ann {
       Some(storedCodes(s, d)))
 
   def ivfpqRecall(s: SparkSession, d: String): DataFrame =
-    recallOf(s, d, ivfpqTopk(s, d).select(col("qid"), col("cid")))
+    recallOf(s, d, ivfpqTopk(s, d))
 
   private[graft] def ivfpqRecallSeedAt(s: SparkSession, d: String,
       p: Int): DataFrame =
-    recallOf(s, d, ivfpqTopkFrom(s, d, centroids(s, d), assignments(s, d), p)
-      .select(col("qid"), col("cid")))
+    recallOf(s, d, ivfpqTopkFrom(s, d, centroids(s, d), assignments(s, d), p))
 
   private[graft] def ivfpqRecallTrainedAt(s: SparkSession, d: String,
       c: Int, p: Int): DataFrame =
     recallOf(s, d, ivfpqTopkFrom(s, d, trainedCentroidsAt(s, d, c),
-      trainedAssignmentsAt(s, d, c), p, nLists = c)
-      .select(col("qid"), col("cid")))
+      trainedAssignmentsAt(s, d, c), p, nLists = c))
 
   private[graft] def recallSeedAt(s: SparkSession, d: String,
       p: Int): DataFrame =
-    recallOf(s, d, ivfTopkFrom(s, d, centroids(s, d), assignments(s, d), p))
+    recallOf(s, d, ivfTopkFrom(s, Tables.embeddings(s, d), centroids(s, d),
+      assignments(s, d), p))
 
   // ------------------------------------------------ stored index (r10)
 
@@ -870,7 +871,8 @@ object Ann {
     * oracle SQL) to ann_ivf_topk_trained, but consuming the persisted
     * index, so a cold session pays probe cost only. */
   def ivfTopkIndexed(s: SparkSession, d: String): DataFrame =
-    ivfTopkFrom(s, d, storedCentroids(s, d), storedLists(s, d), P)
+    ivfTopkFrom(s, Tables.embeddings(s, d), storedCentroids(s, d),
+      storedLists(s, d), P)
 
   // -------------------------------------------- incremental maintenance
 
@@ -982,7 +984,8 @@ object Ann {
     * base ∪ delta lists, so arriving vectors are immediately
     * searchable without a rebuild. */
   def ivfTopkUpserted(s: SparkSession, d: String): DataFrame =
-    ivfTopkFrom(s, d, upsertedCentroids(s, d), upsertedLists(s, d), P)
+    ivfTopkFrom(s, Tables.embeddings(s, d), upsertedCentroids(s, d),
+      upsertedLists(s, d), P)
 
   /** The delta file set alone — the arriving batch the graph tier's
     * delta-serving union reads (never the base files). */
@@ -995,7 +998,8 @@ object Ann {
     * from the delta lists ONLY — O(n · P · |delta|/C) work, the term
     * that stays cheap while the base graph serves the bulk. */
   private[graft] def ivfTopkDelta(s: SparkSession, d: String): DataFrame =
-    ivfTopkFrom(s, d, upsertedCentroids(s, d), deltaLists(s, d), P)
+    ivfTopkFrom(s, Tables.embeddings(s, d), upsertedCentroids(s, d),
+      deltaLists(s, d), P)
 
   // ------------------------------------------------ retrain lifecycle
 
@@ -1060,11 +1064,12 @@ object Ann {
   /** ann_ivf_topk_retrained: search over the retrained version — must
     * equal fresh-build search bit-exactly (shares the trained oracle). */
   def ivfTopkRetrained(s: SparkSession, d: String): DataFrame =
-    ivfTopkFrom(s, d, retrainedCentroids(s, d), retrainedLists(s, d), P)
+    ivfTopkFrom(s, Tables.embeddings(s, d), retrainedCentroids(s, d),
+      retrainedLists(s, d), P)
 
   /** recall@K of the PQ→re-rank pipeline vs the exact top-k. */
   def pqRecall(s: SparkSession, d: String): DataFrame =
-    recallOf(s, d, pqRerankTopk(s, d).select(col("qid"), col("cid")))
+    recallOf(s, d, pqRerankTopk(s, d))
 
   /** Code histogram per subspace — quantization balance (a subspace
     * whose codes collapse onto few codewords carries no information). */
@@ -1081,17 +1086,38 @@ object Ann {
   def ivfStats(s: SparkSession, d: String): DataFrame =
     listCensus(assignments(s, d))
 
-  /** recall@K of an approximate top-k against the exact ops.Knn top-k —
-    * pure integer counts plus one division, so the quality of the
-    * approximate index is itself an oracle-checked number. */
-  private[graft] def recallOf(s: SparkSession, d: String, approx: DataFrame): DataFrame = {
-    val exact = Knn.knnTopk(s, d).select(col("qid"), col("cid"))
+  /** recall@K of an approximate top-k against the exact ops.Knn top-k
+    * over every query: [[recall]] with the session-cached exact ranked
+    * set as its exact arm. */
+  private[graft] def recallOf(s: SparkSession, d: String,
+      approx: DataFrame): DataFrame =
+    recall(approx, Knn.knnTopk(s, d))
+
+  /** THE recall tail of every ANN/NSW tier: recall@K of the `approx`
+    * top-K against the `exact` top-K over the same queries, both read
+    * as (qid, cid) rows — (n_queries, n_hits, recall), pure integer
+    * counts plus one division, so the quality of an approximate index
+    * is itself an oracle-checked number.
+    *
+    * Loud empty guard, IN the plan: a tiny or adversarial id set can
+    * hash nobody to the sampled residue, and a silent NULL recall row
+    * would poison the envelope checks downstream. assert_true returns
+    * NULL when the query set is non-empty, so the recall value is
+    * unchanged, and an empty one fails the job (the DuckDB `error()`
+    * twin) at no extra scan; an eager count() would pay a corpus pass
+    * per call. */
+  private[graft] def recall(approx: DataFrame, exact: DataFrame): DataFrame = {
+    val e = exact.select(col("qid"), col("cid"))
     val hits = approx.select(col("qid"), col("cid"))
-      .join(exact, Seq("qid", "cid"))
+      .join(e, Seq("qid", "cid"))
       .agg(count(lit(1)).as("n_hits"))
-    val nq = exact.agg(countDistinct(col("qid")).as("n_queries"))
+    val nq = e.agg(countDistinct(col("qid")).as("n_queries"))
     hits.crossJoin(nq).select(col("n_queries"), col("n_hits"),
-      round(col("n_hits").cast("double") / (col("n_queries") * lit(K)), 6)
+      when(assert_true(col("n_queries") > 0, lit(
+        s"recall sample is empty: no vec_id hashes to residue 0 mod " +
+          s"$RecallSampleMod under salt '$RecallSampleSalt' - change the " +
+          "salt or evaluate full recall")).isNull,
+        round(col("n_hits").cast("double") / (col("n_queries") * lit(K)), 6))
         .as("recall"))
   }
 
@@ -1128,65 +1154,48 @@ object Ann {
   private[graft] def recallCarvePred(s: SparkSession) =
     pmod(recallSampleHash(s), lit(RecallSampleMod.toLong)) === 0
 
-  /** The capped deterministic query sample: (qid, qv), ≤ cap rows. */
+  /** The capped deterministic query sample: ≤ cap (vec_id, embedding)
+    * rows of the embeddings table — a query set for [[ivfTopkFrom]],
+    * [[Nsw.nswTopkAt]] and [[sampledExact]]. */
   private[graft] def recallSampleOf(s: SparkSession, d: String,
       cap: Int): DataFrame =
     Tables.embeddings(s, d)
       .withColumn("hs", recallSampleHash(s))
       .where(pmod(col("hs"), lit(RecallSampleMod.toLong)) === 0)
       .orderBy(col("hs").asc, col("vec_id").asc).limit(cap)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      .select(col("vec_id"), col("embedding"))
 
-  /** Loud empty-carve guard, IN the plan (ADVICE r12, reworked per the
-    * r13 review): a tiny or adversarial id set can hash nobody to
-    * residue 0, and a silent NULL recall row would poison the envelope
-    * checks downstream. The original guard was an eager extra
-    * full-column count() per invocation — detecting a condition a
-    * billion-row corpus cannot produce at the price of one corpus pass.
-    * Now the final select raises from INSIDE the plan (the DuckDB
-    * `error()` twin): assert_true returns NULL when the carve is
-    * non-empty, so the recall value is unchanged, and an empty carve
-    * fails the job loudly at zero extra scan cost. */
-  private def guardedRecall(nq: org.apache.spark.sql.Column,
-      recall: org.apache.spark.sql.Column) =
-    when(assert_true(nq > 0, lit(
-      s"recall sample is empty: no vec_id hashes to residue 0 mod " +
-        s"$RecallSampleMod under salt '$RecallSampleSalt' - change the " +
-        "salt or evaluate full recall")).isNull, recall)
+  /** The sampled exact arm of [[recall]]: each `sample` query's exact
+    * top-K (qid, cid) over the whole corpus. The sample is the small
+    * side, so it broadcasts and the corpus streams against it — n_s·n
+    * distance evaluations, never n² — and [[heapCut]] cuts at K (r17:
+    * the scored stream is never sorted; same (dist, cid) order as a
+    * rank window). `Knn.scan` does not fit: it broadcasts the corpus. */
+  private[graft] def sampledExact(s: SparkSession, d: String,
+      sample: DataFrame): DataFrame = {
+    val c = Tables.repartitioned(Tables.embeddings(s, d), s)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+    val q = sample.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    heapCut(s, c.crossJoin(broadcast(q))
+      .where(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"),
+        VectorExpressions.cosine_distance(s, col("qv"), col("cv"))
+          .as("dist")), "dist", K)
+  }
 
   /** ann_recall_sampled: recall@K of the trained IVF tier over the
     * deterministic query sample, with exact ground truth computed ONLY
-    * for sampled queries — the small (broadcast) side is the sample,
-    * the corpus streams against it. The approximate side also searches
-    * only the sampled queries (per-query independence makes the
-    * restriction exact, not an approximation). */
+    * for sampled queries ([[sampledExact]]). The approximate side also
+    * searches only the sampled queries (per-query independence makes
+    * the restriction exact, not an approximation). */
   def recallSampled(s: SparkSession, d: String): DataFrame =
     recallSampledAt(s, d, RecallSampleCap)
 
   private[graft] def recallSampledAt(s: SparkSession, d: String,
       cap: Int): DataFrame = {
     val qs = recallSampleOf(s, d, cap)
-    val c = Tables.repartitioned(Tables.embeddings(s, d), s)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    // exact ground truth for the sample, heap cut (r17): the n_s·n
-    // scored stream is never sorted; same (dist, cid) order as the
-    // window it replaces
-    val exact = heapCut(s, c.crossJoin(broadcast(qs))
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv"))
-          .as("dist")), "dist", K)
-    val approx = ivfTopkFrom(s, d, trainedCentroids(s, d),
-      trainedAssignments(s, d), P,
-      qOnly = Some(qs.select(col("qid").as("vec_id"))))
-      .select(col("qid"), col("cid"))
-    val hits = approx.join(exact, Seq("qid", "cid"))
-      .agg(count(lit(1)).as("n_hits"))
-    val nq = exact.agg(countDistinct(col("qid")).as("n_queries"))
-    hits.crossJoin(nq).select(col("n_queries"), col("n_hits"),
-      guardedRecall(col("n_queries"),
-        round(col("n_hits").cast("double") / (col("n_queries") * lit(K)), 6))
-        .as("recall"))
+    recall(ivfTopkFrom(s, qs, trainedCentroids(s, d),
+      trainedAssignments(s, d), P), sampledExact(s, d, qs))
   }
 
   def recallSeed(s: SparkSession, d: String): DataFrame =
@@ -1412,7 +1421,7 @@ object Ann {
   }
 
   def sq8Recall(s: SparkSession, d: String): DataFrame =
-    recallOf(s, d, sq8Topk(s, d).select(col("qid"), col("cid")))
+    recallOf(s, d, sq8Topk(s, d))
 
   /** The IVF×SQ8 composition (FAISS IndexIVFScalarQuantizer): the
     * TRAINED coarse quantizer routes each query into [[P]] of the
@@ -1425,25 +1434,27 @@ object Ann {
     * PQ's — flat recall 1.0 at the graded tiers — so composed recall
     * tracks the routing tier's almost exactly; law-tested ≤ routing in
     * AnnSpec). Candidates route through [[probedCandidates]], like
-    * ivfTopk; the code table joins qid-/cid-keyed (shuffle-hash —
-    * corpus-sized, never broadcast). */
+    * ivfTopk; both code-table lookups are sized by
+    * [[graft.Tables.sizedSide]] at [[graft.Tables.RowBytes.Sq8Codes]]
+    * per vector (broadcast while the corpus fits, qid-/cid-keyed
+    * shuffle-hash past it). */
   def ivfsqTopk(s: SparkSession, d: String): DataFrame = {
-    val cand = probedCandidates(probesOf(s, d, storedCentroids(s, d), P),
+    val cand = probedCandidates(
+        probesOf(s, Tables.embeddings(s, d), storedCentroids(s, d), P),
         storedLists(s, d), Nil)
       .select(col("qid"), col("cid"))
-    val codes = sq8Codes(s, d)
-    val scored = cand
-      .join(codes.select(col("vec_id").as("qid"), col("codes").as("qc"))
-        .hint("shuffle_hash"), Seq("qid"))
-      .join(codes.select(col("vec_id").as("cid"), col("codes").as("cc"))
-        .hint("shuffle_hash"), Seq("cid"))
+    def codes(id: String, c: String) = Tables.sizedSide(s, d,
+      sq8Codes(s, d).select(col("vec_id").as(id), col("codes").as(c)),
+      Tables.RowBytes.Sq8Codes)
+    val scored = cand.join(codes("qid", "qc"), Seq("qid"))
+      .join(codes("cid", "cc"), Seq("cid"))
       .select(col("qid"), col("cid"),
         VectorExpressions.sq_dist_long(s, col("qc"), col("cc")).as("sdc"))
     rerankTopk(s, d, scored, "sdc", P, 2 * C)
   }
 
   def ivfsqRecall(s: SparkSession, d: String): DataFrame =
-    recallOf(s, d, ivfsqTopk(s, d).select(col("qid"), col("cid")))
+    recallOf(s, d, ivfsqTopk(s, d))
 
   /** Per-dimension code census — quantization balance (a dimension whose
     * codes collapse onto few levels carries no ranking information; the

@@ -53,7 +53,7 @@ object Knn {
     * [[Tables.RowBytes.Embedding]] per vector ([[Tables.corpusFits]]),
     * else blocks of [[DefaultBlockBytes]]. The layout never changes an
     * answer. */
-  private def layoutAt(s: SparkSession, d: String): Layout =
+  private[graft] def layoutAt(s: SparkSession, d: String): Layout =
     if (Tables.corpusFits(s, d, Tables.RowBytes.Embedding)) Broadcast
     else Blocks(DefaultBlockBytes)
 
@@ -94,7 +94,7 @@ object Knn {
     * cid) order through the bounded-heap `top_k_by` aggregate, exploded
     * to (qid, qlabel, rnk, cid, clabel, dist) at full precision (the
     * top-k queries round only their projected column). */
-  private def ranked(pairs: DataFrame, k: Int): DataFrame =
+  private[graft] def ranked(pairs: DataFrame, k: Int): DataFrame =
     pairs.groupBy(col("qid"))
       .agg(max(col("qlabel")).as("qlabel"),
         graft.functions.TopKAgg.top_k_by(pairs.sparkSession,

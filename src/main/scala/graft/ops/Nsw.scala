@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.PersistedCache.Materialize
@@ -46,7 +45,9 @@ import graft.functions.VectorExpressions
   *
   * Scale shape: per hop, one join of the (qid, cand) beam against the
   * (M+F)-out-degree adjacency list (broadcast while it fits, else
-  * shuffle-hash — see [[hop]]) plus one per-query bounded-heap cut —
+  * shuffle-hash — see [[hop]]), the exact re-score of the grown beam
+  * ([[Ann.exactScored]], the same lookups every ANN tier re-scores
+  * with, sized by the same rule) and one per-query bounded-heap cut —
   * n_q·B·(M+F) rows in flight, never n². The search touches at
   * most E + H·B·(M+F) ≈ 4.6k candidate slots per query
   * (8 + 4·48·24 = 4616; distinct vertices visited are well below —
@@ -446,6 +447,15 @@ object Nsw {
     // interval.
     "spark.driver.maxResultSize" -> "8g")
 
+  /** The graph's vertex rows: the embeddings table, or its first
+    * `baseN` vectors for the base-only build (ids are contiguous
+    * 0..n−1, the fixture contract). */
+  private def baseSlice(s: SparkSession, d: String,
+      baseN: Option[Long]): DataFrame = {
+    val all = Tables.embeddings(s, d)
+    baseN.fold(all)(c => all.where(col("vec_id") < c))
+  }
+
   /** Seed candidate edges (u, v), u ≠ v, deduped: IVF-cell-local pairs
     * (u meets every member of its PAdj nearest seed cells — one keyed
     * join against the assignment table the IVF tier already maintains)
@@ -469,30 +479,26 @@ object Nsw {
     // (argmin within the probed coarse cells; ≡ the flat global argmin
     // when every coarse cell is probed — spec law), so membership
     // derives from the same checkpointed pass that yields the probes.
-    val qW = baseN.map(c => col("vec_id") < c)
+    val corpus = baseSlice(s, d, baseN)
     val (probes, inv) =
       if (seedRoutingIsHier(seedC)) {
-        val hp = Ann.hierProbesOf(s, d, seedC, coarseCFor(seedC), PAdj,
-            PAdj, qWhere = qW)
+        val hp = Ann.hierProbesOf(s, d, corpus, seedC, coarseCFor(seedC),
+            PAdj, PAdj)
           .select(col("qid"), col("pos"), col("cent_id"))
           .checkpointed
         (hp.select(col("qid").as("u"), col("cent_id")),
           hp.where(col("pos") === 0)
             .select(col("cent_id"), col("qid").as("v")))
       } else (
-        Ann.probesOf(s, d, Ann.centroidsAt(s, d, seedC), PAdj,
-            qWhere = qW)
+        Ann.probesOf(s, corpus, Ann.centroidsAt(s, d, seedC), PAdj)
           .select(col("qid").as("u"), col("cent_id")),
         (baseN match {
           case Some(cut) => Ann.assignmentsBaseAt(s, d, seedC, cut)
           case None => Ann.assignmentsAt(s, d, seedC)
         }).select(col("cent_id"), col("vec_id").as("v")))
     val cell = Ann.probeJoin(probes, inv).select(col("u"), col("v"))
-    val nDf = Tables.embeddings(s, d)
-      .where(baseN.map(c => col("vec_id") < c).getOrElse(lit(true)))
-      .agg(count(lit(1)).as("nn"))
-    val ring = Tables.embeddings(s, d).select(col("vec_id").as("u"))
-      .where(baseN.map(c => col("u") < c).getOrElse(lit(true)))
+    val nDf = corpus.agg(count(lit(1)).as("nn"))
+    val ring = corpus.select(col("vec_id").as("u"))
       .crossJoin(broadcast(nDf))
       .select(col("u"),
         explode(sequence(lit(-RingD), lit(RingD))).as("dlt"), col("nn"))
@@ -506,21 +512,13 @@ object Nsw {
     cell.unionByName(ring).where(col("u") =!= col("v"))
   }
 
-  /** Score candidate (u, v) pairs against the corpus embeddings — the
-    * size-gated lookup half of [[bestM]], reusable on its own so the
-    * descent can score each unordered 2-hop pair ONCE (r18). */
+  /** Score candidate (u, v) pairs through [[Ann.exactScored]] — the
+    * lookup half of [[bestM]], reusable on its own so the descent can
+    * score each unordered 2-hop pair ONCE (r18). */
   private def scoredPairs(s: SparkSession, d: String,
-      cands: DataFrame): DataFrame = {
-    val side = Tables.sizedSide(s, d,
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      Tables.RowBytes.Embedding)
-    val eu = side.select(col("vec_id").as("u"), col("embedding").as("uv"))
-    val ev = side.select(col("vec_id").as("v"), col("embedding").as("vv"))
-    cands.join(eu, Seq("u")).join(ev, Seq("v"))
-      .select(col("u"), col("v"),
-        VectorExpressions.cosine_distance(s, col("uv"), col("vv"))
-          .as("dist"))
-  }
+      cands: DataFrame): DataFrame =
+    Ann.exactScored(s, d, cands.select(col("u").as("qid"), col("v").as("cid")))
+      .select(col("qid").as("u"), col("cid").as("v"), col("dist"))
 
   /** The best-M cut over a pre-scored (u, v, dist) stream — the heap
     * half of [[bestM]]. */
@@ -550,9 +548,10 @@ object Nsw {
     * candidate multiset is the big side, so it must never be SORTED:
     * the original window form spilled the full volume through
     * UnsafeExternalSorter and ran the rehearsal box out of disk. The
-    * embedding lookup is sized by [[graft.Tables.sizedSide]] (VERDICT r15
-    * item 4): BROADCAST of the (vec_id, embedding) relation for each
-    * endpoint while the corpus vectors fit the broadcast ceiling (binds
+    * embedding lookup ([[Ann.exactScored]]) is sized by
+    * [[graft.Tables.sizedSide]] (VERDICT r15 item 4): BROADCAST of the
+    * (vec_id, embedding) relation for each endpoint while the corpus
+    * vectors fit the broadcast ceiling (binds
     * between 2M and 4M vectors). Past that both lookups become
     * key-partitioned shuffle-hash joins: the expansion exchanges by u
     * then v, the embeddings table builds the hash side, nothing is
@@ -678,25 +677,17 @@ object Nsw {
       }
     }
 
-  /** The round-10 exact M-NN graph (O(n²) broadcast cross join) — kept
-    * ONLY as the reference for the approximation-quality law (NswSpec:
-    * the approximate graph must recover ≥90% of the exact edges) and
-    * for tuning sweeps. Not reachable from any declared query. */
+  /** The round-10 exact M-NN graph (u, v): Knn's O(n²) leave-one-out
+    * pair scan, cut to each u's M nearest by the same `top_k_by` heap
+    * as knn_topk — kept ONLY as the reference for the
+    * approximation-quality law (NswSpec: the approximate graph must
+    * recover ≥90% of the exact edges) and for tuning sweeps. Not
+    * reachable from any declared query. */
   private[graft] def exactAdjacency(s: SparkSession, d: String): DataFrame =
     cache.getOrBuild(s, s"$d#nswAdjExact") {
-      val e = Tables.repartitioned(Tables.embeddings(s, d), s)
-        .select(col("vec_id"), col("embedding"))
-      val c = Tables.embeddings(s, d)
-        .select(col("vec_id").as("v"), col("embedding").as("vv"))
-      val w = Window.partitionBy(col("u"))
-        .orderBy(col("dist").asc, col("v").asc)
-      e.select(col("vec_id").as("u"), col("embedding").as("uv"))
-        .join(broadcast(c), col("u") =!= col("v"))
-        .select(col("u"), col("v"),
-          VectorExpressions.cosine_distance(s, col("uv"), col("vv"))
-            .as("dist"))
-        .withColumn("rn", row_number().over(w)).where(col("rn") <= M)
-        .select(col("u"), col("v"))
+      Knn.ranked(Knn.scan(Tables.embeddings(s, d),
+          VectorExpressions.cosine_distance(s, _, _), Knn.layoutAt(s, d)), M)
+        .select(col("qid").as("u"), col("cid").as("v"))
     }
 
   /** Deterministic LONG-RANGE links (the Watts–Strogatz small-world
@@ -714,11 +705,9 @@ object Nsw {
     * adjacency ∪ farLinks(F=8) (see [[F]]). */
   private[graft] def farLinks(s: SparkSession, d: String,
       far: Int, baseN: Option[Long] = None): DataFrame = {
-    val nDf = Tables.embeddings(s, d)
-      .where(baseN.map(c => col("vec_id") < c).getOrElse(lit(true)))
-      .agg(count(lit(1)).as("nn"))
-    Tables.embeddings(s, d).select(col("vec_id").as("u"))
-      .where(baseN.map(c => col("u") < c).getOrElse(lit(true)))
+    val corpus = baseSlice(s, d, baseN)
+    val nDf = corpus.agg(count(lit(1)).as("nn"))
+    corpus.select(col("vec_id").as("u"))
       .crossJoin(broadcast(nDf))
       .select(col("u"), explode(sequence(lit(1), lit(far))).as("k"),
         col("nn"))
@@ -749,9 +738,10 @@ object Nsw {
     }
 
   /** One beam-search step: grow by out-neighbors (the self-loop row per
-    * vertex re-emits the old beam — monotone best-so-far), re-score,
-    * keep the best b DISTINCT candidates per query in ONE bounded-heap
-    * aggregation.
+    * vertex re-emits the old beam — monotone best-so-far), re-score
+    * ([[Ann.exactScored]], whose embedding lookups follow the size rule
+    * rather than the planner's estimate), keep the best b DISTINCT
+    * candidates per query in ONE bounded-heap aggregation.
     *
     * r17 (optimization round, guide §2.3/§2.4): this was
     * `.distinct()` then a rank window then `rn <= b` — a full hash
@@ -808,45 +798,25 @@ object Nsw {
       Tables.RowBytes.Adjacency)
     val grown = beam
       .join(adjSized, beam("cand") === adjSized("u"))
-      .select(col("qid"), col("v").as("cand"))
-      .where(col("cand") =!= col("qid"))
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val c = Tables.embeddings(s, d)
-      .select(col("vec_id").as("cand"), col("embedding").as("cv"))
-    grown.join(q, "qid").join(c, "cand")
-      .select(col("qid"), col("cand"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist"))
+      .select(col("qid"), col("v").as("cid"))
+      .where(col("cid") =!= col("qid"))
+    Ann.exactScored(s, d, grown)
       .groupBy(col("qid"))
       .agg(graft.functions.TopKAgg.top_k_distinct_by(s,
-        col("dist"), col("cand"), lit(0), b).as("top"))
+        col("dist"), col("cid"), lit(0), b).as("top"))
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("cand"))
   }
 
-  /** Final top-K of (qid, cand) candidates, distinct per qid: scored
-    * against the corpus vectors and cut by [[Ann.heapTopK]] under the
-    * (dist, cid) total order a rank window would use, so the rows are
-    * the window's (the knn_topk ≡ knn_topk_agg precedent). */
-  private def topK(s: SparkSession, d: String, cands: DataFrame): DataFrame = {
-    val q = Tables.embeddings(s, d)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val c = Tables.embeddings(s, d)
-      .select(col("vec_id").as("cand"), col("embedding").as("cv"))
-    Ann.heapTopK(s, cands.join(q, "qid").join(c, "cand")
-      .select(col("qid"), col("cand").as("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
-  }
-
-  /** The search's starting beam: every query (or the `qOnly` subset)
-    * paired with the `e` entry vertices, itself excluded. */
-  private[graft] def entryBeam(s: SparkSession, d: String, e: Int = E,
-      qOnly: Option[DataFrame] = None): DataFrame = {
-    // qOnly (r13 review): restrict the QUERY side to an explicit (qid)
-    // set before the search — per-query independence makes the
-    // restriction exact, and a caller evaluating a 1/60 sample must not
-    // pay 60× the beam work (the Ann.probesOf qOnly twin). Declared
-    // queries pass None: leave-one-out over the whole corpus.
+  /** The search's starting beam: every query of `queries` — rows of the
+    * embeddings table, read for their vec_id — paired with the `e`
+    * entry vertices, itself excluded. Declared queries pass the whole
+    * table (leave-one-out over the corpus); a sampled evaluator passes
+    * its sample and pays only its beam work. Queries are searched
+    * independently, so a subset's rows equal the full search's rows for
+    * those queries (NswSpec law). */
+  private[graft] def entryBeam(s: SparkSession, d: String,
+      queries: DataFrame, e: Int = E): DataFrame = {
     // keyed repartition (r18, guide §2.4 — the Knn.pairs precedent): hash
     // the query side by its future aggregate key so EVERY downstream
     // per-qid operator (each hop's bounded-heap cut, the final top-K
@@ -855,36 +825,35 @@ object Nsw {
     // localCheckpoint carries outputPartitioning through the per-hop
     // barrier (LogicalRDD.fromDataset keeps it), so the whole unrolled
     // search plans ZERO mid-stream exchanges.
-    val qsAll = Tables.embeddings(s, d)
-      .repartition(Tables.parallelism(s), col("vec_id"))
+    val qs = queries.repartition(Tables.parallelism(s), col("vec_id"))
       .select(col("vec_id").as("qid"))
-    val qs = qOnly.map(ids => qsAll.join(
-        broadcast(ids.select(col("qid"))), Seq("qid"), "left_semi"))
-      .getOrElse(qsAll)
     val entries = Tables.embeddings(s, d).where(col("vec_id") < e)
       .select(col("vec_id").as("cand"))
     qs.crossJoin(broadcast(entries)).where(col("cand") =!= col("qid"))
   }
 
+  /** Beam search for the `queries` rows (see [[entryBeam]]): [[hop]]
+    * `hops` times, then the exact re-score ([[Ann.exactScored]]) of the
+    * final beam and the top-K cut ([[Ann.heapTopK]]) under the (dist,
+    * cid) total order a rank window would use. */
   private[graft] def nswTopkAt(s: SparkSession, d: String,
-      hops: Int, b: Int = B, e: Int = E, far: Int = F,
-      adjOverride: Option[DataFrame] = None,
-      qOnly: Option[DataFrame] = None): DataFrame = {
-    val beam0 = entryBeam(s, d, e, qOnly)
+      queries: DataFrame, hops: Int, b: Int = B, e: Int = E, far: Int = F,
+      adjOverride: Option[DataFrame] = None): DataFrame = {
+    val beam0 = entryBeam(s, d, queries, e)
     // per-hop lineage barrier (the Lloyd's/NN-descent discipline):
     // unbarriered, the plan of the fold grows with every hop — measured
     // 46–63 s cold at sf0.1 vs ~17 s with the barrier. The materialized
     // beam is tiny (n_q·B rows); results are bit-identical either way.
     val beamH = (1 to hops).foldLeft(beam0)((bm, _) =>
       hop(s, d, bm, b, far, adjOverride).checkpointed)
-    topK(s, d, beamH)
+    Ann.heapTopK(s, Ann.exactScored(s, d, beamH.withColumnRenamed("cand", "cid")))
   }
 
   def nswTopk(s: SparkSession, d: String): DataFrame =
-    nswTopkAt(s, d, tunedH(s, d), tunedB(s, d))
+    nswTopkAt(s, d, Tables.embeddings(s, d), tunedH(s, d), tunedB(s, d))
 
   def nswRecall(s: SparkSession, d: String): DataFrame =
-    Ann.recallOf(s, d, nswTopk(s, d).select(col("qid"), col("cid")))
+    Ann.recallOf(s, d, nswTopk(s, d))
 
   // ------------------------------------------- persisted graph (r13)
 
@@ -997,15 +966,8 @@ object Nsw {
     * beam — a cold session pays E + H·B·(M+F) probe work only, never
     * the NN-descent build or the shape scan. */
   def nswTopkIndexed(s: SparkSession, d: String): DataFrame =
-    nswTopkAt(s, d, tunedH(s, d), storedBeam(s, d), E, far = 0,
-      adjOverride = Some(storedAdjacency(s, d)))
-
-  private[graft] def nswRecallAt(s: SparkSession, d: String,
-      hops: Int, b: Int = B, e: Int = E, far: Int = F,
-      adjOverride: Option[DataFrame] = None): DataFrame =
-    Ann.recallOf(s, d,
-      nswTopkAt(s, d, hops, b, e, far, adjOverride)
-        .select(col("qid"), col("cid")))
+    nswTopkAt(s, d, Tables.embeddings(s, d), tunedH(s, d), storedBeam(s, d),
+      E, far = 0, adjOverride = Some(storedAdjacency(s, d)))
 
   /** ann_nsw_topk_upserted (r15, VERDICT r14 item 6): the DELTA-SERVING
     * topology the upsert contract below states in prose, now a graded
@@ -1033,14 +995,14 @@ object Nsw {
   def nswTopkUpserted(s: SparkSession, d: String): DataFrame = {
     val cut = Ann.upsertCut(s, d)
     val baseAdj = adjacencyWithFar(s, d, F, None, Ann.C, Some(cut))
-    val base = nswTopkAt(s, d, stepHops(cut),
+    val base = nswTopkAt(s, d, Tables.embeddings(s, d), stepHops(cut),
       beamFrom(cut, topCellSizeBase(s, d, cut)), E, far = 0,
       adjOverride = Some(baseAdj))
     val delta = Ann.ivfTopkDelta(s, d)
-    val cands = base.select(col("qid"), col("cid").as("cand"))
-      .unionByName(delta.select(col("qid"), col("cid").as("cand")))
+    val cands = base.select(col("qid"), col("cid"))
+      .unionByName(delta.select(col("qid"), col("cid")))
       .distinct()
-    topK(s, d, cands)
+    Ann.heapTopK(s, Ann.exactScored(s, d, cands))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

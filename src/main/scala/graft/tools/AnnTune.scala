@@ -18,6 +18,11 @@ object AnnTune {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // recall@K of one NSW search configuration over every query
+    def nswRecall(h: Int, b: Int, e: Int, f: Int,
+        adj: Option[org.apache.spark.sql.DataFrame]) =
+      Ann.recallOf(spark, sfDir, graft.ops.Nsw.nswTopkAt(spark, sfDir,
+        graft.Tables.embeddings(spark, sfDir), h, b, e, f, adj))
     println(s"[anntune] C=${Ann.C} P=${Ann.P} K=${Ann.K} iters=${Ann.LloydIters}")
     val seed = Ann.recallSeed(spark, sfDir).collect()(0)
     println(s"[anntune] seed:    hits=${seed.getAs[Long]("n_hits")} recall=${seed.getAs[Double]("recall")}")
@@ -71,8 +76,7 @@ object AnnTune {
       for ((h, b, e, f) <- Seq((4, 48, 8, 0), (4, 48, 8, 8),
           (5, 48, 8, 8), (6, 48, 8, 8), (5, 48, 8, 16), (6, 64, 8, 16))) {
         val t0 = System.nanoTime()
-        val r = graft.ops.Nsw.nswRecallAt(spark, sfDir, h, b, e, f)
-          .collect()(0)
+        val r = nswRecall(h, b, e, f, None).collect()(0)
         println(f"[anntune] nsw H=$h B=$b E=$e F=$f " +
           f"recall=${r.getAs[Double]("recall")}%.4f " +
           f"(${(System.nanoTime() - t0) / 1e9}%5.1f s)")
@@ -84,8 +88,7 @@ object AnnTune {
       val b = args(3).toInt
       val f = args(4).toInt
       val t0 = System.nanoTime()
-      val r = graft.ops.Nsw.nswRecallAt(spark, sfDir, h, b, graft.ops.Nsw.E, f)
-        .collect()(0)
+      val r = nswRecall(h, b, graft.ops.Nsw.E, f, None).collect()(0)
       println(f"[anntune] nswat H=$h B=$b F=$f " +
         f"recall=${r.getAs[Double]("recall")}%.4f " +
         f"(${(System.nanoTime() - t0) / 1e9}%5.1f s)")
@@ -109,7 +112,7 @@ object AnnTune {
         Ann.ivfpqRecallTrainedAt(spark, sfDir, Ann.C, Ann.PIvfpq))
       for ((h, b, f) <- Seq((4, 48, 0), (4, 16, 0))) {
         show(f"nsw H=$h B=$b F=$f",
-          graft.ops.Nsw.nswRecallAt(spark, sfDir, h, b, graft.ops.Nsw.E, f))
+          nswRecall(h, b, graft.ops.Nsw.E, f, None))
       }
     }
     if (args.lift(1).contains("nswbuild")) {
@@ -128,8 +131,7 @@ object AnnTune {
       for (exactG <- Seq(false, true)) {
         val t2 = System.nanoTime()
         val adjO = if (exactG) Some(Nsw.exactAdjacency(spark, sfDir)) else None
-        val r = Nsw.nswRecallAt(spark, sfDir, graft.ops.Nsw.H,
-          adjOverride = adjO).collect()(0)
+        val r = nswRecall(Nsw.H, Nsw.B, Nsw.E, Nsw.F, adjO).collect()(0)
         println(f"[anntune] nsw search exactGraph=$exactG " +
           f"recall=${r.getAs[Double]("recall")}%.4f " +
           f"(${(System.nanoTime() - t2) / 1e9}%5.1f s)")

@@ -71,7 +71,7 @@ object NswProf {
       import org.apache.spark.sql.functions._
       val adj = Nsw.adjacencyWithFar(s, d, Nsw.F)
       val b = Nsw.tunedB(s, d)
-      var beam = Nsw.entryBeam(s, d).checkpointed
+      var beam = Nsw.entryBeam(s, d, graft.Tables.embeddings(s, d)).checkpointed
       (1 to 2).foreach { h =>
         val grown = beam.join(adj, beam("cand") === adj("u"))
           .select(col("qid"), col("v").as("cand"))
@@ -82,20 +82,15 @@ object NswProf {
         val dist = grown.distinct().count()
         println(f"[nswprof] hop $h: grown=$total%,d  distinct=$dist%,d  " +
           f"dup=${total.toDouble / dist}%.2f  growNoop=$tGrow%5.2f s")
-        // advance the beam with the real hop (private — reconstruct)
-        val q = graft.Tables.embeddings(s, d)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val c = graft.Tables.embeddings(s, d)
-          .select(col("vec_id").as("cand"), col("embedding").as("cv"))
-        val scored = grown.join(q, "qid").join(c, "cand")
-          .select(col("qid"), col("cand"),
-            graft.functions.VectorExpressions.cosine_distance(s,
-              col("qv"), col("cv")).as("dist"))
+        // advance the beam with the real hop's re-score and cut, timed
+        // apart
+        val scored = graft.ops.Ann.exactScored(s, d,
+          grown.select(col("qid"), col("cand").as("cid")))
         val tScore = t(scored.write.format("noop").mode("overwrite").save())
         val heaped = scored
           .groupBy(col("qid"))
           .agg(graft.functions.TopKAgg.top_k_distinct_by(s,
-            col("dist"), col("cand"), lit(0), b).as("top"))
+            col("dist"), col("cid"), lit(0), b).as("top"))
           .select(col("qid"), explode(col("top")).as("t"))
           .select(col("qid"), col("t.id").as("cand"))
         val tHop = t { beam = heaped.checkpointed }
@@ -107,7 +102,8 @@ object NswProf {
     if (args.lift(1).contains("explain-hop")) {
       // dump ONE hop's plan (the per-hop shape the checkpoint barrier
       // hides from a whole-query explain)
-      Nsw.hop(s, d, Nsw.entryBeam(s, d), far = Nsw.F).explain("formatted")
+      Nsw.hop(s, d, Nsw.entryBeam(s, d, graft.Tables.embeddings(s, d)),
+        far = Nsw.F).explain("formatted")
       s.stop(); return
     }
     (1 to reps).foreach { i =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.PersistedCache.Materialize
@@ -34,19 +33,8 @@ object NswTune {
     spark.sparkContext.setLogLevel("WARN")
 
     val qs = Ann.recallSampleOf(spark, dir, Ann.RecallSampleCap)
-    val c = graft.Tables.repartitioned(
-      graft.Tables.embeddings(spark, dir), spark)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cid").asc)
-    val exact = c.crossJoin(broadcast(qs))
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        graft.functions.VectorExpressions.cosine_distance(spark,
-          col("qv"), col("cv")).as("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= Ann.K)
-      .select(col("qid"), col("cid")).checkpointed
+      .checkpointed
+    val exact = Ann.sampledExact(spark, dir, qs).checkpointed
     val nq = exact.select(col("qid")).distinct().count()
     println(s"[tune] ground truth: $nq queries")
 
@@ -65,14 +53,11 @@ object NswTune {
         "or fix the seedC argument)")
     val adj = Nsw.storedAdjacency(spark, dir, seedC, dRounds)
       .checkpointed
-    val qids = qs.select(col("qid")).checkpointed
     grid.foreach { case (h, b) =>
       val t0 = System.nanoTime()
-      val approx = Nsw.nswTopkAt(spark, dir, h, b, far = 0,
-          adjOverride = Some(adj), qOnly = Some(qids))
-        .select(col("qid"), col("cid"))
-      val hits = approx.join(exact, Seq("qid", "cid")).count()
-      val r = hits.toDouble / (nq * Ann.K)
+      val approx = Nsw.nswTopkAt(spark, dir, qs, h, b, far = 0,
+          adjOverride = Some(adj))
+      val r = Ann.recall(approx, exact).head().getAs[Double]("recall")
       println(f"[tune] seedC=$seedC H=$h B=$b recall=$r%.4f " +
         f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
     }

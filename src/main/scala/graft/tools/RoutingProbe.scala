@@ -46,15 +46,16 @@ object RoutingProbe {
         case (bb, (k, v)) => bb.config(k, v) })
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val n = graft.Tables.embeddings(spark, dir).count()
+    val corpus = graft.Tables.embeddings(spark, dir)
+    val n = corpus.count()
     seedCs.foreach { case (c, hier) =>
       def once(): (Long, Double) = {
         graft.PersistedCache.clearAll()
         val t0 = System.nanoTime()
         val rows =
-          if (hier) Ann.hierProbesOf(spark, dir, c, Nsw.coarseCFor(c),
-            Nsw.PAdj, Nsw.PAdj).count()
-          else Ann.probesOf(spark, dir,
+          if (hier) Ann.hierProbesOf(spark, dir, corpus, c,
+            Nsw.coarseCFor(c), Nsw.PAdj, Nsw.PAdj).count()
+          else Ann.probesOf(spark, corpus,
             Ann.centroidsAt(spark, dir, c), Nsw.PAdj).count()
         (rows, (System.nanoTime() - t0) / 1e9)
       }

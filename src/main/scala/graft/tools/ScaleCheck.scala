@@ -190,8 +190,9 @@ object ScaleCheck {
       val bAuto = Nsw.tunedB(spark, sfDir)
       val approx = Nsw.nswRecall(spark, sfDir)
         .head().getAs[Double]("recall")
-      val exact = Nsw.nswRecallAt(spark, sfDir, Nsw.H, bAuto,
-        adjOverride = Some(Nsw.exactAdjacency(spark, sfDir)))
+      val exact = Ann.recallOf(spark, sfDir, Nsw.nswTopkAt(spark, sfDir,
+          graft.Tables.embeddings(spark, sfDir), Nsw.H, bAuto,
+          adjOverride = Some(Nsw.exactAdjacency(spark, sfDir))))
         .head().getAs[Double]("recall")
       require(approx >= exact - 0.05,
         s"approx-graph recall $approx < exact-graph $exact - 0.05")
@@ -536,8 +537,8 @@ object ScaleCheck {
     // capped fnv carve — eating our own 100 TB dogfood at the tiers
     // where the n² ground truth is genuinely painful (4·10⁹ pairs at
     // 63k, 4·10¹⁰ at 200k). Measured r13 at 63k: recall 0.9143
-    // (n_q=1024) at shape beam 96 (the qOnly restriction cut the first
-    // cut's 551 s to 219 s — same recall to the digit).
+    // (n_q=1024) at shape beam 96 (searching only the sampled queries
+    // cut the first cut's 551 s to 219 s — same recall to the digit).
     // fixed-C seeding where it fits the box, the documented C≈4√n
     // retune where it doesn't — the per-tier build decision, shared by
     // the tier rows and the serving-cost trend
@@ -572,22 +573,7 @@ object ScaleCheck {
         // sampled exact ground truth: the capped carve broadcasts, the
         // corpus streams against it — n_s·n evaluations, never n²
         val qs = Ann.recallSampleOf(spark, cd2, Ann.RecallSampleCap)
-        val c = graft.Tables.repartitioned(
-          graft.Tables.embeddings(spark, cd2), spark)
-          .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("dist").asc, col("cid").asc)
-        val exact = c.crossJoin(broadcast(qs))
-          .where(col("qid") =!= col("cid"))
-          .select(col("qid"), col("cid"),
-            graft.functions.VectorExpressions.cosine_distance(spark,
-              col("qv"), col("cv")).as("dist"))
-          .withColumn("rnk", row_number().over(w))
-          .where(col("rnk") <= Ann.K)
-          .select(col("qid"), col("cid")).checkpointed
-        val nq = exact.select(col("qid")).distinct().count()
-        require(nq == Ann.RecallSampleCap,
-          s"cap must bind at this tier: n_q=$nq")
+        val exact = Ann.sampledExact(spark, cd2, qs).checkpointed
         // build + persist FIRST (at this tier's seed decision), then
         // search the STORED graph — the serving path the trend row
         // also measures, and one build instead of live+persist twice.
@@ -596,12 +582,13 @@ object ScaleCheck {
         // per-query independence makes the pre-restriction exact).
         Nsw.ensureNswIndex(spark, cd2, seedC)
         val hAuto = Nsw.stepHops(n)
-        val approx = Nsw.nswTopkAt(spark, cd2, hAuto, bAuto, far = 0,
-            adjOverride = Some(Nsw.storedAdjacency(spark, cd2, seedC)),
-            qOnly = Some(qs.select(col("qid"))))
-          .select(col("qid"), col("cid"))
-        val hits = approx.join(exact, Seq("qid", "cid")).count()
-        val r = hits.toDouble / (nq * Ann.K)
+        val approx = Nsw.nswTopkAt(spark, cd2, qs, hAuto, bAuto, far = 0,
+            adjOverride = Some(Nsw.storedAdjacency(spark, cd2, seedC)))
+        val row = Ann.recall(approx, exact).head()
+        val nq = row.getAs[Long]("n_queries")
+        val r = row.getAs[Double]("recall")
+        require(nq == Ann.RecallSampleCap,
+          s"cap must bind at this tier: n_q=$nq")
         // release the tier's working set (session caches and the
         // engine's checkpointed beams)
         graft.PersistedCache.clearAll()
@@ -632,14 +619,14 @@ object ScaleCheck {
       def searchOnly(dir: String): (Long, Int, Double) = {
         val n = graft.Tables.embeddings(spark, dir).count()
         val qs = Ann.recallSampleOf(spark, dir, Ann.RecallSampleCap)
-          .select(col("qid")).checkpointed
+          .select(col("vec_id")).checkpointed
         val seedC = tierSeedC(n)
         val b = Nsw.storedBeam(spark, dir, seedC)
         def run(): Double = {
           val t0 = System.nanoTime()
-          Nsw.nswTopkAt(spark, dir, Nsw.stepHops(n), b, far = 0,
-            adjOverride = Some(Nsw.storedAdjacency(spark, dir, seedC)),
-            qOnly = Some(qs)).count()
+          Nsw.nswTopkAt(spark, dir, qs, Nsw.stepHops(n), b, far = 0,
+            adjOverride = Some(Nsw.storedAdjacency(spark, dir, seedC)))
+            .count()
           (System.nanoTime() - t0) / 1e9
         }
         val t = math.min(run(), run()) // min-of-2: contention guard

@@ -52,7 +52,7 @@ class AnnSpec extends SparkSpec {
     def readsLists(p: SparkPlan): Boolean = helper.find(p)(isListsScan).isDefined
     // the lists scan with no join between it and `p` (through AQE
     // stages and reused exchanges): the join above is THE probe join,
-    // not one further up, e.g. ivfsq's hinted code-table joins
+    // not one further up, e.g. ivfsq's code-table joins
     def feedsLists(p: SparkPlan): Boolean = isListsScan(p) || (p match {
       case _: BaseJoinExec => false
       case a: AdaptiveSparkPlanExec => feedsLists(a.executedPlan)
@@ -174,6 +174,7 @@ class AnnSpec extends SparkSpec {
     // the prices follow the sides' shapes
     assert(RowBytes.Adjacency === (ops.Nsw.M + ops.Nsw.F + 2) * 48L)
     assert(RowBytes.Lut >= Ann.PqM * Ann.PqCw * 8L)
+    assert(RowBytes.Sq8Codes >= Ann.RpInDim * 8L)
     // (side, corpus rows, broadcast?) — sf0.1 is n = 2000
     val table = Seq(
       (RowBytes.Lut, 2000L, true),
@@ -182,6 +183,8 @@ class AnnSpec extends SparkSpec {
       (RowBytes.Embedding, 2000000L, true),
       (RowBytes.Embedding, 4000000L, false),
       (RowBytes.PqCodes, 2000L, true),
+      (RowBytes.Sq8Codes, 2000L, true),
+      (RowBytes.Sq8Codes, 2000000L, false),
       (RowBytes.Adjacency, 2000L, true),
       (RowBytes.Adjacency, 632000L, false),
       (RowBytes.Adjacency, 2000000L, false))
@@ -423,14 +426,47 @@ class AnnSpec extends SparkSpec {
 
   test("sampled recall plan: the exact arm is a broadcast of the query " +
     "SAMPLE against the streamed corpus, never a cartesian") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     // the scale direction that matters at 100 TB: the small side (the
     // 1/8 fnv sample) broadcasts, the corpus scan streams against it;
     // a CartesianProduct anywhere means the sample restriction was lost
-    val plan = Ann.recallSampled(spark, sf0001)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"),
+    val df = Ann.recallSampled(spark, sf0001)
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    val plan = executed.toString
+    // the exact arm is the one nested-loop join that scores corpus
+    // vectors (cv) against query vectors (qv)
+    val arms = new AdaptiveSparkPlanHelper {}.collect(executed) {
+      case j: BroadcastNestedLoopJoinExec if j.output.exists(_.name == "cv") => j
+    }
+    assert(arms.size === 1, s"expected one exact-arm join:\n$plan")
+    val j = arms.head
+    val (build, stream) =
+      if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+    assert(build.output.exists(_.name == "qv") &&
+      stream.output.exists(_.name == "cv"),
       s"expected the sample to broadcast into the exact arm:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian leak:\n$plan")
+  }
+
+  test("ivf query restriction is exact: searching a query subset ≡ the " +
+    "full search semi-joined to the same qids, row for row") {
+    // per-query independence is what lets the sampled recall search only
+    // its sample (the IVF twin of NswSpec's restriction law)
+    val queries = Tables.embeddings(spark, sf0001).where(col("vec_id") % 7 === 0)
+    val cents = Ann.trainedCentroids(spark, sf0001)
+    val lists = Ann.trainedAssignments(spark, sf0001)
+    val restricted = Ann.ivfTopkFrom(spark, queries, cents, lists, Ann.P)
+      .collect().map(_.toString)
+    val filtered = Ann.ivfTopkFrom(spark, Tables.embeddings(spark, sf0001),
+        cents, lists, Ann.P)
+      .join(queries.select(col("vec_id").as("qid")), Seq("qid"), "left_semi")
+      .orderBy(col("qid"), col("rnk"))
+      .collect().map(_.toString)
+    assert(restricted.nonEmpty && restricted.sameElements(filtered),
+      "a query subset must equal the full search filtered to the same queries")
   }
 
   test("sq8: every dimension's codes hit the full 0..255 span") {
@@ -473,18 +509,44 @@ class AnnSpec extends SparkSpec {
     info(s"IVFSQ recall@10 = $composed (routing $routing)")
   }
 
-  test("ivfsq plan: candidates route through shuffled hash joins — " +
-    "neither the inverted lists nor the code table is broadcast " +
-    "(AQE on and off)") {
+  test("ivfsq plan: the code-table lookups follow the size rule — " +
+    "broadcast under the ceiling, shuffled hash with broadcast off, same " +
+    "rows (AQE on and off)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the physical join of each code-table lookup: the join one of whose
+    // inputs is exactly the (id, codes) side
+    def lookups(p: SparkPlan): Seq[String] = helper.collect(p) {
+      case j: BaseJoinExec if j.children.exists(c =>
+          Seq(Set("qid", "qc"), Set("cid", "cc"))
+            .contains(c.output.map(_.name).toSet)) => j.nodeName
+    }.sorted
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    def run(): (Seq[String], Seq[String], String) = {
+      val df = Ann.ivfsqTopk(spark, sf0001)
+      val rows = df.collect().map(_.toString).toSeq
+      val executed = df.queryExecution.executedPlan
+      (rows, lookups(executed), executed.toString)
+    }
     withAqeBothWays {
-      val plan = Ann.ivfsqTopk(spark, sf0001)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("ShuffledHashJoin"),
-        s"expected shuffled hash joins on cent_id/qid/cid:\n$plan")
-      // the only broadcasts allowed are the scalar/tiny aggregates (the
-      // rlim row, the probe centroids); a broadcast of the corpus-sized
-      // code table would OOM the executors at 100 TB
-      assert(!plan.contains("CartesianProduct"), s"cartesian leak:\n$plan")
+      val (bRows, bJoins, bPlan) = run()
+      assert(bJoins === Seq("BroadcastHashJoin", "BroadcastHashJoin"),
+        s"under the ceiling both lookups must broadcast:\n$bPlan")
+      // the inverted lists are never broadcast: the probe join
+      // shuffle-hashes in both branches
+      assert(bPlan.contains("ShuffledHashJoin"),
+        s"expected the shuffled hash probe join on cent_id:\n$bPlan")
+      assert(!bPlan.contains("CartesianProduct"), s"cartesian leak:\n$bPlan")
+      try {
+        spark.conf.set(bcKey, "-1")
+        val (sRows, sJoins, sPlan) = run()
+        assert(sJoins === Seq("ShuffledHashJoin", "ShuffledHashJoin"),
+          s"with broadcast off both lookups must shuffle-hash:\n$sPlan")
+        assert(!sPlan.contains("CartesianProduct"), s"cartesian leak:\n$sPlan")
+        assert(sRows === bRows, "lookup layout must not change the rows")
+      } finally spark.conf.unset(bcKey)
     }
   }
 

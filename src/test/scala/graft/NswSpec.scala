@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Knn, Nsw}
+import graft.ops.{Ann, Knn, Nsw}
 
 /** The deterministic navigable-small-world tier: graph shape, beam
   * monotonicity, recall bar, determinism. */
@@ -28,8 +28,9 @@ class NswSpec extends SparkSpec {
 
   test("search recall on the approximate graph stays within eps of the exact graph") {
     val approx = Nsw.nswRecall(spark, sf0001).head().getAs[Double]("recall")
-    val exact = Nsw.nswRecallAt(spark, sf0001, Nsw.H,
-      adjOverride = Some(Nsw.exactAdjacency(spark, sf0001)))
+    val exact = Ann.recallOf(spark, sf0001, Nsw.nswTopkAt(spark, sf0001,
+        Tables.embeddings(spark, sf0001), Nsw.H,
+        adjOverride = Some(Nsw.exactAdjacency(spark, sf0001))))
       .head().getAs[Double]("recall")
     assert(approx >= exact - 0.02,
       s"approx-graph search recall $approx < exact-graph $exact - 0.02")
@@ -41,7 +42,8 @@ class NswSpec extends SparkSpec {
     // hops can only contain better-or-equal candidates: recall is
     // non-decreasing in hop count
     val recalls = (0 to Nsw.H).map { h =>
-      Nsw.nswRecallAt(spark, sf0001, h).head().getAs[Double]("recall")
+      Ann.recallOf(spark, sf0001, Nsw.nswTopkAt(spark, sf0001,
+        Tables.embeddings(spark, sf0001), h)).head().getAs[Double]("recall")
     }
     recalls.sliding(2).foreach { case Seq(a, b) =>
       assert(b >= a - 1e-9, s"recall decreased across a hop: $recalls")
@@ -168,7 +170,8 @@ class NswSpec extends SparkSpec {
     // per-hop localCheckpoint barrier hides interior hops from a whole-
     // search plan) and that they return identical rows.
     val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    def oneHop() = Nsw.hop(spark, sf0001, Nsw.entryBeam(spark, sf0001),
+    def oneHop() = Nsw.hop(spark, sf0001,
+      Nsw.entryBeam(spark, sf0001, Tables.embeddings(spark, sf0001)),
       Nsw.tunedB(spark, sf0001), Nsw.F)
     try withAqeBothWays {
       // sf0.001 (500 vectors): the bound is ~600 KB — broadcast branch
@@ -237,18 +240,55 @@ class NswSpec extends SparkSpec {
     // evaluators (ScaleCheck's 63k tier) search only their sample; pin
     // it as a law so a future hop change that couples queries (e.g. a
     // shared frontier) fails HERE
-    import org.apache.spark.sql.functions._
-    val ids = Tables.embeddings(spark, sf0001)
-      .where(col("vec_id") % 7 === 0).select(col("vec_id").as("qid"))
-    val restricted = Nsw.nswTopkAt(spark, sf0001, Nsw.H,
-        Nsw.tunedB(spark, sf0001), qOnly = Some(ids))
+    val queries = Tables.embeddings(spark, sf0001).where(col("vec_id") % 7 === 0)
+    val restricted = Nsw.nswTopkAt(spark, sf0001, queries, Nsw.H,
+        Nsw.tunedB(spark, sf0001))
       .collect().map(_.toString)
     val filtered = Nsw.nswTopk(spark, sf0001)
-      .join(ids, Seq("qid"), "left_semi")
+      .join(queries.select(col("vec_id").as("qid")), Seq("qid"), "left_semi")
       .orderBy(col("qid"), col("rnk"))
       .collect().map(_.toString)
     assert(restricted.nonEmpty && restricted.sameElements(filtered),
-      "qOnly must equal the full search filtered to the same queries")
+      "a query subset must equal the full search filtered to the same queries")
+  }
+
+  test("exact M-NN graph: Knn's pair scan cut at M equals a window-ranked " +
+    "M-NN reference, row for row") {
+    val e = Tables.embeddings(spark, sf0001)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"u")
+      .orderBy($"dist".asc, $"v".asc)
+    val reference = e.select($"vec_id".as("u"), $"embedding".as("uv"))
+      .crossJoin(e.select($"vec_id".as("v"), $"embedding".as("vv")))
+      .where($"u" =!= $"v")
+      .select($"u", $"v", graft.functions.VectorExpressions
+        .cosine_distance(spark, $"uv", $"vv").as("dist"))
+      .withColumn("rn", row_number().over(w)).where($"rn" <= Nsw.M)
+    def edges(df: org.apache.spark.sql.DataFrame) =
+      df.select($"u", $"v").as[(Long, Long)].collect().sorted.toSeq
+    val exact = edges(Nsw.exactAdjacency(spark, sf0001))
+    assert(exact.size === e.count() * Nsw.M)
+    assert(exact === edges(reference))
+  }
+
+  test("search re-score follows the size rule: with broadcast off the " +
+    "final plan has no sort-merge join, and the rows equal the default " +
+    "session's") {
+    // the final beam's exact re-score and the top-K cut run after the
+    // last hop's localCheckpoint barrier, so this plan is the re-score's
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    val bRows = Nsw.nswTopk(spark, sf0001).collect().map(_.toString)
+    try {
+      spark.conf.set(bcKey, "-1")
+      val off = Nsw.nswTopk(spark, sf0001)
+      val sRows = off.collect().map(_.toString)
+      val plan = off.queryExecution.executedPlan.toString
+      assert(!plan.contains("SortMergeJoin"),
+        s"re-score lookups must not sort-merge:\n$plan")
+      assert(plan.contains("ShuffledHashJoin"),
+        s"re-score lookups must shuffle-hash with broadcast off:\n$plan")
+      assert(sRows.sameElements(bRows),
+        "search rows must not depend on the join layout")
+    } finally spark.conf.unset(bcKey)
   }
 
   test("shape-aware beam rule: pure integer arithmetic, anchored at B " +
@@ -383,9 +423,10 @@ class NswSpec extends SparkSpec {
       df.select($"qid", $"cent_id").as[(Long, Long)].collect().sorted.toSeq
     // exactness: pCoarse = coarseC probes every coarse cell, so stage 2
     // scores ALL seedC centroids — must equal flat probesOf exactly
-    val flat = canon(ops.Ann.probesOf(spark, sf0001,
+    val corpus = Tables.embeddings(spark, sf0001)
+    val flat = canon(ops.Ann.probesOf(spark, corpus,
       ops.Ann.centroidsAt(spark, sf0001, seedC), p))
-    val exhaustiveDf = ops.Ann.hierProbesOf(spark, sf0001,
+    val exhaustiveDf = ops.Ann.hierProbesOf(spark, sf0001, corpus,
       seedC, coarseC, pCoarse = coarseC, p = p)
     assert(canon(exhaustiveDf) === flat,
       "exhaustive-coarse hier routing diverged from flat routing")
@@ -400,9 +441,9 @@ class NswSpec extends SparkSpec {
       "exhaustive-coarse pos-0 diverged from the flat argmin assignment")
     // reduced pCoarse: deterministic (two runs identical), exactly p
     // probes per query, and every probe is a real centroid id
-    val reduced = canon(ops.Ann.hierProbesOf(spark, sf0001,
+    val reduced = canon(ops.Ann.hierProbesOf(spark, sf0001, corpus,
       seedC, coarseC, pCoarse = 4, p = p))
-    val reduced2 = canon(ops.Ann.hierProbesOf(spark, sf0001,
+    val reduced2 = canon(ops.Ann.hierProbesOf(spark, sf0001, corpus,
       seedC, coarseC, pCoarse = 4, p = p))
     assert(reduced === reduced2, "hier routing is not deterministic")
     val n = graft.Tables.embeddings(spark, sf0001).count()
