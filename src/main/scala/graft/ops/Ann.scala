@@ -35,7 +35,7 @@ import graft.functions.VectorExpressions
 object Ann {
   /** (C, P) retuned in round 9 for the production recall bar: trained
     * recall@10 must clear 0.9, and does at every fixture tier (0.980 at
-    * sf0.01, 0.975 at sf0.001, 0.911 at sf0.1 — tools.AnnTune sweep).
+    * sf0.01, 0.975 at sf0.001, 0.911 at sf0.1 — the round-9 sweep).
     * The fixtures' embeddings are near-isotropic — ANN's hardest case:
     * measured recall ≈ scan fraction plus a quantization bonus that
     * GROWS with C (at a fixed 25% scan: 0.63 @ C=32, 0.73 @ C=64, 0.85
@@ -73,8 +73,9 @@ object Ann {
   // The assignment table is the index: built once per (session, dataset)
   // and shared by probes/stats — the local analog of a persisted IVF
   // index on a cluster. Fixture files are immutable for a session.
-  // Keys carry the centroid count so the (C, P) tuning sweep
-  // (tools.AnnTune) can hold several candidate indexes side by side.
+  // Keys carry the centroid count so ScaleCheck's retuned tiers
+  // (C ≈ 4√n) and the NSW seed retune can hold several indexes side by
+  // side.
   private val assignCache = new graft.PersistedCache(this)
 
   def assignments(s: SparkSession, d: String): DataFrame =
@@ -456,17 +457,36 @@ object Ann {
     heapTopK(s, exactScored(s, d, cands))
   }
 
-  /** The flat quantized scans' query side (PQ and SQ8): `side`'s rows
-    * hashed by qid into [[cutPartitions]] partitions for the n/10 cut.
-    * The keyed repartition (r17, the Knn.pairs move) both parallelizes
-    * the n² scan — the bare scan arrives as ONE input partition at
-    * fixture scale — and lets the qid-keyed heap cut aggregate with
-    * zero exchanges below the scan's nested-loop join. */
-  private def flatQuerySide(s: SparkSession, d: String,
-      side: DataFrame): DataFrame =
-    side.repartition(cutPartitions(s,
+  /** The flat quantized scans' leave-one-out pair stream (PQ and SQ8):
+    * every `queries` row (keyed qid) against every other `codes` row
+    * (keyed cid).
+    *
+    * The query side is hashed by qid into [[cutPartitions]] partitions
+    * for the n/10 cut. The keyed repartition (r17, the Knn.pairs move)
+    * both parallelizes the n² scan — the bare scan arrives as ONE input
+    * partition at fixture scale — and lets the qid-keyed heap cut
+    * aggregate with zero exchanges below the scan's nested-loop join.
+    *
+    * The code side is broadcast explicitly while the corpus fits at
+    * `rowBytes` per vector ([[Tables.corpusFits]]) (r18, guide §3.1):
+    * left to its size estimates the planner broadcast the (smaller)
+    * bare-qid QUERY side and streamed the codes, so the pair stream came
+    * out cid-partitioned — the keyed repartition was discarded and the
+    * heap cut paid a partial/final split whose exchange carried nearly
+    * the full pre-cut volume. With the codes broadcast the query side
+    * streams, stays qid-partitioned, and the cut plans as ONE complete
+    * aggregation. Past the ceiling, or with broadcast off, the join is
+    * left to the planner (a non-equi join has no shuffle-hash form): the
+    * flat n² scan is not the at-scale serving tier (IVFPQ is). */
+  private def flatPairs(s: SparkSession, d: String, queries: DataFrame,
+      codes: DataFrame, rowBytes: Long): DataFrame = {
+    val qside = queries.repartition(cutPartitions(s,
       Tables.footerRowCount(s, s"$d/embeddings.parquet"),
       rerankLimit(s, d, 1, PqRerankDiv)), col("qid"))
+    val cside =
+      if (Tables.corpusFits(s, d, rowBytes)) broadcast(codes) else codes
+    qside.join(cside, col("qid") =!= col("cid"))
+  }
 
   /** THE list-probe join of every IVF tier and of the NSW seed cells:
     * probe rows meet inverted-list rows on cent_id. The lists are the
@@ -637,28 +657,12 @@ object Ann {
     * written in the same order in both engines, so results stay
     * hash-exact. */
   private def pqRerankTopk(s: SparkSession, d: String): DataFrame = {
-    val n = Tables.footerRowCount(s, s"$d/embeddings.parquet")
-    val queries = flatQuerySide(s, d,
-      Tables.embeddings(s, d).select(col("vec_id").as("qid")))
-    // Broadcast the CODE side explicitly (r18, guide §3.1 — the sq8Topk
-    // twin): left to its size estimates the planner broadcast the
-    // (smaller) bare-qid QUERY side and streamed the codes, so the pair
-    // stream came out cid-partitioned — the keyed repartition above was
-    // discarded and the ADC heap cut paid a partial/final split whose
-    // exchange carried nearly the full pre-cut volume (≤ rlim per qid
-    // per partition with every qid present in every partition). With the
-    // M-byte code table broadcast (n·~80 B — 4× smaller than the float
-    // vectors the exact tier broadcasts) the query side streams, stays
-    // qid-partitioned through the LUT join, and the cut plans as ONE
-    // complete aggregation. The broadcast is O(n) and sized by the same
-    // rule as the per-query LUT relation: past the ceiling the join is
-    // left to the planner (a non-equi join has no shuffle-hash form) —
-    // the flat n² scan is not the at-scale serving tier (IVFPQ is).
-    val cside = pqCodes(s, d).withColumnRenamed("vec_id", "cid")
-    val csideSized =
-      if (Tables.broadcastFits(s, n, Tables.RowBytes.PqCodes)) broadcast(cside)
-      else cside
-    val pairs = queries.join(csideSized, col("qid") =!= col("cid"))
+    // the M-byte code table (n·~80 B) is the broadcast side; the ADC
+    // LUT join keeps the pair stream qid-partitioned for the cut
+    val pairs = flatPairs(s, d,
+      Tables.embeddings(s, d).select(col("vec_id").as("qid")),
+      pqCodes(s, d).withColumnRenamed("vec_id", "cid"),
+      Tables.RowBytes.PqCodes)
     rerankTopk(s, d, adcScored(s, d, pairs), "adc", 1, PqRerankDiv)
   }
 
@@ -743,7 +747,7 @@ object Ann {
     * because IVFPQ multiplies TWO error sources — routing recall × ADC
     * rank noise — and the production bar (recall@10 ≥ 0.9) must survive
     * the product on a near-isotropic corpus, ANN's hardest case.
-    * Measured on the TRAINED index (AnnTune, sf0.1): P=96/128 with the
+    * Measured on the TRAINED index (round 9, sf0.1): P=96/128 with the
     * old global n/10 cut gave 0.883/0.912 — over the bar but thin; with
     * the probed-volume-scaled re-rank cut, P=144 reaches 0.9693 (P=160:
     * 0.9796; diminishing). Real clustered corpora reach the bar at far
@@ -764,19 +768,10 @@ object Ann {
   def ivfpqRecall(s: SparkSession, d: String): DataFrame =
     recallOf(s, d, ivfpqTopk(s, d))
 
-  private[graft] def ivfpqRecallSeedAt(s: SparkSession, d: String,
-      p: Int): DataFrame =
-    recallOf(s, d, ivfpqTopkFrom(s, d, centroids(s, d), assignments(s, d), p))
-
   private[graft] def ivfpqRecallTrainedAt(s: SparkSession, d: String,
       c: Int, p: Int): DataFrame =
     recallOf(s, d, ivfpqTopkFrom(s, d, trainedCentroidsAt(s, d, c),
       trainedAssignmentsAt(s, d, c), p, nLists = c))
-
-  private[graft] def recallSeedAt(s: SparkSession, d: String,
-      p: Int): DataFrame =
-    recallOf(s, d, ivfTopkFrom(s, Tables.embeddings(s, d), centroids(s, d),
-      assignments(s, d), p))
 
   // ------------------------------------------------ stored index (r10)
 
@@ -1193,7 +1188,9 @@ object Ann {
 
   private[graft] def recallSampledAt(s: SparkSession, d: String,
       cap: Int): DataFrame = {
-    val qs = recallSampleOf(s, d, cap)
+    // materialized once: both arms read the sample, and unmaterialized
+    // each would re-run the corpus scan, the fnv hash and the top-N
+    val qs = recallSampleOf(s, d, cap).checkpointed
     recall(ivfTopkFrom(s, qs, trainedCentroids(s, d),
       trainedAssignments(s, d), P), sampledExact(s, d, qs))
   }
@@ -1407,14 +1404,12 @@ object Ann {
     * re-rank — (qid, rnk, cid, dist), the ann_*_topk contract. */
   def sq8Topk(s: SparkSession, d: String): DataFrame = {
     val codes = sq8Codes(s, d)
-    val qside = flatQuerySide(s, d,
-      codes.select(col("vec_id").as("qid"), col("codes").as("qc")))
-    val cside = codes.select(col("vec_id").as("cid"), col("codes").as("cc"))
-    // the knn_topk shape: repartitioned queries × broadcast compressed
-    // corpus (the code table is 4× smaller than the float vectors the
-    // exact tier broadcasts); the SDC kernel runs inside codegen on the
-    // BNLJ pair stream
-    val scored = qside.join(broadcast(cside), col("qid") =!= col("cid"))
+    // the knn_topk shape: repartitioned queries × the compressed corpus;
+    // the SDC kernel runs inside codegen on the pair stream
+    val scored = flatPairs(s, d,
+        codes.select(col("vec_id").as("qid"), col("codes").as("qc")),
+        codes.select(col("vec_id").as("cid"), col("codes").as("cc")),
+        Tables.RowBytes.Sq8Codes)
       .select(col("qid"), col("cid"),
         VectorExpressions.sq_dist_long(s, col("qc"), col("cc")).as("sdc"))
     rerankTopk(s, d, scored, "sdc", 1, PqRerankDiv)

@@ -72,7 +72,7 @@ object Nsw {
     *
     * PER-CORPUS RETUNE DOCTRINE (r11, measured — SCALE_r11.md; the
     * (B, H, F) twin of IVF's C ≈ 4√n rule, ScaleCheck-asserted):
-    *  - F = 8 far links ([[farLinks]]) is the NAVIGABILITY FLOOR at
+    *  - F = 8 far links ([[withFarLinks]]) is the NAVIGABILITY FLOOR at
     *    scale. On a clustered 20k corpus the plain M-NN graph
     *    degenerates to per-cluster cliques the beam cannot leave —
     *    recall 0.12 at the declared constants — and F=8 restores 0.939,
@@ -263,75 +263,17 @@ object Nsw {
         s"(pow2 seedC ≥ $HierRoutingMinSeedC), got $seedC")
     Integer.highestOneBit((4 * math.sqrt(seedC.toDouble)).toInt)
   }
-  /** The retune rule under a CAPACITY CEILING (r15) — **RETIRED as the
-    * tier decision in r16**, kept as the pinned pure function its specs
-    * anchor. History: r15 introduced it because the 4√n rule's seed
-    * pairs (1.56·10⁹ at 632k) exhausted the rehearsal disk — but what
-    * hit disk was the pair EXCHANGES (the expansion `distinct()`s and
-    * the SortAggregate argmin), all removed in r16: the heap build
-    * streams pairs through broadcast joins into map-side bounded heaps
-    * and exchanges only ≤ M rows per u. With the disk term gone, the
-    * capacity C's own ROUTING term (n·seedC, growing as n³/budget) is
-    * what binds, and it was measured wall-clock-infeasible at the 2M
-    * tier (seedC=65536: 2¼ h inside the first 1.3·10¹¹-row routing
-    * pass, disk flat). The declared tier rule is [[retunedSeedC]]'s
-    * 4√n again — it balances the two CPU terms (routing n·C, pairs
-    * PAdj·n²/C, both O(n^1.5)). Exact integer arithmetic; pure
-    * function of (n, budget). */
-  def capacitySeedC(n: Long, budgetPairs: Long): Int = {
-    require(n > 0 && budgetPairs > 0, s"bad capacitySeedC($n, $budgetPairs)")
-    val retuned = retunedSeedC(n)
-    // smallest pow2 C with PAdj·n²/C ≤ budget — CEILING division, so a
-    // quotient that floors onto a power of two while the true ratio is
-    // fractionally above it still rounds C up and the postcondition
-    // PAdj·n²/C ≤ budget holds exactly (BigInt guards Long overflow)
-    val needC = {
-      val nn = (BigInt(n) * BigInt(n) * PAdj + budgetPairs - 1) / budgetPairs
-      require(nn.isValidLong,
-        s"capacitySeedC($n, $budgetPairs): required C $nn exceeds Long range")
-      if (nn <= 1) 1L else nn.toLong
-    }
-    val capacity = java.lang.Long.highestOneBit(math.max(1L, needC)) match {
-      case p if p >= needC => p
-      case p => p << 1
-    }
-    val c = math.max(retuned.toLong, capacity)
-    require(c <= (1L << 30), s"capacity seedC $c exceeds Int range at n=$n")
-    c.toInt
-  }
-
-  /** Descent rounds for a retuned seeding — DEMOTED to the fixed
-    * [[DescentRounds]] (r15, closing VERDICT r14 "what's wrong" item
-    * 6). The r14 rule added one NN-descent round per seedC doubling on
-    * the theory that thinner per-vector seed coverage (PAdj cells of
-    * seedC) starts the graph further from the true M-NN graph. Measured
-    * TWICE, it never bound:
-    *
-    *  - 200k, seedC ratio 4× (r14 grid): 2-round vs 4-round build
-    *    searched 0.8550 vs 0.8548 — zero effect;
-    *  - 632k, seedC ratio 16× / HALF the 4√n rule's coverage (r15,
-    *    `NswBuild 4096:2` + `NswTune 4096:2`): the D=2 build searches
-    *    0.9396 at (H=6, B=384) vs the D=6 build's 0.9398 — zero effect
-    *    again, at the tier where the compensation carried the most
-    *    theoretical load.
-    *
-    * Two fixed rounds of symmetrize/2-hop/keep-best-M already converge
-    * the graph from the cell+ring seeds at every measured thinning, so
-    * the extra O(n·(2M)²) rounds (which DOMINATE the capacity-ruled
-    * build: the 632k D=6 build paid 6 descent expansions of ~1.5·10⁹
-    * candidate rows each) are pure cost. Watch condition: if a future
-    * tier misses its recall bar with thin seeding, the `dRounds`
-    * diagnostic override re-tests compensation in one cheap A/B before
-    * any rule revival. The domain guard stays — the version-path D
-    * segment is derived here, and an out-of-domain seedC must fail
-    * loudly, not build at a bogus path. */
-  def descentRoundsFor(seedC: Int): Int = {
+  /** The domain of every seeded build and of its index path: seedC is a
+    * power of two ≥ [[Ann.C]], the range [[retunedSeedC]] emits.
+    * Outside it the arithmetic is silently wrong (non-pow2 seedC floors,
+    * seedC < C seeds from fewer cells than the declared index), so the
+    * build and the path fail loudly instead of building at a bogus
+    * path. */
+  private def requireSeedC(seedC: Int): Unit =
     require(seedC >= Ann.C && Integer.bitCount(seedC) == 1,
       s"seedC=$seedC is not a power-of-two ≥ Ann.C=${Ann.C} — " +
-        "descentRoundsFor is only defined on the retune rule's range " +
+        "the NSW build is only defined on the retune rule's range " +
         "(retunedSeedC emits pow2-floored 4*sqrt(n), clamped to Ann.C)")
-    DescentRounds
-  }
 
   /** BSteps row index of the LAST tier certified at the base hop count
     * [[H]]=4 (the 63k row, measured 0.9143). The 200k tier (k=4) is the
@@ -383,7 +325,16 @@ object Nsw {
   val RingD = 8
   /** Fixed NN-descent refinement rounds — fixed (not convergence-tested)
     * so the build is a pure function of the data on both engines (the
-    * Lloyd's-iteration discipline). Each round is O(n·(2M)²). */
+    * Lloyd's-iteration discipline). Each round is O(n·(2M)²).
+    *
+    * The same at every seedC (r15): an r14 rule added one round per
+    * seedC doubling, on the theory that thinner per-vector seed coverage
+    * starts the graph further from the true M-NN graph. Measured twice,
+    * it never bound — at 200k (seedC ratio 4×) a 2-round vs 4-round
+    * build searched 0.8550 vs 0.8548, and at 632k (ratio 16×, half the
+    * 4√n rule's coverage) the D=2 build searched 0.9396 at (H=6, B=384)
+    * vs the D=6 build's 0.9398 (SCALE_r15). Two rounds converge the
+    * graph from the cell+ring seeds at every measured thinning. */
   val DescentRounds = 2
 
   private val cache = new graft.PersistedCache(this)
@@ -459,10 +410,10 @@ object Nsw {
   /** Seed candidate edges (u, v), u ≠ v, deduped: IVF-cell-local pairs
     * (u meets every member of its PAdj nearest seed cells — one keyed
     * join against the assignment table the IVF tier already maintains)
-    * ∪ the id-ring. `seedC` defaults to the declared [[Ann.C]] (every
-    * declared query); [[retunedSeedC]] is the at-scale alternative. */
+    * ∪ the id-ring. `seedC` is the declared [[Ann.C]] for every declared
+    * query; [[retunedSeedC]] is the at-scale alternative. */
   private[graft] def seedCandidates(s: SparkSession, d: String,
-      seedC: Int = Ann.C, baseN: Option[Long] = None): DataFrame = {
+      seedC: Int, baseN: Option[Long]): DataFrame = {
     // baseN (r15, VERDICT r14 item 6): restrict the WHOLE build to the
     // first baseN vectors — the base slice the upsert family's frozen
     // serving artifacts are built over. Ids are contiguous 0..n−1
@@ -613,19 +564,14 @@ object Nsw {
     * localCheckpoint = the iterative-plan barrier (the Lloyd's/
     * star-contraction discipline). */
   private[graft] def adjacency(s: SparkSession, d: String,
-      seedC: Int = Ann.C, baseN: Option[Long] = None,
-      dRounds: Option[Int] = None): DataFrame = {
-    // dRounds: DIAGNOSTIC override of the descent-round compensation
-    // rule (the r14/r15 "measure the rule's effect" ladder rows); the
-    // declared rule is always descentRoundsFor(seedC). An overridden
-    // build is version-isolated through the path's D segment.
-    val rounds = dRounds.getOrElse(descentRoundsFor(seedC))
+      seedC: Int, baseN: Option[Long]): DataFrame = {
+    requireSeedC(seedC)
     cache.getOrBuild(s,
-      s"$d#nswAdj@$seedC#D$rounds" + baseN.map(c => s"#b$c").getOrElse("")) {
+      s"$d#nswAdj@$seedC" + baseN.map(c => s"#b$c").getOrElse("")) {
       withBuildSqlConfs(s) {
         val g0 = bestM(s, d, seedCandidates(s, d, seedC, baseN))
           .checkpointed
-        (1 to rounds).foldLeft(g0)((g, _) =>
+        (1 to DescentRounds).foldLeft(g0)((g, _) =>
           descend(s, d, g).checkpointed)
       }
     }
@@ -690,51 +636,43 @@ object Nsw {
         .select(col("qid").as("u"), col("cid").as("v"))
     }
 
-  /** Deterministic LONG-RANGE links (the Watts–Strogatz small-world
-    * augmentation): `far` ring edges per vertex, u → (u + k·n/(far+1))
-    * mod n. Vector ids are random with respect to geometry, so ring
-    * links are effectively uniform random long links — the rewiring
-    * that makes a neighborhood graph navigable. Pure integer arithmetic
-    * of (u, k, n) on both engines.
+  /** `base` ∪ deterministic LONG-RANGE links, deduped: the
+    * Watts–Strogatz small-world augmentation, [[F]] ring edges per
+    * vertex, u → (u + k·n/(F+1)) mod n. Vector ids are random with
+    * respect to geometry, so ring links are effectively uniform random
+    * long links — the rewiring that makes a neighborhood graph
+    * navigable. Pure integer arithmetic of (u, k, n) on both engines.
+    * [[searchGraph]] applies it to the NN-descent graph; the exact-graph
+    * laws apply it to [[exactAdjacency]].
     *
     * PRECONDITION: vec_ids are contiguous 0..n−1 (the fixture contract,
     * FIXTURES.md). With gapped ids the ring formula would emit edges to
     * nonexistent vertices, silently dropped by the downstream inner
-    * joins — a gapped corpus must dense-rank its ids first. As of round
-    * 12 this IS part of the declared graph: nswTopk searches over
-    * adjacency ∪ farLinks(F=8) (see [[F]]). */
-  private[graft] def farLinks(s: SparkSession, d: String,
-      far: Int, baseN: Option[Long] = None): DataFrame = {
+    * joins — a gapped corpus must dense-rank its ids first. */
+  private[graft] def withFarLinks(s: SparkSession, d: String,
+      base: DataFrame, baseN: Option[Long]): DataFrame = {
     val corpus = baseSlice(s, d, baseN)
     val nDf = corpus.agg(count(lit(1)).as("nn"))
-    corpus.select(col("vec_id").as("u"))
+    val far = corpus.select(col("vec_id").as("u"))
       .crossJoin(broadcast(nDf))
-      .select(col("u"), explode(sequence(lit(1), lit(far))).as("k"),
+      .select(col("u"), explode(sequence(lit(1), lit(F))).as("k"),
         col("nn"))
       .select(col("u"),
-        pmod(col("u") + expr(s"k * nn DIV ${far + 1}"), col("nn")).as("v"))
+        pmod(col("u") + expr(s"k * nn DIV ${F + 1}"), col("nn")).as("v"))
       .where(col("v") =!= col("u"))
+    base.unionByName(far).distinct()
   }
 
-  /** The searched graph: base adjacency ∪ far links, deduped. The
-    * declared (no-override) far-augmented graph is session-cached like
-    * the base adjacency — it is rebuilt once, not once per hop. */
-  private[graft] def adjacencyWithFar(s: SparkSession, d: String,
-      far: Int, adjOverride: Option[DataFrame] = None,
-      seedC: Int = Ann.C, baseN: Option[Long] = None,
-      dRounds: Option[Int] = None): DataFrame =
-    adjOverride match {
-      case Some(base) =>
-        if (far == 0) base
-        else base.unionByName(farLinks(s, d, far, baseN)).distinct()
-      case None =>
-        if (far == 0) adjacency(s, d, seedC, baseN, dRounds)
-        else cache.getOrBuild(s, s"$d#nswAdjFar$far@$seedC" +
-            dRounds.map(r => s"#D$r").getOrElse("") +
-            baseN.map(c => s"#b$c").getOrElse("")) {
-          adjacency(s, d, seedC, baseN, dRounds)
-            .unionByName(farLinks(s, d, far, baseN)).distinct()
-        }
+  /** The declared search graph: the NN-descent [[adjacency]] at
+    * (`seedC`, `baseN`) with its far links ([[withFarLinks]]),
+    * session-cached like the base adjacency — built once, not once per
+    * hop. As of round 12 the far links are part of the declared graph
+    * (see [[F]]). */
+  private[graft] def searchGraph(s: SparkSession, d: String, seedC: Int,
+      baseN: Option[Long]): DataFrame =
+    cache.getOrBuild(s, s"$d#nswAdjFar$F@$seedC" +
+        baseN.map(c => s"#b$c").getOrElse("")) {
+      withFarLinks(s, d, adjacency(s, d, seedC, baseN), baseN)
     }
 
   /** One beam-search step: grow by out-neighbors (the self-loop row per
@@ -767,9 +705,7 @@ object Nsw {
     * adjacency broadcast ceiling the shuffle-hash grow join re-keys the
     * stream and the heap takes its one exchange as before. */
   private[graft] def hop(s: SparkSession, d: String, beam: DataFrame,
-      b: Int = B, far: Int = 0,
-      adjOverride: Option[DataFrame] = None): DataFrame = {
-    val adj = adjacencyWithFar(s, d, far, adjOverride)
+      graph: DataFrame, b: Int): DataFrame = {
     // Join strategy by size (r17, guide §3.1): while the adjacency fits
     // the broadcast ceiling it is broadcast — the beam then crosses ZERO
     // exchanges in the grow join; past it (the 100 TB tier: n·(M+F)
@@ -794,7 +730,7 @@ object Nsw {
     // exchanges, single insertion per candidate, no buffer serde.
     val selfLoops = Tables.embeddings(s, d)
       .select(col("vec_id").as("u"), col("vec_id").as("v"))
-    val adjSized = Tables.sizedSide(s, d, adj.unionByName(selfLoops),
+    val adjSized = Tables.sizedSide(s, d, graph.unionByName(selfLoops),
       Tables.RowBytes.Adjacency)
     val grown = beam
       .join(adjSized, beam("cand") === adjSized("u"))
@@ -809,14 +745,14 @@ object Nsw {
   }
 
   /** The search's starting beam: every query of `queries` — rows of the
-    * embeddings table, read for their vec_id — paired with the `e`
+    * embeddings table, read for their vec_id — paired with the [[E]]
     * entry vertices, itself excluded. Declared queries pass the whole
     * table (leave-one-out over the corpus); a sampled evaluator passes
     * its sample and pays only its beam work. Queries are searched
     * independently, so a subset's rows equal the full search's rows for
     * those queries (NswSpec law). */
   private[graft] def entryBeam(s: SparkSession, d: String,
-      queries: DataFrame, e: Int = E): DataFrame = {
+      queries: DataFrame): DataFrame = {
     // keyed repartition (r18, guide §2.4 — the Knn.pairs precedent): hash
     // the query side by its future aggregate key so EVERY downstream
     // per-qid operator (each hop's bounded-heap cut, the final top-K
@@ -827,30 +763,32 @@ object Nsw {
     // search plans ZERO mid-stream exchanges.
     val qs = queries.repartition(Tables.parallelism(s), col("vec_id"))
       .select(col("vec_id").as("qid"))
-    val entries = Tables.embeddings(s, d).where(col("vec_id") < e)
+    val entries = Tables.embeddings(s, d).where(col("vec_id") < E)
       .select(col("vec_id").as("cand"))
     qs.crossJoin(broadcast(entries)).where(col("cand") =!= col("qid"))
   }
 
-  /** Beam search for the `queries` rows (see [[entryBeam]]): [[hop]]
-    * `hops` times, then the exact re-score ([[Ann.exactScored]]) of the
-    * final beam and the top-K cut ([[Ann.heapTopK]]) under the (dist,
-    * cid) total order a rank window would use. */
+  /** Beam search of `graph` (u, v) for the `queries` rows (see
+    * [[entryBeam]]): [[hop]] `hops` times at beam width `b`, then the
+    * exact re-score ([[Ann.exactScored]]) of the final beam and the top-K
+    * cut ([[Ann.heapTopK]]) under the (dist, cid) total order a rank
+    * window would use. The graph is the live [[searchGraph]] or the
+    * committed [[storedAdjacency]]. */
   private[graft] def nswTopkAt(s: SparkSession, d: String,
-      queries: DataFrame, hops: Int, b: Int = B, e: Int = E, far: Int = F,
-      adjOverride: Option[DataFrame] = None): DataFrame = {
-    val beam0 = entryBeam(s, d, queries, e)
+      queries: DataFrame, graph: DataFrame, hops: Int, b: Int): DataFrame = {
+    val beam0 = entryBeam(s, d, queries)
     // per-hop lineage barrier (the Lloyd's/NN-descent discipline):
     // unbarriered, the plan of the fold grows with every hop — measured
     // 46–63 s cold at sf0.1 vs ~17 s with the barrier. The materialized
     // beam is tiny (n_q·B rows); results are bit-identical either way.
     val beamH = (1 to hops).foldLeft(beam0)((bm, _) =>
-      hop(s, d, bm, b, far, adjOverride).checkpointed)
+      hop(s, d, bm, graph, b).checkpointed)
     Ann.heapTopK(s, Ann.exactScored(s, d, beamH.withColumnRenamed("cand", "cid")))
   }
 
   def nswTopk(s: SparkSession, d: String): DataFrame =
-    nswTopkAt(s, d, Tables.embeddings(s, d), tunedH(s, d), tunedB(s, d))
+    nswTopkAt(s, d, Tables.embeddings(s, d), searchGraph(s, d, Ann.C, None),
+      tunedH(s, d), tunedB(s, d))
 
   def nswRecall(s: SparkSession, d: String): DataFrame =
     Ann.recallOf(s, d, nswTopk(s, d))
@@ -870,8 +808,11 @@ object Nsw {
     f"$h%016x".take(12)
   }
 
-  private def nswIndexPath(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): String = {
+  /** The path the CURRENT resolution rule hands a reader — the NSW
+    * serving version, protected absolutely by [[IndexGc]]. */
+  private[graft] def livePath(s: SparkSession, d: String,
+      seedC: Int = Ann.C): String = {
+    requireSeedC(seedC)
     // versioned by EVERY constant the artifact depends on — the graph
     // build constants AND (r13 review finding) the beam-rule constants,
     // since the beam DECISION is committed in the meta file: a beam
@@ -887,23 +828,17 @@ object Nsw {
       else s"_sc$seedC" +
         (if (seedRoutingIsHier(seedC)) s"h${coarseCFor(seedC)}" else "")
     s"${IndexGc.root(s)}/nsw_v3_M${M}_F${F}_P${PAdj}_R${RingD}_" +
-      s"D${dRounds.getOrElse(descentRoundsFor(seedC))}_" +
+      s"D${DescentRounds}_" +
       s"B${B}bs${bStepsDigest}m${ClusterShareMul}d${ClusterBeamDiv}" +
       s"c${Ann.C}$sc" +
       s"_${Ann.corpusFingerprint(s, d)}_${graft.Tables.dirTag(d)}"
   }
 
-  /** The path the CURRENT resolution rule hands a reader — the NSW
-    * serving version, protected absolutely by [[IndexGc]]. */
-  private[graft] def livePath(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): String =
-    nswIndexPath(s, d, seedC, dRounds)
-
   /** The NSW graph as a versioned ON-DISK artifact (VERDICT r12 item 1 —
     * the `ensureIndex` pattern the IVF family proved, applied to the one
     * ANN tier that was still session-cached): the declared far-augmented
     * adjacency (base M-NN graph ∪ F ring links, exactly what
-    * [[adjacencyWithFar]] searches) is built once, committed atomically
+    * [[searchGraph]] searches) is built once, committed atomically
     * (temp dir + one rename + `_BUILT` marker), and every later session
     * pays SEARCH cost only — the build-dominated 20 s the inventory
     * charged per cold NSW query becomes a parquet read. The path is
@@ -929,9 +864,9 @@ object Nsw {
     * Between retrains, delta vectors are served by the IVF tier (exact
     * within probed lists), which needs no graph. */
   private[graft] def ensureNswIndex(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): String =
-    IndexGc.commitOnce(s, nswIndexPath(s, d, seedC, dRounds)) { tmp =>
-      adjacencyWithFar(s, d, F, seedC = seedC, dRounds = dRounds)
+      seedC: Int = Ann.C): String =
+    IndexGc.commitOnce(s, livePath(s, d, seedC)) { tmp =>
+      searchGraph(s, d, seedC, None)
         .write.mode("overwrite").parquet(s"$tmp/adjacency")
       // the beam decision is INDEX metadata (r13): the shape signal
       // (top seed-cell occupancy) is a property of the corpus the
@@ -949,8 +884,8 @@ object Nsw {
 
   /** The committed on-disk adjacency (u, v). */
   private[graft] def storedAdjacency(s: SparkSession, d: String,
-      seedC: Int = Ann.C, dRounds: Option[Int] = None): DataFrame =
-    s.read.parquet(s"${ensureNswIndex(s, d, seedC, dRounds)}/adjacency")
+      seedC: Int = Ann.C): DataFrame =
+    s.read.parquet(s"${ensureNswIndex(s, d, seedC)}/adjacency")
 
   /** The committed beam decision (one tiny meta file — see the build
     * comment in [[ensureNswIndex]]). Equals the live [[tunedB]] by
@@ -966,8 +901,8 @@ object Nsw {
     * beam — a cold session pays E + H·B·(M+F) probe work only, never
     * the NN-descent build or the shape scan. */
   def nswTopkIndexed(s: SparkSession, d: String): DataFrame =
-    nswTopkAt(s, d, Tables.embeddings(s, d), tunedH(s, d), storedBeam(s, d),
-      E, far = 0, adjOverride = Some(storedAdjacency(s, d)))
+    nswTopkAt(s, d, Tables.embeddings(s, d), storedAdjacency(s, d),
+      tunedH(s, d), storedBeam(s, d))
 
   /** ann_nsw_topk_upserted (r15, VERDICT r14 item 6): the DELTA-SERVING
     * topology the upsert contract below states in prose, now a graded
@@ -994,10 +929,9 @@ object Nsw {
     * [[Ann.RetrainNum]]/[[Ann.RetrainDen]] of the base. */
   def nswTopkUpserted(s: SparkSession, d: String): DataFrame = {
     val cut = Ann.upsertCut(s, d)
-    val baseAdj = adjacencyWithFar(s, d, F, None, Ann.C, Some(cut))
-    val base = nswTopkAt(s, d, Tables.embeddings(s, d), stepHops(cut),
-      beamFrom(cut, topCellSizeBase(s, d, cut)), E, far = 0,
-      adjOverride = Some(baseAdj))
+    val base = nswTopkAt(s, d, Tables.embeddings(s, d),
+      searchGraph(s, d, Ann.C, Some(cut)), stepHops(cut),
+      beamFrom(cut, topCellSizeBase(s, d, cut)))
     val delta = Ann.ivfTopkDelta(s, d)
     val cands = base.select(col("qid"), col("cid"))
       .unionByName(delta.select(col("qid"), col("cid")))

@@ -6,21 +6,17 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ops.Nsw
 
-/** Build-and-commit one persisted NSW artifact — the builder half of
-  * the [[NswTune]] diagnostic pair (NswTune reads only committed
-  * artifacts by contract). Used by the descent-round rule-effect A/B
-  * (VERDICT r14 item 6): build the declared-rule graph and a
-  * `seedC:dRounds`-overridden one, then grid-search both with NswTune.
+/** Build-and-commit one persisted NSW artifact at a given seed cell
+  * count — the builder half of the [[NswTune]] diagnostic pair (NswTune
+  * reads only committed artifacts by contract), and the tier-build
+  * recipe of SCALE_r17.
   *
-  * Usage: runMain graft.tools.NswBuild <dir> <seedC>[:<dRounds>]
+  * Usage: runMain graft.tools.NswBuild <dir> <seedC>
   */
 object NswBuild {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val (seedC, dRounds) = args(1).split(":") match {
-      case Array(c) => (c.toInt, None)
-      case Array(c, dr) => (c.toInt, Some(dr.toInt))
-    }
+    val seedC = args(1).toInt
     val spark = SparkSession.builder().master("local[16]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
@@ -33,10 +29,10 @@ object NswBuild {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
-    val path = Nsw.ensureNswIndex(spark, dir, seedC, dRounds)
+    val path = Nsw.ensureNswIndex(spark, dir, seedC)
     println(f"[nswbuild] committed $path in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1f s " +
-      f"(seedC=$seedC, D=${dRounds.getOrElse(Nsw.descentRoundsFor(seedC))})")
+      f"(seedC=$seedC, D=${Nsw.DescentRounds})")
     spark.stop()
   }
 }

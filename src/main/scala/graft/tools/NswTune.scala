@@ -11,17 +11,13 @@ import graft.ops.{Ann, Nsw}
   * graph) from SEARCH budget (hops × beam) when a tier misses its bar.
   * Reads only committed `_BUILT` artifacts; builds nothing.
   *
-  * Usage: runMain graft.tools.NswTune <dir> <seedC>[:<dRounds>] <h1,b1 ...>
-  * (`:<dRounds>` selects a committed DIAGNOSTIC build with an overridden
-  * descent-round count — the rule-effect A/B of VERDICT r14 item 6.)
+  * Usage: runMain graft.tools.NswTune <dir> <seedC> <h1,b1 ...>
+  * (build the `<seedC>` artifact first with [[NswBuild]].)
   */
 object NswTune {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val (seedC, dRounds) = args(1).split(":") match {
-      case Array(c) => (c.toInt, None)
-      case Array(c, dr) => (c.toInt, Some(dr.toInt))
-    }
+    val seedC = args(1).toInt
     val grid = args.drop(2).map { s =>
       val Array(h, b) = s.split(","); (h.toInt, b.toInt)
     }
@@ -44,19 +40,17 @@ object NswTune {
     // almost certainly a typo'd seedC (ADVICE r14). This tool reads
     // only committed artifacts, per its contract above.
     val builtPath = new org.apache.hadoop.fs.Path(
-      Nsw.livePath(spark, dir, seedC, dRounds), graft.ops.IndexGc.BuiltMarker)
+      Nsw.livePath(spark, dir, seedC), graft.ops.IndexGc.BuiltMarker)
     val fs = builtPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(builtPath),
-      s"no committed NSW artifact for (dir=$dir, seedC=$seedC, " +
-        s"dRounds=$dRounds) — expected $builtPath; NswTune builds " +
-        "nothing (run the build via ScaleCheck/ensureNswIndex first, " +
-        "or fix the seedC argument)")
-    val adj = Nsw.storedAdjacency(spark, dir, seedC, dRounds)
+      s"no committed NSW artifact for (dir=$dir, seedC=$seedC) — " +
+        s"expected $builtPath; NswTune builds nothing (run NswBuild " +
+        "first, or fix the seedC argument)")
+    val adj = Nsw.storedAdjacency(spark, dir, seedC)
       .checkpointed
     grid.foreach { case (h, b) =>
       val t0 = System.nanoTime()
-      val approx = Nsw.nswTopkAt(spark, dir, qs, h, b, far = 0,
-          adjOverride = Some(adj))
+      val approx = Nsw.nswTopkAt(spark, dir, qs, adj, h, b)
       val r = Ann.recall(approx, exact).head().getAs[Double]("recall")
       println(f"[tune] seedC=$seedC H=$h B=$b recall=$r%.4f " +
         f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")

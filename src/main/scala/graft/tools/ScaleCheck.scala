@@ -51,16 +51,6 @@ object ScaleCheck {
     * of measuring it here. */
   val SeedVolumeBudget = 200000000L
 
-  /** The r15 per-BUILD seed-pair disk capacity — RETIRED as a build
-    * decision in r16 (see `tierSeedC` below: the heap build no longer
-    * puts seed pairs on disk, and the capacity C it prescribed was
-    * measured routing-infeasible at the 2M tier). Kept as the pinned
-    * calibration constant of [[graft.ops.Nsw.capacitySeedC]]'s specs
-    * and of the r15 record: the 632k 4√n volume of 1.56·10⁹ pairs ran
-    * a ~90 GB disk to no-space when pairs still EXCHANGED; 3.1·10⁸
-    * built in ~35 GB. */
-  val SeedBuildCapacity = 800000000L
-
   /** knn_topk cut by a rank window instead of the heap: row_number over
     * (dist, cid) per query on the broadcast pair stream — the triple
     * agreement's third, cut-independent plan, and the reference the
@@ -170,12 +160,12 @@ object ScaleCheck {
     // term is O(n^1.5), so the fraction vanishes as n grows).
     check("nsw build sub-quadratic") {
       val t0 = System.nanoTime()
-      val adj = Nsw.adjacency(spark, sfDir)
+      val adj = Nsw.adjacency(spark, sfDir, Ann.C, None)
       val edges = adj.count()
       val tBuild = (System.nanoTime() - t0) / 1e9
       require(edges == nVec * Nsw.M,
         s"adjacency not M-regular: $edges != ${nVec * Nsw.M}")
-      val seeds = Nsw.seedCandidates(spark, sfDir).count()
+      val seeds = Nsw.seedCandidates(spark, sfDir, Ann.C, None).count()
       val roundVol =
         Nsw.DescentRounds.toLong * nVec * (2 * Nsw.M) * (2 * Nsw.M)
       val frac = (seeds + roundVol).toDouble / (nVec.toDouble * nVec)
@@ -191,8 +181,9 @@ object ScaleCheck {
       val approx = Nsw.nswRecall(spark, sfDir)
         .head().getAs[Double]("recall")
       val exact = Ann.recallOf(spark, sfDir, Nsw.nswTopkAt(spark, sfDir,
-          graft.Tables.embeddings(spark, sfDir), Nsw.H, bAuto,
-          adjOverride = Some(Nsw.exactAdjacency(spark, sfDir))))
+          graft.Tables.embeddings(spark, sfDir),
+          Nsw.withFarLinks(spark, sfDir, Nsw.exactAdjacency(spark, sfDir),
+            None), Nsw.H, bAuto))
         .head().getAs[Double]("recall")
       require(approx >= exact - 0.05,
         s"approx-graph recall $approx < exact-graph $exact - 0.05")
@@ -546,8 +537,8 @@ object ScaleCheck {
     // silently-wrapped product would pick the wrong branch.
     //
     // Above the fixed-C volume budget the retune is the 4√n rule, NOT
-    // the r15 capacity ceiling (RETIRED r16, falsified by the 2M tier):
-    // capacitySeedC raised C to fit seed pairs on disk, but the r16
+    // the r15 capacity ceiling (retired r16, falsified by the 2M tier;
+    // SCALE_r16): that rule raised C to fit seed pairs on disk, but the r16
     // heap build never puts seed pairs on disk (dedup-in-heap removed
     // the pair exchanges; argmin assignment no longer SortAggregates),
     // while the capacity C's ROUTING term n·seedC — which grows as
@@ -582,8 +573,8 @@ object ScaleCheck {
         // per-query independence makes the pre-restriction exact).
         Nsw.ensureNswIndex(spark, cd2, seedC)
         val hAuto = Nsw.stepHops(n)
-        val approx = Nsw.nswTopkAt(spark, cd2, qs, hAuto, bAuto, far = 0,
-            adjOverride = Some(Nsw.storedAdjacency(spark, cd2, seedC)))
+        val approx = Nsw.nswTopkAt(spark, cd2, qs,
+            Nsw.storedAdjacency(spark, cd2, seedC), hAuto, bAuto)
         val row = Ann.recall(approx, exact).head()
         val nq = row.getAs[Long]("n_queries")
         val r = row.getAs[Double]("recall")
@@ -624,9 +615,8 @@ object ScaleCheck {
         val b = Nsw.storedBeam(spark, dir, seedC)
         def run(): Double = {
           val t0 = System.nanoTime()
-          Nsw.nswTopkAt(spark, dir, qs, Nsw.stepHops(n), b, far = 0,
-            adjOverride = Some(Nsw.storedAdjacency(spark, dir, seedC)))
-            .count()
+          Nsw.nswTopkAt(spark, dir, qs, Nsw.storedAdjacency(spark, dir, seedC),
+            Nsw.stepHops(n), b).count()
           (System.nanoTime() - t0) / 1e9
         }
         val t = math.min(run(), run()) // min-of-2: contention guard

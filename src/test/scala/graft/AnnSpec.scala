@@ -67,7 +67,8 @@ class AnnSpec extends SparkSpec {
       "ivfTopk" -> Ann.ivfTopk, "ivfTopkIndexed" -> Ann.ivfTopkIndexed,
       "ivfTopkUpserted" -> Ann.ivfTopkUpserted, "ivfpqTopk" -> Ann.ivfpqTopk,
       "ivfsqTopk" -> Ann.ivfsqTopk,
-      "nswSeedCells" -> ((s, d) => graft.ops.Nsw.seedCandidates(s, d)))
+      "nswSeedCells" -> ((s, d) =>
+        graft.ops.Nsw.seedCandidates(s, d, Ann.C, None)))
     withAqeBothWays {
       tiers.foreach { case (name, q) =>
         val df = q(spark, sf0001)
@@ -134,14 +135,25 @@ class AnnSpec extends SparkSpec {
 
   test("adc lut branch: broadcast vs qid-keyed shuffle-hash — same rows, " +
     "declared physical shapes") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     // ann_pq_topk sizes its LUT join and both rerank embedding lookups
     // by Tables.sizedSide; ann_sq8_topk sizes its rerank lookups. A
     // session with broadcast off takes every sized side to shuffle-hash.
+    // Both flat scans also size their corpus-wide code table: with
+    // broadcast off it is never broadcast into the (qid, cid) pair scan.
+    // (PQ's fixed 256-row codebook cross join stays a broadcast.)
     def joins(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
       val p = df.queryExecution.executedPlan.toString
       ("BroadcastHashJoin".r.findAllIn(p).size,
         "ShuffledHashJoin".r.findAllIn(p).size)
     }
+    // nested-loop joins that emit (qid, cid) pairs with a broadcast side
+    def broadcastPairScans(df: org.apache.spark.sql.DataFrame): Int =
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case j: BroadcastNestedLoopJoinExec
+          if j.output.exists(_.name == "cid") => j
+      }.size
     val bcKey = "spark.sql.autoBroadcastJoinThreshold"
     for (name <- Seq("ann_pq_topk", "ann_sq8_topk")) withClue(s"$name: ") {
       val bc = Ann.queries(name)(spark, sf0001)
@@ -149,12 +161,17 @@ class AnnSpec extends SparkSpec {
       val (bcB, _) = joins(bc)
       assert(bcB >= 1, s"default branch must broadcast the sized sides " +
         s"(saw $bcB broadcasts)")
+      assert(broadcastPairScans(bc) === 1,
+        s"default branch must broadcast the code table once:\n" +
+          bc.queryExecution.executedPlan)
       try {
         spark.conf.set(bcKey, "-1")
         Ann.clearCache()
         val sh = Ann.queries(name)(spark, sf0001)
         val shRows = sh.collect()
         val (shB, shS) = joins(sh)
+        assert(broadcastPairScans(sh) === 0, "broadcast off must not " +
+          s"broadcast the code table:\n${sh.queryExecution.executedPlan}")
         assert(shS >= 1, s"broadcast-off branch must shuffle-hash the " +
           s"sized sides (saw $shS)")
         assert(shB < bcB, "broadcast off must remove the sized broadcasts")
@@ -449,6 +466,10 @@ class AnnSpec extends SparkSpec {
       stream.output.exists(_.name == "cv"),
       s"expected the sample to broadcast into the exact arm:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian leak:\n$plan")
+    // the sample is materialized once, before both arms: no arm re-runs
+    // its corpus scan, hash and top-N
+    assert(!plan.contains("TakeOrderedAndProject"),
+      s"the sample's top-N runs inside the plan:\n$plan")
   }
 
   test("ivf query restriction is exact: searching a query subset ≡ the " +

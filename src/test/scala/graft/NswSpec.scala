@@ -11,7 +11,7 @@ class NswSpec extends SparkSpec {
 
   test("adjacency is exactly M-regular and near-exact (NN-descent law)") {
     val n = Tables.embeddings(spark, sf0001).count()
-    val adj = Nsw.adjacency(spark, sf0001)
+    val adj = Nsw.adjacency(spark, sf0001, Ann.C, None)
     assert(adj.count() === n * Nsw.M)
     val deg = adj.groupBy($"u").count().select($"count").distinct().collect()
     assert(deg.length === 1 && deg(0).getLong(0) === Nsw.M.toLong)
@@ -29,8 +29,9 @@ class NswSpec extends SparkSpec {
   test("search recall on the approximate graph stays within eps of the exact graph") {
     val approx = Nsw.nswRecall(spark, sf0001).head().getAs[Double]("recall")
     val exact = Ann.recallOf(spark, sf0001, Nsw.nswTopkAt(spark, sf0001,
-        Tables.embeddings(spark, sf0001), Nsw.H,
-        adjOverride = Some(Nsw.exactAdjacency(spark, sf0001))))
+        Tables.embeddings(spark, sf0001),
+        Nsw.withFarLinks(spark, sf0001, Nsw.exactAdjacency(spark, sf0001),
+          None), Nsw.H, Nsw.B))
       .head().getAs[Double]("recall")
     assert(approx >= exact - 0.02,
       s"approx-graph search recall $approx < exact-graph $exact - 0.02")
@@ -41,9 +42,11 @@ class NswSpec extends SparkSpec {
     // the old beam is unioned before pruning, so the beam after h+1
     // hops can only contain better-or-equal candidates: recall is
     // non-decreasing in hop count
+    val graph = Nsw.searchGraph(spark, sf0001, Ann.C, None)
     val recalls = (0 to Nsw.H).map { h =>
       Ann.recallOf(spark, sf0001, Nsw.nswTopkAt(spark, sf0001,
-        Tables.embeddings(spark, sf0001), h)).head().getAs[Double]("recall")
+        Tables.embeddings(spark, sf0001), graph, h, Nsw.B))
+        .head().getAs[Double]("recall")
     }
     recalls.sliding(2).foreach { case Seq(a, b) =>
       assert(b >= a - 1e-9, s"recall decreased across a hop: $recalls")
@@ -172,7 +175,7 @@ class NswSpec extends SparkSpec {
     val bcKey = "spark.sql.autoBroadcastJoinThreshold"
     def oneHop() = Nsw.hop(spark, sf0001,
       Nsw.entryBeam(spark, sf0001, Tables.embeddings(spark, sf0001)),
-      Nsw.tunedB(spark, sf0001), Nsw.F)
+      Nsw.searchGraph(spark, sf0001, Ann.C, None), Nsw.tunedB(spark, sf0001))
     try withAqeBothWays {
       // sf0.001 (500 vectors): the bound is ~600 KB — broadcast branch
       val plan = oneHop().queryExecution.executedPlan.toString
@@ -209,7 +212,7 @@ class NswSpec extends SparkSpec {
     // graph-from-disk ≡ graph-recomputed (edges are longs — parquet is
     // lossless), both directions
     val stored = Nsw.storedAdjacency(spark, sf0001)
-    val live = Nsw.adjacencyWithFar(spark, sf0001, Nsw.F)
+    val live = Nsw.searchGraph(spark, sf0001, Ann.C, None)
     assert(stored.except(live).count() === 0L &&
            live.except(stored).count() === 0L,
       "persisted adjacency must equal the live far-augmented graph")
@@ -234,14 +237,15 @@ class NswSpec extends SparkSpec {
       "persisted meta beam must equal the live shape-aware rule")
   }
 
-  test("qOnly search restriction is exact: restricted-then-searched ≡ " +
+  test("search restriction is exact: restricted-then-searched ≡ " +
     "searched-then-filtered, row for row") {
     // per-query independence is the argument that lets the sampled
     // evaluators (ScaleCheck's 63k tier) search only their sample; pin
     // it as a law so a future hop change that couples queries (e.g. a
     // shared frontier) fails HERE
     val queries = Tables.embeddings(spark, sf0001).where(col("vec_id") % 7 === 0)
-    val restricted = Nsw.nswTopkAt(spark, sf0001, queries, Nsw.H,
+    val restricted = Nsw.nswTopkAt(spark, sf0001, queries,
+        Nsw.searchGraph(spark, sf0001, Ann.C, None), Nsw.H,
         Nsw.tunedB(spark, sf0001))
       .collect().map(_.toString)
     val filtered = Nsw.nswTopk(spark, sf0001)
@@ -314,37 +318,24 @@ class NswSpec extends SparkSpec {
     // at scale: exact pow2-floored 4√n (the ScaleCheck tier decisions)
     assert(Nsw.retunedSeedC(63000L) === 512)
     assert(Nsw.retunedSeedC(200000L) === 1024)
-    // descent rounds: DEMOTED to the fixed DescentRounds at every
-    // seedC (r15 — the compensation rule measured zero effect at both
-    // a 4x and a 16x seedC ratio; see descentRoundsFor's scaladoc)
-    assert(Nsw.descentRoundsFor(graft.ops.Ann.C) === Nsw.DescentRounds)
-    assert(Nsw.descentRoundsFor(512) === Nsw.DescentRounds)
-    assert(Nsw.descentRoundsFor(1024) === Nsw.DescentRounds)
-    assert(Nsw.descentRoundsFor(4096) === Nsw.DescentRounds)
     // domain guard (ADVICE r14): outside the retune rule's range the
-    // arithmetic is silently wrong (seedC<C → trailingZeros(0)=32 →
-    // a ~34-round build; non-pow2 floors) — must throw, never build
-    intercept[IllegalArgumentException](Nsw.descentRoundsFor(128))
-    intercept[IllegalArgumentException](Nsw.descentRoundsFor(768))
-    intercept[IllegalArgumentException](Nsw.descentRoundsFor(0))
-    // capacity ceiling (r15; RETIRED as the tier decision in r16 — the
-    // heap build exchanges no seed pairs, so the 4√n retune is the
-    // declared rule again — but the function stays pinned): seedC
-    // raises past the 4√n retune exactly when the retuned volume
-    // exceeds the build budget, to the smallest pow2 whose volume
-    // fits; never below the retune; postcondition PAdj·n²/C ≤ budget
-    assert(Nsw.capacitySeedC(200000L, 800000000L) === 1024) // retune binds
-    assert(Nsw.capacitySeedC(632000L, 800000000L) === 4096) // capacity binds
-    Seq((63000L, 800000000L), (200000L, 800000000L),
-        (632000L, 800000000L), (5000000L, 800000000L)).foreach {
-      case (n, b) =>
-        val c = Nsw.capacitySeedC(n, b)
-        assert(c >= Nsw.retunedSeedC(n) && Integer.bitCount(c) === 1)
-        assert(BigInt(n) * n * Nsw.PAdj / c <= b,
-          s"volume postcondition broke at n=$n: C=$c")
-        // the compensation rule accepts every capacity decision
-        assert(Nsw.descentRoundsFor(c) >= Nsw.DescentRounds)
+    // arithmetic is silently wrong (non-pow2 seedC floors, seedC < C
+    // seeds from fewer cells than the declared index) — both the build
+    // and the index path must throw, never build
+    for (bad <- Seq(128, 768, 0)) {
+      intercept[IllegalArgumentException](Nsw.livePath(spark, sf0001, bad))
+      intercept[IllegalArgumentException](
+        Nsw.adjacency(spark, sf0001, bad, None))
     }
+    // the declared path keeps the fixed D2 segment and every segment of
+    // IndexGcSpec's pinned nsw_v3 name, so committed graphs keep serving
+    val name = new org.apache.hadoop.fs.Path(Nsw.livePath(spark, sf0001))
+      .getName
+    val prefix = s"nsw_v3_M16_F8_P8_R8_D2_B48bs${Nsw.bStepsDigest}m3d4c256_"
+    val suffix = "_" + Tables.dirTag(sf0001)
+    assert(name.startsWith(prefix) && name.endsWith(suffix) &&
+      name.stripPrefix(prefix).stripSuffix(suffix).matches("n\\d+x\\d+b\\d+"),
+      name)
     // size-keyed hop rule: every graded fixture and both certified
     // rehearsal tiers (20k/63k) keep the base H — declared hashes
     // cannot move — and one hop is added per BSteps row above the 63k
@@ -372,7 +363,7 @@ class NswSpec extends SparkSpec {
     assert(fs.exists(new Path(p0, "_BUILT")) &&
            fs.exists(new Path(p1, "_BUILT")))
     val n = Tables.embeddings(spark, sf0001).count()
-    val deg = Nsw.adjacency(spark, sf0001, seedC)
+    val deg = Nsw.adjacency(spark, sf0001, seedC, None)
       .groupBy($"u").count().select($"count").distinct().collect()
     assert(deg.length === 1 && deg(0).getLong(0) === Nsw.M.toLong,
       "retuned adjacency must stay exactly M-regular")
@@ -470,7 +461,7 @@ class NswSpec extends SparkSpec {
     assert(Nsw.coarseCFor(8192) === 256)
     assert(Nsw.coarseCFor(16384) === 512)
     assert(Nsw.coarseCFor(65536) === 1024)
-    // out-of-domain coarseCFor fails loudly, like descentRoundsFor
+    // out-of-domain coarseCFor fails loudly, like the seedC guard
     intercept[IllegalArgumentException] { Nsw.coarseCFor(4096) }
     // the version path carries the h segment ONLY when the rule fires
     val flatPath = Nsw.livePath(spark, sf0001, 4096)
