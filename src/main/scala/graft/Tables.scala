@@ -23,7 +23,13 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame   = s.read.parquet(s"$d/orders.parquet")
   def lineitem(s: SparkSession, d: String): DataFrame = s.read.parquet(s"$d/lineitem.parquet")
   def documents(s: SparkSession, d: String): DataFrame = s.read.parquet(s"$d/documents.parquet")
-  def embeddings(s: SparkSession, d: String): DataFrame = s.read.parquet(s"$d/embeddings.parquet")
+  def embeddings(s: SparkSession, d: String): DataFrame =
+    s.read.schema(EmbeddingsSchema).parquet(s"$d/embeddings.parquet")
+
+  /** Declared, since inferring it starts a Spark job per read; it is
+    * what every fixture tier infers (a KnnSpec law). */
+  private[graft] val EmbeddingsSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
 
   /** `events.ts` has shipped in two parquet encodings across fixture
     * regenerations: TIMESTAMP(NANOS) (Spark 4 reads it as LONG under the
@@ -180,18 +186,14 @@ object Tables {
     s.sessionState.conf.autoBroadcastJoinThreshold > 0 &&
       rows * rowBytes <= BroadcastCeilingBytes
 
-  /** [[broadcastFits]] for a side of `rowBytes` per corpus vector of
-    * dataset `d`; the vector count is the embeddings footer, no job. */
-  private[graft] def corpusFits(s: SparkSession, d: String,
-      rowBytes: Long): Boolean =
-    broadcastFits(s, footerRowCount(s, s"$d/embeddings.parquet"), rowBytes)
-
   /** `side` broadcast when the corpus fits at `rowBytes` per vector
-    * ([[corpusFits]]), else hinted `shuffle_hash`: key-partitioned,
-    * nothing replicated per executor, and no sort of the big side as a
+    * ([[broadcastFits]]; the vector count is the embeddings footer, no
+    * job), else hinted `shuffle_hash`: key-partitioned, nothing
+    * replicated per executor, and no sort of the big side as a
     * sort-merge join would do. */
   private[graft] def sizedSide(s: SparkSession, d: String, side: DataFrame,
       rowBytes: Long): DataFrame =
-    if (corpusFits(s, d, rowBytes)) broadcast(side)
+    if (broadcastFits(s, footerRowCount(s, s"$d/embeddings.parquet"), rowBytes))
+      broadcast(side)
     else side.hint("shuffle_hash")
 }

@@ -236,7 +236,7 @@ object Ann {
     * gives exactly the subset's rows of the full routing. */
   private[graft] def probesOf(s: SparkSession, queries: DataFrame,
       cents: DataFrame, p: Int): DataFrame = {
-    // keyed repartition (r17, the Knn.pairs move): hashing the query
+    // keyed repartition (r17, the Knn.scan move): hashing the query
     // side by vec_id up front lets the broadcast cross join preserve the
     // partitioning, so the top-p heap below plans ONE complete
     // aggregation with zero exchanges (round-robin forced a
@@ -347,25 +347,6 @@ object Ann {
       .select(col("qid"), col("qv"), col("pos"), col("t.id").as("cent_id"))
   }
 
-  /** Final exact top-K per query over scored (qid, cid, dist) rows —
-    * the ONE heap-form cut every ANN serving tier shares (r17,
-    * optimization round; the knn_topk ≡ knn_topk_agg precedent applied
-    * to the serving cuts). The window form this replaces local-sorted
-    * the FULL scored candidate stream per partition (WindowGroupLimit
-    * needs sorted input) and paid a second sort after its exchange; the
-    * bounded heap keeps ≤ K entries per query map-side, so the exchange
-    * carries partial heaps and nothing is ever sorted. Same NaN-total
-    * (dist, cid) comparator as the window ⇒ identical rows, ranks and
-    * hashes. */
-  private[graft] def heapTopK(s: SparkSession, scored: DataFrame): DataFrame =
-    scored.groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.top_k_by(s,
-        col("dist"), col("cid"), lit(0), K).as("top"))
-      .select(col("qid"), posexplode(col("top")).as(Seq("pos", "nbr")))
-      .select(col("qid"), (col("pos") + 1).cast("int").as("rnk"),
-        col("nbr.id").as("cid"), round(col("nbr.dist"), 6).as("dist"))
-      .orderBy(col("qid"), col("rnk"))
-
   /** The quantized-scan cut limit — greatest(PqRerankMin,
     * n·cutNum DIV cutDen) — as a PLAN-TIME literal from the parquet
     * footer row count (driver metadata read, no job; footer count ≡
@@ -425,25 +406,13 @@ object Ann {
         VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist"))
   }
 
-  /** Keep each query's `rlim` best candidates under the (score, cid)
-    * total order — the quantized-tier pre-cut, heap form (map-side
-    * partial collapse; nothing sorted, the exchange carries ≤ rlim
-    * entries per query per partition). Long scores cast to double are
-    * exact here (SDC ≤ dim·255² ≪ 2⁵³), so the order is unchanged. */
-  private def heapCut(s: SparkSession, scored: DataFrame,
-      score: String, rlim: Int): DataFrame =
-    scored.groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.top_k_by(s,
-        col(score).cast("double"), col("cid"), lit(0), rlim).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.id").as("cid"))
-
   /** THE quantized cut + exact rerank of every compressed tier (PQ,
     * IVFPQ, SQ8, IVF×SQ8): keep each query's
     * `greatest(PqRerankMin, n·cutNum DIV cutDen)` best candidates under
-    * the quantized `score` ([[heapCut]], limit from [[rerankLimit]]),
-    * then the exact re-score ([[exactScored]]) of the survivors and the
-    * final heap top-K →
+    * the quantized `score` ([[Knn.ranked]] over the score cast to
+    * double — exact here: SDC ≤ dim·255² ≪ 2⁵³ — with the limit from
+    * [[rerankLimit]]), then the exact re-score ([[exactScored]]) of the
+    * survivors and the final heap top-K ([[Knn.ranked]] at [[K]]) →
     * (qid, rnk, cid, dist). Both cuts are heap form with plan-time
     * limits (r17): the old runtime-column limit (agg + crossJoin)
     * blinded every bound pushdown, so the full scored pair stream was
@@ -453,39 +422,31 @@ object Ann {
     * already discarded most of the corpus. */
   private def rerankTopk(s: SparkSession, d: String, scored: DataFrame,
       score: String, cutNum: Int, cutDen: Int): DataFrame = {
-    val cands = heapCut(s, scored, score, rerankLimit(s, d, cutNum, cutDen))
-    heapTopK(s, exactScored(s, d, cands))
+    val cands = Knn.ranked(scored.select(col("qid"), col("cid"),
+        col(score).cast("double").as("dist")),
+        rerankLimit(s, d, cutNum, cutDen), lit(0))
+      .select(col("qid"), col("cid"))
+    Knn.neighbors(Knn.ranked(exactScored(s, d, cands), K, lit(0)))
   }
 
   /** The flat quantized scans' leave-one-out pair stream (PQ and SQ8):
-    * every `queries` row (keyed qid) against every other `codes` row
-    * (keyed cid).
+    * [[Knn.scan]] of every `queries` row (keyed qid) against every other
+    * `codes` row (keyed cid).
     *
     * The query side is hashed by qid into [[cutPartitions]] partitions
-    * for the n/10 cut. The keyed repartition (r17, the Knn.pairs move)
-    * both parallelizes the n² scan — the bare scan arrives as ONE input
-    * partition at fixture scale — and lets the qid-keyed heap cut
-    * aggregate with zero exchanges below the scan's nested-loop join.
-    *
-    * The code side is broadcast explicitly while the corpus fits at
-    * `rowBytes` per vector ([[Tables.corpusFits]]) (r18, guide §3.1):
-    * left to its size estimates the planner broadcast the (smaller)
-    * bare-qid QUERY side and streamed the codes, so the pair stream came
-    * out cid-partitioned — the keyed repartition was discarded and the
-    * heap cut paid a partial/final split whose exchange carried nearly
-    * the full pre-cut volume. With the codes broadcast the query side
-    * streams, stays qid-partitioned, and the cut plans as ONE complete
-    * aggregation. Past the ceiling, or with broadcast off, the join is
-    * left to the planner (a non-equi join has no shuffle-hash form): the
-    * flat n² scan is not the at-scale serving tier (IVFPQ is). */
+    * for the n/10 cut (r17): that parallelizes the n² scan and lets the
+    * qid-keyed heap cut aggregate with zero exchanges. The codes are the
+    * built side, laid out by [[Knn.layoutAt]] at `rowBytes` per vector
+    * (r18, guide §3.1): left to its size estimates the planner built the
+    * smaller bare-qid QUERY side instead, the pair stream came out
+    * cid-partitioned, and the heap cut's exchange carried nearly the
+    * full pre-cut volume. */
   private def flatPairs(s: SparkSession, d: String, queries: DataFrame,
       codes: DataFrame, rowBytes: Long): DataFrame = {
-    val qside = queries.repartition(cutPartitions(s,
-      Tables.footerRowCount(s, s"$d/embeddings.parquet"),
-      rerankLimit(s, d, 1, PqRerankDiv)), col("qid"))
-    val cside =
-      if (Tables.corpusFits(s, d, rowBytes)) broadcast(codes) else codes
-    qside.join(cside, col("qid") =!= col("cid"))
+    val n = Tables.footerRowCount(s, s"$d/embeddings.parquet")
+    Knn.scan(queries.repartition(
+        cutPartitions(s, n, rerankLimit(s, d, 1, PqRerankDiv)), col("qid")),
+      codes, Knn.layoutAt(s, n, rowBytes))
   }
 
   /** THE list-probe join of every IVF tier and of the NSW seed cells:
@@ -511,13 +472,14 @@ object Ann {
     * under `cents`/`lists`: probe the `p` nearest lists per query, exact
     * cosine within the probed lists. Leave-one-out like knn_topk. Top-K
     * via the bounded heap (r17): the probed candidate stream is n·p/C
-    * rows per query; see [[heapTopK]]. */
+    * rows per query; see [[Knn.ranked]]. */
   private[graft] def ivfTopkFrom(s: SparkSession, queries: DataFrame,
       cents: DataFrame, lists: DataFrame, p: Int): DataFrame =
-    heapTopK(s, probedCandidates(probesOf(s, queries, cents, p),
+    Knn.neighbors(Knn.ranked(probedCandidates(probesOf(s, queries, cents, p),
         lists, Seq(col("embedding").as("cv")))
       .select(col("qid"), col("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")))
+        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")),
+      K, lit(0)))
 
   def ivfTopk(s: SparkSession, d: String): DataFrame =
     ivfTopkFrom(s, Tables.embeddings(s, d), centroids(s, d),
@@ -1161,21 +1123,21 @@ object Ann {
       .select(col("vec_id"), col("embedding"))
 
   /** The sampled exact arm of [[recall]]: each `sample` query's exact
-    * top-K (qid, cid) over the whole corpus. The sample is the small
-    * side, so it broadcasts and the corpus streams against it — n_s·n
-    * distance evaluations, never n² — and [[heapCut]] cuts at K (r17:
-    * the scored stream is never sorted; same (dist, cid) order as a
-    * rank window). `Knn.scan` does not fit: it broadcasts the corpus. */
+    * top-K (qid, cid) over the whole corpus — [[Knn.scan]] with the
+    * corpus streamed and the sample built, laid out at
+    * [[RecallSampleCap]] rows (the sample's ceiling), then
+    * [[Knn.ranked]] at K. The sample broadcasts while broadcast is on:
+    * n_s·n distance evaluations, never n². */
   private[graft] def sampledExact(s: SparkSession, d: String,
       sample: DataFrame): DataFrame = {
     val c = Tables.repartitioned(Tables.embeddings(s, d), s)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     val q = sample.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    heapCut(s, c.crossJoin(broadcast(q))
-      .where(col("qid") =!= col("cid"))
+    Knn.ranked(Knn.scan(c, q,
+        Knn.layoutAt(s, RecallSampleCap, Tables.RowBytes.Embedding))
       .select(col("qid"), col("cid"),
-        VectorExpressions.cosine_distance(s, col("qv"), col("cv"))
-          .as("dist")), "dist", K)
+        VectorExpressions.cosine_distance(s, col("qv"), col("cv")).as("dist")),
+      K, lit(0)).select(col("qid"), col("cid"))
   }
 
   /** ann_recall_sampled: recall@K of the trained IVF tier over the

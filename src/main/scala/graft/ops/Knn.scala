@@ -12,18 +12,21 @@ import graft.functions.VectorExpressions
   * keeps a bounded priority queue + majority vote) and a CUDA kernel
   * (dense m×n distance matrix + per-row selection). Here the same WHAT
   * is declared once: one leave-one-out pair scan ([[scan]]) → compiled
-  * distance kernel → bounded-heap `top_k_by` cut per query → vote.
+  * distance kernel → bounded-heap `top_k_by` cut per query ([[ranked]])
+  * → vote. The scan and the cut are also those of the ANN tiers' flat
+  * PQ/SQ8 scans, their sampled exact recall arm and every ANN final cut.
   *
   * Scale design (100 TB / 1000 executors):
-  *  - The query side is hashed by qid across the cluster; the candidate
-  *    side is `broadcast()` while the corpus fits the engine's broadcast
-  *    ceiling ([[Tables.broadcastFits]]) — the analog of the reference's
-  *    DistributedCache'd training set. Each task streams its query
-  *    partition against the in-memory candidate table.
+  *  - The caller streams one side, partitioned as it needs (Knn hashes
+  *    the queries by qid); the built side is `broadcast()` while it
+  *    fits the engine's broadcast ceiling ([[layoutAt]] over
+  *    [[Tables.broadcastFits]]) — the analog of the reference's
+  *    DistributedCache'd training set. Each task streams its partition
+  *    against the in-memory built table.
   *  - Past the ceiling, or with broadcast turned off, the same scan is
-  *    laid out block-nested-loop: the candidates split into
-  *    [[candidateBlocks]] blocks and Spark's CartesianProduct runs the
-  *    (query partition, candidate block) products.
+  *    laid out block-nested-loop: the built side splits into blocks of
+  *    a fixed byte budget and Spark's CartesianProduct runs the
+  *    (streamed partition, block) products.
   *  - Either way `top_k_by` keeps ≤k rows per query per partition
   *    map-side and merges the partial heaps (a k-size state per query —
   *    see functions.TopKAgg): the reference's combiner→reducer split, so
@@ -37,79 +40,104 @@ import graft.functions.VectorExpressions
 object Knn {
   val K = 10
 
-  /** Candidate layout of [[scan]]. */
+  /** Layout of [[scan]]'s built side. */
   private[graft] sealed trait Layout
-  /** Broadcast nested-loop: every task holds the whole candidate side. */
+  /** Broadcast nested-loop: every task holds the whole built side. */
   private[graft] case object Broadcast extends Layout
-  /** Block nested-loop over [[candidateBlocks]]`(e, budget)` blocks. */
-  private[graft] final case class Blocks(budget: Long) extends Layout
+  /** Block nested-loop: the built side split into `n` blocks. */
+  private[graft] final case class Blocks(n: Int) extends Layout
 
-  /** Byte budget per candidate block — sized so a block co-resides
-    * comfortably with a query partition in executor memory (same order
-    * as Spark's own broadcast threshold). */
+  /** Byte budget per built-side block — sized so a block co-resides
+    * comfortably with a streamed partition in executor memory (same
+    * order as Spark's own broadcast threshold). */
   private val DefaultBlockBytes = 64L << 20
 
-  /** The layout rule: broadcast while the corpus fits at
-    * [[Tables.RowBytes.Embedding]] per vector ([[Tables.corpusFits]]),
-    * else blocks of [[DefaultBlockBytes]]. The layout never changes an
-    * answer. */
-  private[graft] def layoutAt(s: SparkSession, d: String): Layout =
-    if (Tables.corpusFits(s, d, Tables.RowBytes.Embedding)) Broadcast
-    else Blocks(DefaultBlockBytes)
+  /** The layout rule for a built side of `builtRows` rows at `rowBytes`
+    * each: broadcast while it fits ([[Tables.broadcastFits]]), else
+    * blocks of [[DefaultBlockBytes]] counted from that priced size — not
+    * from Catalyst's estimate, which for a checkpointed side can be
+    * Spark's default size. The layout never changes an answer. */
+  private[graft] def layoutAt(s: SparkSession, builtRows: Long,
+      rowBytes: Long): Layout =
+    if (Tables.broadcastFits(s, builtRows, rowBytes)) Broadcast
+    else blocksAt(builtRows, rowBytes, DefaultBlockBytes)
 
-  /** THE leave-one-out pair scan over the embeddings relation `e`:
-    * (qid, qlabel, cid, clabel, dist) with `dist = distance(qv, cv)`.
-    * The query's own label rides along (one int per row) so the vote
-    * tail compares a prediction with it without re-reading and joining
-    * the labels.
-    *
-    * The query side is hash-repartitioned BY qid (not round-robin): the
-    * broadcast join preserves the streamed side's partitioning, so every
-    * downstream per-query operator — the heap cut, the vote aggregate
-    * and window — finds its ClusteredDistribution already satisfied and
-    * plans ZERO further exchanges (guide §2.4: establish the partitioning
-    * once, let every keyed consumer reuse it). The block layout's
-    * CartesianProduct does not keep it; there the heap cut exchanges
-    * only its partial heaps, k rows per query per block. */
-  private[graft] def scan(e: DataFrame, distance: (Column, Column) => Column,
+  /** The block layout of `builtRows` rows at `rowBytes` each: ceil(priced
+    * size / `budget`) blocks, floored at 2 — a side that fits ONE block
+    * belongs to the broadcast layout. */
+  private[graft] def blocksAt(builtRows: Long, rowBytes: Long,
+      budget: Long): Blocks =
+    Blocks(((BigInt(builtRows) * rowBytes + budget - 1) / budget)
+      .min(4096).max(2).toInt)
+
+  /** THE nested-loop pair scan of the exact, flat and sampled tiers:
+    * every `streamed` row against every `built` row, leave-one-out
+    * (`qid ≠ cid`; one side carries qid, the other cid). Each caller
+    * scores the joined columns itself. The broadcast join keeps the
+    * streamed side's partitioning, so a side hashed by qid lets every
+    * per-query operator downstream plan ZERO further exchanges (guide
+    * §2.4). The block layout's CartesianProduct does not keep it; there
+    * the heap cut exchanges only its partial heaps. */
+  private[graft] def scan(streamed: DataFrame, built: DataFrame,
       layout: Layout): DataFrame = {
-    val q = e.repartition(Tables.parallelism(e.sparkSession), col("vec_id"))
+    val joined = layout match {
+      case Broadcast => streamed.crossJoin(broadcast(built))
+      // SHUFFLE_REPLICATE_NL forbids the broadcast fallback the optimizer
+      // would otherwise pick at test scale, forcing the true block layout
+      case Blocks(n) => streamed.hint("shuffle_replicate_nl")
+        .crossJoin(built.repartition(n))
+    }
+    joined.where(col("qid") =!= col("cid"))
+  }
+
+  /** Knn's corpus × corpus [[scan]] under `distance`: (qid, qlabel, cid,
+    * clabel, dist), the query side hashed BY qid. The query's own label
+    * rides along (one int per row) so the vote tail compares a
+    * prediction with it without re-reading and joining the labels. */
+  private[graft] def corpusPairs(s: SparkSession, d: String,
+      distance: (Column, Column) => Column, layout: Layout): DataFrame = {
+    val e = Tables.embeddings(s, d)
+    val q = e.repartition(Tables.parallelism(s), col("vec_id"))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("label").as("qlabel"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("cv"),
       col("label").as("clabel"))
-    val joined = layout match {
-      case Broadcast => q.crossJoin(broadcast(c))
-      // SHUFFLE_REPLICATE_NL forbids the broadcast fallback the optimizer
-      // would otherwise pick at test scale, forcing the true block layout
-      case Blocks(budget) => q.hint("shuffle_replicate_nl")
-        .crossJoin(c.repartition(candidateBlocks(e, budget)))
-    }
-    joined.where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("qlabel"), col("cid"), col("clabel"),
-        distance(col("qv"), col("cv")).as("dist"))
+    scan(q, c, layout).select(col("qid"), col("qlabel"), col("cid"),
+      col("clabel"), distance(col("qv"), col("cv")).as("dist"))
   }
 
-  /** The heap cut: each query's `k` nearest rows of `pairs` in (dist,
-    * cid) order through the bounded-heap `top_k_by` aggregate, exploded
-    * to (qid, qlabel, rnk, cid, clabel, dist) at full precision (the
-    * top-k queries round only their projected column). */
-  private[graft] def ranked(pairs: DataFrame, k: Int): DataFrame =
+  /** The corpus row count (footer metadata, no job). */
+  private def corpusRows(s: SparkSession, d: String): Long =
+    Tables.footerRowCount(s, s"$d/embeddings.parquet")
+
+  /** [[layoutAt]] for the corpus. */
+  private[graft] def corpusLayout(s: SparkSession, d: String): Layout =
+    layoutAt(s, corpusRows(s, d), Tables.RowBytes.Embedding)
+
+  /** THE per-query cut: each query's `k` nearest rows of `pairs` (qid,
+    * cid, dist) in (dist, cid) order through the bounded-heap `top_k_by`
+    * aggregate, exploded to (qid, perQuery…, rnk, cid, clabel, dist) at
+    * full precision; `clabel` is each kept row's `label` and every
+    * `perQuery` column is carried once per qid. Knn passes its labels;
+    * the ANN tiers pass `lit(0)` and nothing per query, so their
+    * aggregate is the heap alone. */
+  private[graft] def ranked(pairs: DataFrame, k: Int, label: Column,
+      perQuery: String*): DataFrame = {
+    val carried = perQuery.map(col)
     pairs.groupBy(col("qid"))
-      .agg(max(col("qlabel")).as("qlabel"),
-        graft.functions.TopKAgg.top_k_by(pairs.sparkSession,
-          col("dist"), col("cid"), col("clabel"), k).as("nbrs"))
-      .select(col("qid"), col("qlabel"),
-        posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("qid"), col("qlabel"), (col("pos") + 1).cast("int").as("rnk"),
-        col("nbr.id").as("cid"), col("nbr.label").as("clabel"),
-        col("nbr.dist").as("dist"))
+      .agg(graft.functions.TopKAgg.top_k_by(pairs.sparkSession, col("dist"),
+        col("cid"), label, k).as("nbrs"), perQuery.map(c => max(col(c)).as(c)): _*)
+      .select(col("qid") +: carried :+ posexplode(col("nbrs")).as(Seq("pos", "nbr")): _*)
+      .select(col("qid") +: carried :+ (col("pos") + 1).cast("int").as("rnk") :+
+        col("nbr.id").as("cid") :+ col("nbr.label").as("clabel") :+
+        col("nbr.dist").as("dist"): _*)
+  }
 
   /** The cosine ranked set at [[K]], uncached, in the layout the rule
     * picks. */
   private[graft] def topkRanked(s: SparkSession, d: String): DataFrame =
-    ranked(scan(Tables.embeddings(s, d),
-      VectorExpressions.cosine_distance(s, _, _), layoutAt(s, d)), K)
+    ranked(corpusPairs(s, d, VectorExpressions.cosine_distance(s, _, _),
+      corpusLayout(s, d)), K, col("clabel"), "qlabel")
 
   // topk/classify/accuracy all consume the same ranked neighbor set; the
   // O(m·n) pair scan is its only expensive input, so share one persisted
@@ -128,7 +156,7 @@ object Knn {
 
   /** A ranked set as a top-k answer: (qid, rnk, cid, dist rounded to 6
     * places) in (qid, rnk) order. */
-  private def neighbors(ranked: DataFrame): DataFrame =
+  private[graft] def neighbors(ranked: DataFrame): DataFrame =
     ranked.select(col("qid"), col("rnk"), col("cid"), round(col("dist"), 6).as("dist"))
       .orderBy(col("qid"), col("rnk"))
 
@@ -202,8 +230,8 @@ object Knn {
     * genuinely-near pairs. */
   val RadiusTau = 0.6 // ~100 pairs at sf0.01 — sparse but non-trivial
   def knnRadius(s: SparkSession, d: String): DataFrame =
-    scan(Tables.embeddings(s, d), VectorExpressions.cosine_distance(s, _, _),
-      layoutAt(s, d))
+    corpusPairs(s, d, VectorExpressions.cosine_distance(s, _, _),
+      corpusLayout(s, d))
       .where(col("dist") < RadiusTau)
       .select(col("qid"), col("cid"), round(col("dist"), 6).as("dist"))
       .orderBy(col("qid"), col("cid"))
@@ -212,20 +240,9 @@ object Knn {
     * squared-L2 path (sqrt kept so the oracle can use list_distance):
     * [[scan]] with the euclidean kernel and a 5-row heap. */
   def knnTopkL2(s: SparkSession, d: String): DataFrame =
-    neighbors(ranked(scan(Tables.embeddings(s, d),
-      VectorExpressions.euclidean_distance(s, _, _), layoutAt(s, d)), 5))
-
-  /** Candidate-side block count: ceil(candidate bytes / block budget),
-    * from Catalyst's scan statistics — file-size based, plan-time, no
-    * job, and it keeps summing correctly over a multi-file 100 TB scan.
-    * Floored at 2: a candidate set that fits ONE block belongs to the
-    * broadcast layout, so the block layout always exercises the
-    * partial-heap merge path it exists to provide. */
-  private[graft] def candidateBlocks(e: DataFrame, budget: Long): Int = {
-    val bytes = e.select(col("vec_id"), col("embedding"), col("label"))
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    ((bytes + budget - 1) / budget).min(4096).max(2).toInt
-  }
+    neighbors(ranked(corpusPairs(s, d,
+      VectorExpressions.euclidean_distance(s, _, _), corpusLayout(s, d)), 5,
+      col("clabel"), "qlabel"))
 
   /** knn_topk in the block layout, forced whatever the corpus size:
     * both sides partition, Spark's CartesianProduct runs partition-pair
@@ -233,15 +250,18 @@ object Knn {
     * candidate-block) to k rows map-side before merging the partial
     * heaps in one k-row-per-query shuffle. Same results, same oracle —
     * only the physical layout differs, and the block count follows the
-    * data size ([[candidateBlocks]]), not a constant. */
+    * corpus's priced size ([[blocksAt]] at `RowBytes.Embedding`, the
+    * same count [[layoutAt]] gives past the ceiling), not a constant. */
   def knnTopkBlocked(s: SparkSession, d: String): DataFrame =
     knnTopkBlockedAt(s, d, DefaultBlockBytes)
 
   /** [[knnTopkBlocked]] under an explicit block budget. */
   private[graft] def knnTopkBlockedAt(s: SparkSession, d: String,
       budget: Long): DataFrame =
-    neighbors(ranked(scan(Tables.embeddings(s, d),
-      VectorExpressions.cosine_distance(s, _, _), Blocks(budget)), K))
+    neighbors(ranked(corpusPairs(s, d,
+      VectorExpressions.cosine_distance(s, _, _),
+      blocksAt(corpusRows(s, d), Tables.RowBytes.Embedding, budget)), K,
+      col("clabel"), "qlabel"))
 
   /** A5b: rank-weighted (Borda-count) vote — neighbor at rank r
     * contributes weight K-r+1. Integer weights keep the vote exactly

@@ -631,8 +631,9 @@ object Nsw {
     * reachable from any declared query. */
   private[graft] def exactAdjacency(s: SparkSession, d: String): DataFrame =
     cache.getOrBuild(s, s"$d#nswAdjExact") {
-      Knn.ranked(Knn.scan(Tables.embeddings(s, d),
-          VectorExpressions.cosine_distance(s, _, _), Knn.layoutAt(s, d)), M)
+      Knn.ranked(Knn.corpusPairs(s, d,
+          VectorExpressions.cosine_distance(s, _, _), Knn.corpusLayout(s, d)),
+          M, lit(0))
         .select(col("qid").as("u"), col("cid").as("v"))
     }
 
@@ -753,7 +754,7 @@ object Nsw {
     * those queries (NswSpec law). */
   private[graft] def entryBeam(s: SparkSession, d: String,
       queries: DataFrame): DataFrame = {
-    // keyed repartition (r18, guide §2.4 — the Knn.pairs precedent): hash
+    // keyed repartition (r18, guide §2.4 — the Knn.scan precedent): hash
     // the query side by its future aggregate key so EVERY downstream
     // per-qid operator (each hop's bounded-heap cut, the final top-K
     // heap) sees its ClusteredDistribution already satisfied. The
@@ -771,7 +772,7 @@ object Nsw {
   /** Beam search of `graph` (u, v) for the `queries` rows (see
     * [[entryBeam]]): [[hop]] `hops` times at beam width `b`, then the
     * exact re-score ([[Ann.exactScored]]) of the final beam and the top-K
-    * cut ([[Ann.heapTopK]]) under the (dist, cid) total order a rank
+    * cut ([[Knn.ranked]]) under the (dist, cid) total order a rank
     * window would use. The graph is the live [[searchGraph]] or the
     * committed [[storedAdjacency]]. */
   private[graft] def nswTopkAt(s: SparkSession, d: String,
@@ -783,7 +784,8 @@ object Nsw {
     // beam is tiny (n_q·B rows); results are bit-identical either way.
     val beamH = (1 to hops).foldLeft(beam0)((bm, _) =>
       hop(s, d, bm, graph, b).checkpointed)
-    Ann.heapTopK(s, Ann.exactScored(s, d, beamH.withColumnRenamed("cand", "cid")))
+    Knn.neighbors(Knn.ranked(
+      Ann.exactScored(s, d, beamH.withColumnRenamed("cand", "cid")), K, lit(0)))
   }
 
   def nswTopk(s: SparkSession, d: String): DataFrame =
@@ -936,7 +938,7 @@ object Nsw {
     val cands = base.select(col("qid"), col("cid"))
       .unionByName(delta.select(col("qid"), col("cid")))
       .distinct()
-    Ann.heapTopK(s, Ann.exactScored(s, d, cands))
+    Knn.neighbors(Knn.ranked(Ann.exactScored(s, d, cands), K, lit(0)))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -58,7 +58,7 @@ object ScaleCheck {
   private[graft] def windowTopk(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
       .orderBy(col("dist").asc, col("cid").asc)
-    Knn.scan(graft.Tables.embeddings(s, d),
+    Knn.corpusPairs(s, d,
         graft.functions.VectorExpressions.cosine_distance(s, _, _), Knn.Broadcast)
       .withColumn("rnk", row_number().over(w)).where(col("rnk") <= Knn.K)
       .select(col("qid"), col("rnk"), col("cid"), round(col("dist"), 6).as("dist"))
@@ -561,8 +561,9 @@ object ScaleCheck {
         require(bAuto < step && bAuto > Nsw.B,
           s"divisor unexercised: beam $bAuto vs step $step at n=$n " +
             "(need anchor < beam < step)")
-        // sampled exact ground truth: the capped carve broadcasts, the
-        // corpus streams against it — n_s·n evaluations, never n²
+        // sampled exact ground truth: the capped carve is the pair
+        // scan's built side, the corpus streams against it — n_s·n
+        // evaluations, never n²
         val qs = Ann.recallSampleOf(spark, cd2, Ann.RecallSampleCap)
         val exact = Ann.sampledExact(spark, cd2, qs).checkpointed
         // build + persist FIRST (at this tier's seed decision), then

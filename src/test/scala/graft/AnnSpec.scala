@@ -199,7 +199,9 @@ class AnnSpec extends SparkSpec {
       (RowBytes.Embedding, 2000L, true),
       (RowBytes.Embedding, 2000000L, true),
       (RowBytes.Embedding, 4000000L, false),
+      (RowBytes.Embedding, Ann.RecallSampleCap.toLong, true),
       (RowBytes.PqCodes, 2000L, true),
+      (RowBytes.PqCodes, 10000000L, false),
       (RowBytes.Sq8Codes, 2000L, true),
       (RowBytes.Sq8Codes, 2000000L, false),
       (RowBytes.Adjacency, 2000L, true),
@@ -207,12 +209,21 @@ class AnnSpec extends SparkSpec {
       (RowBytes.Adjacency, 2000000L, false))
     def decisions = table.map { case (price, n, _) =>
       Tables.broadcastFits(spark, n, price) }
+    // the pair scan's layout follows the same rule
+    def layouts = table.map { case (price, n, _) =>
+      Knn.layoutAt(spark, n, price) == Knn.Broadcast }
     assert(decisions === table.map(_._3))
+    assert(layouts === table.map(_._3))
     val bcKey = "spark.sql.autoBroadcastJoinThreshold"
     for (off <- Seq("-1", "0")) {
       spark.conf.set(bcKey, off)
-      try assert(decisions.forall(!_), s"threshold $off")
-      finally spark.conf.unset(bcKey)
+      try {
+        assert(decisions.forall(!_), s"threshold $off")
+        assert(layouts.forall(!_), s"threshold $off")
+        // blocks are counted from the priced size: the sample is 2 blocks
+        assert(Knn.layoutAt(spark, Ann.RecallSampleCap.toLong,
+          RowBytes.Embedding) === Knn.Blocks(2))
+      } finally spark.conf.unset(bcKey)
     }
   }
 
@@ -470,6 +481,25 @@ class AnnSpec extends SparkSpec {
     // its corpus scan, hash and top-N
     assert(!plan.contains("TakeOrderedAndProject"),
       s"the sample's top-N runs inside the plan:\n$plan")
+  }
+
+  test("sampled recall with broadcast off: no broadcast carries the " +
+    "sample's vectors, and the row equals the default session's") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val bcRows = Ann.recallSampled(spark, sf0001).collect().toSeq
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    try {
+      spark.conf.set(bcKey, "-1")
+      val df = Ann.recallSampled(spark, sf0001)
+      val rows = df.collect().toSeq
+      val executed = df.queryExecution.executedPlan
+      val qv = new AdaptiveSparkPlanHelper {}.collect(executed) {
+        case b: BroadcastExchangeExec if b.output.exists(_.name == "qv") => b
+      }
+      assert(qv.isEmpty, s"broadcast off still broadcasts qv:\n$executed")
+      assert(rows === bcRows)
+    } finally spark.conf.unset(bcKey)
   }
 
   test("ivf query restriction is exact: searching a query subset ≡ the " +

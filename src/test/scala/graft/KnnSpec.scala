@@ -141,7 +141,6 @@ class KnnSpec extends SparkSpec {
 
   test("knn_ksweep over the cached ranked set: no join, no embeddings " +
     "scan, no exchange keyed on qid, at most 5 Spark jobs") {
-    import org.apache.spark.scheduler._
     import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -149,39 +148,13 @@ class KnnSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
 
     ops.Knn.knnTopk(spark, sf0001).collect() // the shared ranked set
-    // jobs launched while knn_ksweep is built and run; the group's
-    // events are flushed by a sentinel job queued behind them
-    val group = s"ksweep-${java.util.UUID.randomUUID}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    @volatile var sentinelJob = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => sentinelJob = e.jobId
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelJob) flushed.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val q = try {
-      sc.setJobGroup(group, "knn_ksweep")
+    // jobs launched while knn_ksweep is built and run
+    val (q, jobs) = withJobCount {
       val q = ops.Knn.knnKSweep(spark, sf0001)
       q.collect()
-      sc.setJobGroup(sentinel, "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the sentinel job end")
       q
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    info(s"${jobs.get} Spark jobs built and ran knn_ksweep")
+    info(s"$jobs Spark jobs built and ran knn_ksweep")
     val helper = new AdaptiveSparkPlanHelper {}
     val plan = q.queryExecution.executedPlan
     val joins = helper.collect(plan) { case j: BaseJoinExec => j.nodeName }
@@ -200,7 +173,19 @@ class KnnSpec extends SparkSpec {
       case p: Expression if p.references.exists(_.name == "qid") => p
     }
     assert(byQid.isEmpty, s"knn_ksweep re-shuffles on qid: $byQid\n$plan")
-    assert(jobs.get <= 5, s"knn_ksweep launched ${jobs.get} Spark jobs")
+    assert(jobs <= 5, s"knn_ksweep launched $jobs Spark jobs")
+  }
+
+  test("embeddings read: the declared schema is the one every fixture " +
+    "tier infers, and building the relation starts no Spark job") {
+    val fixtures = new java.io.File(sf0001).getParent
+    for (tier <- Seq("sf0.001", "sf0.01", "sf0.1")) withClue(s"$tier: ") {
+      assert(spark.read.parquet(s"$fixtures/$tier/embeddings.parquet")
+        .schema === Tables.EmbeddingsSchema)
+    }
+    val (df, jobs) = withJobCount(Tables.embeddings(spark, sf0001))
+    assert(jobs === 0, "building the embeddings relation launched a job")
+    assert(df.schema === Tables.EmbeddingsSchema)
   }
 
   /** Join operators of an executed plan, the plans of cached relations

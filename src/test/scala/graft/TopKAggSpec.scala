@@ -57,9 +57,9 @@ class TopKAggSpec extends SparkSpec {
   test("blocked knn: block count follows the byte budget, results don't") {
     // tiny budget → many blocks; huge budget → the 2-block floor (one
     // block would mean the broadcast layout is the right operator)
-    val emb = Tables.embeddings(spark, sf0001)
-    val many = ops.Knn.candidateBlocks(emb, 4096L)
-    val few = ops.Knn.candidateBlocks(emb, 1L << 30)
+    val rows = Tables.footerRowCount(spark, s"$sf0001/embeddings.parquet")
+    val many = ops.Knn.blocksAt(rows, Tables.RowBytes.Embedding, 4096L).n
+    val few = ops.Knn.blocksAt(rows, Tables.RowBytes.Embedding, 1L << 30).n
     assert(few == 2 && many > few, s"few=$few many=$many")
     // result invariance across block counts (the partial heaps merge to
     // the same total order no matter how the candidate side is cut)
